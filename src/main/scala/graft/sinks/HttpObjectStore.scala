@@ -18,9 +18,14 @@ package graft.sinks
   * body bytes, content type, ACL header, idempotent re-PUT, and error
   * statuses driving the retry path.
   *
-  * One connection per PUT (HttpURLConnection pools keep-alive sockets
-  * per JVM underneath); the store object is serialized to executors and
-  * holds no live resources.
+  * One `HttpURLConnection` per PUT; the store object is serialized to
+  * executors and holds no live resources. The JDK's keep-alive cache
+  * underneath keeps only `http.maxConnections` (default 5) idle sockets
+  * per destination, far fewer than the sink's PUT window keeps busy, so
+  * most PUTs beyond the fifth concurrent one open a new connection:
+  * against a 20 ms store on a 4-vCPU VM, about 0.8 connects per PUT, where
+  * one PUT at a time per task made 0.002. A connection pool sized to the
+  * window is an open follow-up.
   */
 final class HttpObjectStore(endpoint: String, timeoutMs: Int = 30000) extends ObjectStore {
 

@@ -24,4 +24,15 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       plan)
+
+  /** Run `f` with `tc` as the calling thread's TaskContext, unset after.
+    * `TaskContext.setTaskContext` is `protected[spark]`; a task that hands
+    * work to other threads (the object sink's PUT window) needs this hop
+    * so that `TaskContext.get()` on those threads sees the owning task.
+    */
+  def withTaskContext[T](tc: org.apache.spark.TaskContext)(f: => T): T = {
+    org.apache.spark.TaskContext.setTaskContext(tc)
+    try f
+    finally org.apache.spark.TaskContext.unset()
+  }
 }

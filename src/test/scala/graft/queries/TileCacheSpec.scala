@@ -22,26 +22,23 @@ object FlakyStore {
 
 /** r13 ask #6 chaos store: a mid-write partition OUTAGE. While armed
   * (static kill switch, per JVM), the victim partition's "connection"
-  * dies after `killAfter` successful PUTs — every later put in that
-  * task throws, simulating a lost executor/preempted node partway
-  * through a partition. Instance state (`writes`, `dead`) is per-task
-  * (the closure is deserialized per task), so only the victim partition
-  * is affected; disarmed, it is a plain LocalFsStore.
+  * dies after `killAfter` PUT calls — every later put in that task
+  * throws, simulating a lost executor/preempted node partway through a
+  * partition. The call counter is per-task (the closure is deserialized
+  * per task), so only the victim partition is affected, and atomic: the
+  * sink calls `put` from several threads of one task. Disarmed, it is a
+  * plain LocalFsStore.
   */
 class PartitionOutageStore(root: String, victim: Int, killAfter: Int)
     extends graft.sinks.ObjectStore {
   private val inner = new graft.sinks.LocalFsStore(root)
-  private var writes = 0
-  private var dead = false
+  private val calls = new java.util.concurrent.atomic.AtomicInteger
   override def put(key: String, bytes: Array[Byte], contentType: String, acl: String): Unit = {
-    if (PartitionOutageStore.armed.get() &&
-      org.apache.spark.TaskContext.getPartitionId() == victim &&
-      (dead || writes >= killAfter)) {
-      dead = true
-      throw new java.io.IOException(s"connection lost mid-partition (after $writes PUTs)")
+    if (PartitionOutageStore.armed.get() && org.apache.spark.TaskContext.getPartitionId() == victim) {
+      val n = calls.getAndIncrement()
+      if (n >= killAfter) throw new java.io.IOException(s"connection lost mid-partition (PUT call ${n + 1})")
     }
     inner.put(key, bytes, contentType, acl)
-    writes += 1
   }
 }
 
