@@ -179,7 +179,7 @@ object Bench {
                 false
             }
           val dt = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(200) // let the async listener bus drain task-end events
+          org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark.sparkContext)
           System.err.println(
             f"[bench] $name#$i $dt%.2f s (gc +${gcMillis - gc0} ms, jit +${comp.getTotalCompilationTime - jit0} ms, " +
               f"codecache ${poolUsed("codeheap") / 1024 / 1024} MB, metaspace ${poolUsed("metaspace") / 1024 / 1024} MB, " +

@@ -56,16 +56,20 @@ object Explain {
     // actions). Prints one line per Spark job with wall ms and stage
     // count, then a summary; runs on the SECOND (warm) execution so
     // per-job times aren't polluted by first-run JIT.
-    val jobLog = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]()
+    val jobs = args.contains("--jobs")
+    val jobLog = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobStages = new java.util.concurrent.atomic.AtomicInteger
-    if (args.contains("--jobs")) {
+    val lastJobStarted = new java.util.concurrent.atomic.AtomicInteger(-1)
+    if (jobs) {
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           starts.put(js.jobId, System.nanoTime())
+          lastJobStarted.accumulateAndGet(js.jobId, (a, b) => math.max(a, b)): Unit
+        }
         override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           val t = Option(starts.get(je.jobId)).map(s => (System.nanoTime() - s) / 1000000L)
-          jobLog.put(je.jobId, (t.getOrElse(-1L), 0))
+          jobLog.put(je.jobId, t.getOrElse(-1L))
         }
         override def onStageCompleted(
             sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -77,10 +81,22 @@ object Explain {
     if (args.contains("--count")) println(s"ROWS=${build().count()}")
     else build().write.format("noop").mode("overwrite").save()
     println(f"TIME $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    jobLog.clear(); jobStages.set(0)
+    // the warm log holds only jobs started after the cold run's events
+    // have all been delivered
+    if (jobs) org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark.sparkContext)
+    val watermark = lastJobStarted.get
+    jobStages.set(0)
     val t1 = System.nanoTime()
     build().write.format("noop").mode("overwrite").save()
     println(f"TIME2 $name ${(System.nanoTime() - t1) / 1e9}%.2f s (warm)")
+    // reported before --reps runs, so their jobs stay out of the warm log
+    if (jobs) {
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      val warm = jobLog.asScala.toSeq.filter(_._1 > watermark).sortBy(_._1)
+      warm.foreach { case (id, ms) => println(s"JOB $id ${ms} ms") }
+      println(s"JOBS $name n=${warm.size} stages=${jobStages.get} sum_ms=${warm.map(_._2).sum}")
+    }
     // --reps=N: N more warm builds+runs, report each and the min — the
     // low-variance A/B protocol for sub-second plan deltas (single cold
     // runs swing ±25% on UNCHANGED entries in this sandbox)
@@ -92,14 +108,6 @@ object Explain {
       }
       println(
         f"REPS $name min ${times.min}%.3f s of ${times.map(t => f"$t%.2f").mkString(",")}")
-    }
-    if (args.contains("--jobs")) {
-      Thread.sleep(300) // drain the async listener bus
-      import scala.jdk.CollectionConverters._
-      val jobs = jobLog.asScala.toSeq.sortBy(_._1)
-      jobs.foreach { case (id, (ms, _)) => println(s"JOB $id ${ms} ms") }
-      println(s"JOBS $name n=${jobs.size} stages=${jobStages.get} " +
-        s"sum_ms=${jobs.map(_._2._1).sum}")
     }
     spark.stop()
   }

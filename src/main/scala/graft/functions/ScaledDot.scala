@@ -150,6 +150,15 @@ object ScaledDot {
     * callers that only ORDER by dot-derived keys and want the
     * comparison exact in integers instead of noise-carrying doubles
     * (r17: the PQ/IVF assignment argmin keys).
+    *
+    * Magnitude bound: the raw value is ⟨a,b⟩·1e12, so a key
+    * `|c|²_raw − 2·dotRaw(v, c)` stays exact only while
+    * |c|² + 2·|⟨v,c⟩| < Long.MaxValue / 1e12 ≈ 9.2e6; in particular
+    * |⟨v,c⟩| must stay below ~4.6e6. Past it the key's long arithmetic
+    * overflows: with ANSI mode on (Spark 4's default) the query fails,
+    * with it off the key wraps silently and corrupts the argmin order.
+    * Normalized embeddings (|⟨v,c⟩| ≤ 1) are far inside the bound;
+    * nothing checks it at run time.
     */
   def dotRaw(a: Column, b: Column): Column =
     Bridge.column(ScaledDot(Bridge.expression(a), Bridge.expression(b)))

@@ -1795,6 +1795,8 @@ object LlmOps {
         .toDF("cid", "cvec")
         .withColumn("cvec", col("cvec").cast("array<float>"))
         .withColumn("cn", graft.functions.ScaledDot.dotRaw(col("cvec"), col("cvec"))))
+    // exact only while |⟨v,c⟩| < ~4.6e6 (see ScaledDot.dotRaw): the
+    // long key overflows past it
     e.crossJoin(cDf)
       .withColumn(
         "dist",
@@ -1943,6 +1945,8 @@ object LlmOps {
     // ScaledDot (was three) and compares exact integers.
     val cbn =
       cb.withColumn("cwn", graft.functions.ScaledDot.dotRaw(col("cw"), col("cw")))
+    // exact only while |⟨sv,cw⟩| < ~4.6e6 (see ScaledDot.dotRaw): the
+    // long key overflows past it
     sv.join(broadcast(cbn), "m")
       .select(
         col("vec_id"),

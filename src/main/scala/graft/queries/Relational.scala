@@ -92,8 +92,10 @@ object Relational {
     * each supplier's ±100 window cover ≤ 2 bins (≤ 2× broadcast rows),
     * each probe hash to its single bin, and the residual keep the exact
     * semantics — identical output (same oracle SQL). Differs from
-    * `q_join_range_binned` in distribution strategy: this is the
-    * broadcast-dim form, that one the both-sides-shuffle form.
+    * `q_join_range_binned` only in the `broadcast` hint: that entry
+    * leaves the strategy to the planner, which still broadcasts the
+    * small supplier side at fixture and bench scale (its PLANGOLD line
+    * has a BroadcastHashJoinExec, not a shuffle join).
     */
   def qJoinRange(spark: SparkSession, sfDir: String): DataFrame = {
     val s = Tables.supplier(spark, sfDir)
@@ -123,7 +125,8 @@ object Relational {
     * ±100 window covers at most 2 bins, so the supplier side explodes
     * ≤2×, the join becomes a key-equality shuffle on the bin, and the
     * exact range predicate filters within bins. Identical results (same
-    * oracle SQL), shuffle-join scalable.
+    * oracle SQL), shuffle-join scalable. Below the broadcast threshold
+    * (every fixture scale) the planner still broadcasts the supplier side.
     */
   def qJoinRangeBinned(spark: SparkSession, sfDir: String): DataFrame = {
     val s = Tables.supplier(spark, sfDir)

@@ -30,7 +30,7 @@ object TileCacheQueries {
     new java.io.File(sys.props("java.io.tmpdir"), "graft_tile_cache")
 
   /** DuckDB CTE that recomputes the fixture's present-tile set purely
-    * arithmetically — [[ensureFixture]]'s generation loop (extent range
+    * arithmetically — [[fixturePresent]] (extent range
     * formulas at [[fixtureCfg]], pad 1, gap rule `(r+c+level)%3 != 0`,
     * no negative indices) re-expressed in SQL. The filesystem-reading
     * registry entries oracle against this, so the listing⇄arithmetic
@@ -63,9 +63,25 @@ object TileCacheQueries {
   private val fixtureFingerprint: String =
     s"$fixtureCfg;gap=(r+c+level)%3!=0;v1"
 
-  /** Deterministic fixture: every 3rd candidate cell is a gap (exercises
-    * the existence filter); out-of-range padded cells (negative indices)
-    * have no file by construction. Payload = "tile-L-R-C" bytes.
+  /** The fixture's present tiles as (level, row, col): every candidate
+    * cell of [[fixtureCfg]]'s extent ranges (pad 1) except the gaps
+    * `(r+c+level)%3 == 0` and the off-world negative indices. The
+    * generator writes exactly these; specs use them as the reference
+    * manifest, independent of any scanner.
+    */
+  private[graft] def fixturePresent: Seq[(Int, Int, Int)] =
+    (fixtureCfg.startLevel to fixtureCfg.endLevel).flatMap { level =>
+      val ts = fixtureCfg.webMercatorDelta * math.pow(2.0, 1 - level)
+      val sr = ((fixtureCfg.webMercatorDelta - fixtureCfg.extentMaxY) / ts).toInt - fixtureCfg.padY
+      val er = ((fixtureCfg.webMercatorDelta - fixtureCfg.extentMinY) / ts).toInt + 1 + fixtureCfg.padY
+      val sc = ((fixtureCfg.extentMinX + fixtureCfg.webMercatorDelta) / ts).toInt - fixtureCfg.padX
+      val ec = ((fixtureCfg.extentMaxX + fixtureCfg.webMercatorDelta) / ts).toInt + 1 + fixtureCfg.padX
+      for (r <- sr to er; c <- sc to ec if (r + c + level) % 3 != 0 && r >= 0 && c >= 0)
+        yield (level, r, c)
+    }
+
+  /** Deterministic fixture: the [[fixturePresent]] tiles as
+    * `L{dd}/R{hex8}/C{hex8}.jpg` files. Payload = "tile-L-R-C" bytes.
     */
   def ensureFixture(): String = {
     val root = fixtureRoot
@@ -73,26 +89,11 @@ object TileCacheQueries {
     val fresh = done.exists() &&
       new String(java.nio.file.Files.readAllBytes(done.toPath), "UTF-8") == fixtureFingerprint
     if (!fresh) {
-      if (root.exists()) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files
-          .walk(root.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator()
-          .asScala
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-      for (level <- fixtureCfg.startLevel to fixtureCfg.endLevel) {
-        val ts = fixtureCfg.webMercatorDelta * math.pow(2.0, 1 - level)
-        val sr = ((fixtureCfg.webMercatorDelta - fixtureCfg.extentMaxY) / ts).toInt - fixtureCfg.padY
-        val er = ((fixtureCfg.webMercatorDelta - fixtureCfg.extentMinY) / ts).toInt + 1 + fixtureCfg.padY
-        val sc = ((fixtureCfg.extentMinX + fixtureCfg.webMercatorDelta) / ts).toInt - fixtureCfg.padX
-        val ec = ((fixtureCfg.extentMaxX + fixtureCfg.webMercatorDelta) / ts).toInt + 1 + fixtureCfg.padX
-        for (r <- sr to er; c <- sc to ec if (r + c + level) % 3 != 0 && r >= 0 && c >= 0) {
-          val f = new java.io.File(root, f"L$level%02d/R$r%08x/C$c%08x.jpg")
-          f.getParentFile.mkdirs()
-          java.nio.file.Files.write(f.toPath, s"tile-$level-$r-$c".getBytes("UTF-8"))
-        }
+      clearDir(root)
+      for ((level, r, c) <- fixturePresent) {
+        val f = new java.io.File(root, f"L$level%02d/R$r%08x/C$c%08x.jpg")
+        f.getParentFile.mkdirs()
+        java.nio.file.Files.write(f.toPath, s"tile-$level-$r-$c".getBytes("UTF-8"))
       }
       done.getParentFile.mkdirs()
       java.nio.file.Files.write(done.toPath, fixtureFingerprint.getBytes("UTF-8"))
@@ -100,47 +101,21 @@ object TileCacheQueries {
     root.getAbsolutePath
   }
 
-  /** The cache path TAIL (`L{dd}/R{hex8}/C{hex8}.jpg`), anchored at the
-    * end of the URI: extraction groups 1/2/3 = level/row/col. Anchoring
-    * matters — an UNanchored `L(\d{2})` would take the first match
-    * anywhere in the absolute path, so a tmpdir component like
-    * `/tmp/ciL07.3/` would corrupt every parsed key.
+  /** The one tile-cache read shared by every cache query: the `tilecache`
+    * connector lists the cache and parses (level, row, col) from the
+    * path, and the inner join to the candidate grid IS the existence
+    * filter — padded off-world probes simply don't match. Columns the
+    * caller does not select (`content` above all) are pruned from the
+    * scan.
     */
-  private val PathTailRe = "L(\\d{2})/R([0-9a-f]{8})/C([0-9a-f]{8})\\.jpg$"
-
-  /** Parse an 8-digit hex path component back to a signed 32-bit int
-    * (two's complement, matching the C# `{0:x8}` format at Program.cs:99).
-    * `conv` yields an unsigned decimal string; re-wrap values > Int.Max.
-    */
-  private def hexComponent(path: Column, group: Int): Column = {
-    val v = conv(regexp_extract(path, PathTailRe, group), 16, 10).cast("long")
-    when(v > 2147483647L, v - 4294967296L).otherwise(v).cast("int")
-  }
-
-  /** R7+R8 core shared by every cache query: binaryFile scan, keys parsed
-    * from the anchored path tail, inner join to the candidate grid (the
-    * join IS the existence filter — padded off-world probes simply don't
-    * match). One definition, so a parsing fix can't diverge between the
-    * scan/upload/delta shapes.
-    */
-  private def parsedTiles(spark: SparkSession, root: String): DataFrame = {
-    val grid = Tile
-      .tileGrid(spark, fixtureCfg)
-      .withColumnRenamed("row", "tile_row")
-      .withColumnRenamed("col", "tile_col")
+  private def cachedTiles(spark: SparkSession, root: String): DataFrame =
     spark.read
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.jpg")
-      .option("recursiveFileLookup", "true")
+      .format("tilecache")
       .load(root)
-      .select(
-        regexp_extract(col("path"), PathTailRe, 1).cast("int").as("level"),
-        hexComponent(col("path"), 2).as("tile_row"),
-        hexComponent(col("path"), 3).as("tile_col"),
-        col("length"),
-        col("content"))
-      .join(grid, Seq("level", "tile_row", "tile_col"))
-  }
+      .join(Tile.tileGrid(spark, fixtureCfg), Seq("level", "row", "col"))
+
+  private def objectKey: Column =
+    Tile.objectKey(fixtureCfg, col("level"), col("row"), col("col")).as("object_key")
 
   /** Strip the bucket prefix from a re-listed `file:<bucket>/<key>` URI
     * by LENGTH, not regex — a tmpdir containing regex metacharacters
@@ -152,60 +127,24 @@ object TileCacheQueries {
     col("path").substr(lit(prefix.length + 1), lit(Int.MaxValue))
   }
 
-  /** Output manifest of the existence-filtered scan; binary content is
-    * pruned before any shuffle.
+  /** Output manifest of the existence-filtered scan; the connector
+    * never opens a tile file because `content` is not selected.
     */
-  def cacheScan(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = ensureFixture()
-    parsedTiles(spark, root)
+  def cacheScan(spark: SparkSession, sfDir: String): DataFrame =
+    cachedTiles(spark, ensureFixture())
       .select(
         col("level"),
-        col("tile_row"),
-        col("tile_col"),
-        Tile
-          .objectKey(fixtureCfg, col("level"), col("tile_row"), col("tile_col"))
-          .as("object_key"),
+        col("row").as("tile_row"),
+        col("col").as("tile_col"),
+        objectKey,
         col("length"))
       .orderBy("level", "tile_row", "tile_col")
-  }
-
-  /** The manifest scan through the DataSource V2 connector
-    * (`format("tilecache")`, [[graft.sources.tilecache.TileCacheSource]])
-    * instead of binaryFile + regex parsing: keys come parsed from the
-    * source, level predicates prune whole level directories at planning
-    * time, and because `content` is never projected here the connector
-    * never opens a tile file — the manifest runs at directory-listing
-    * speed. Output is row-for-row identical to [[cacheScan]]
-    * (spec-pinned), so the two formulations stay interchangeable.
-    */
-  def cacheScanV2(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = ensureFixture()
-    val grid = Tile
-      .tileGrid(spark, fixtureCfg)
-      .withColumnRenamed("row", "tile_row")
-      .withColumnRenamed("col", "tile_col")
-    spark.read
-      .format("tilecache")
-      .load(root)
-      .withColumnRenamed("row", "tile_row")
-      .withColumnRenamed("col", "tile_col")
-      .join(grid, Seq("level", "tile_row", "tile_col"))
-      .select(
-        col("level"),
-        col("tile_row"),
-        col("tile_col"),
-        Tile
-          .objectKey(fixtureCfg, col("level"), col("tile_row"), col("tile_col"))
-          .as("object_key"),
-        col("length"))
-      .orderBy("level", "tile_row", "tile_col")
-  }
 
   /** Per-level cache coverage report: candidate grid size vs tiles
     * actually present — the completeness audit a tile pipeline runs
     * before publishing (the reference over-generates and lets misses
     * fall out silently, `Program.cs:102`; this surfaces the miss rate).
-    * The CACHED side comes from a real filesystem listing (the v2
+    * The CACHED side comes from a real filesystem listing (the
     * connector, content never read); the ORACLE recomputes both sides
     * arithmetically — grid from the fixture extent formulas, presence
     * from the fixture's deterministic gap rule — so a fixture/listing
@@ -214,19 +153,9 @@ object TileCacheQueries {
     * a filesystem.
     */
   def cacheCoverage(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = ensureFixture()
-    val grid = Tile
-      .tileGrid(spark, fixtureCfg)
-      .withColumnRenamed("row", "tile_row")
-      .withColumnRenamed("col", "tile_col")
-    val cells = grid.groupBy("level").agg(count(lit(1)).as("n_cells"))
-    val cached = spark.read
-      .format("tilecache")
-      .load(root)
-      .select(col("level"), col("row").as("tile_row"), col("col").as("tile_col"))
-      .join(grid, Seq("level", "tile_row", "tile_col"))
-      .groupBy("level")
-      .agg(count(lit(1)).as("n_cached"))
+    val cells = Tile.tileGrid(spark, fixtureCfg).groupBy("level").agg(count(lit(1)).as("n_cells"))
+    val cached =
+      cachedTiles(spark, ensureFixture()).groupBy("level").agg(count(lit(1)).as("n_cached"))
     cells
       .join(cached, Seq("level"), "left")
       .select(
@@ -242,14 +171,8 @@ object TileCacheQueries {
   /** Source tiles with content + object key (scan ⋈ grid), the input
     * relation of both the full upload and the delta sync.
     */
-  private def sourceTiles(spark: SparkSession, root: String): DataFrame =
-    parsedTiles(spark, root)
-      .select(
-        Tile
-          .objectKey(fixtureCfg, col("level"), col("tile_row"), col("tile_col"))
-          .as("object_key"),
-        col("length"),
-        col("content"))
+  private[queries] def sourceTiles(spark: SparkSession, root: String): DataFrame =
+    cachedTiles(spark, root).select(objectKey, col("length"), col("content"))
 
   /** Destination manifest (object_key, dest_length[, dest_digest])
     * re-listed from a local bucket; empty relation when the bucket does
@@ -414,13 +337,8 @@ object TileCacheQueries {
     // The manifest below is built by re-listing the bucket, so stale objects
     // from an earlier run (different config/fixture) must not leak in.
     clearDir(bucket)
-    val tiles = parsedTiles(spark, root)
-      .select(
-        Tile
-          .objectKey(fixtureCfg, col("level"), col("tile_row"), col("tile_col"))
-          .as("object_key"),
-        col("content"),
-        format_string("L%02d", col("level")).as("level_label"))
+    val tiles = cachedTiles(spark, root)
+      .select(objectKey, col("content"), format_string("L%02d", col("level")).as("level_label"))
     ObjectSink.write(
       tiles,
       new LocalFsStore(bucket.getAbsolutePath),

@@ -183,18 +183,8 @@ object TileQueries {
       // the grid from the extent formulas, presence from the gap rule,
       // object keys/lengths from the generator's own string arithmetic.
       // A real-filesystem/arithmetic divergence (missing tile, stale dir,
-      // mis-parsed hex path) fails the hash match.
-      Some(
-        TileCacheQueries.fixtureCte +
-          """SELECT level, tile_row, tile_col,
-            | concat('Lite/', level, '/', tile_row, '/', tile_col) AS object_key,
-            | CAST(length(concat('tile-', level, '-', tile_row, '-', tile_col)) AS BIGINT) AS length
-            |FROM present ORDER BY level, tile_row, tile_col""".stripMargin),
-      bench = false),
-    "tile_cache_scan_v2" -> Q(
-      TileCacheQueries.cacheScanV2,
-      // Same arithmetic oracle as tile_cache_scan: the DSv2 connector must
-      // produce the row-for-row identical manifest (also spec-pinned).
+      // mis-parsed hex path in the tilecache connector) fails the hash
+      // match.
       Some(
         TileCacheQueries.fixtureCte +
           """SELECT level, tile_row, tile_col,

@@ -35,8 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - '''Column pruning''': via `SupportsPushDownRequiredColumns`; the
   *    reader opens tile files ONLY when `content` is in the required
   *    schema. Manifest queries (keys, counts, lengths) run at directory-
-  *    listing speed — the binaryFile formulation (`tile_cache_scan`)
-  *    always materializes every payload into the scan batch first.
+  *    listing speed.
   *
   * One input partition per (level, R-row directory): at real scale the
   * row dirs inside a level are the natural parallelism grain (a level-11
@@ -48,8 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * only partially applies, e.g. row/col comparisons).
   *
   * Negative row/col (padded probes can go off-world, `Program.cs:102`)
-  * round-trip through the same two's-complement 8-hex parse as the query
-  * layer (`TileCacheQueries.hexComponent` twin).
+  * round-trip through a two's-complement 8-hex parse ([[TileCacheSource.hex8]]).
   */
 class TileCacheSource extends TableProvider with DataSourceRegister {
 
@@ -87,28 +85,18 @@ object TileCacheSource {
   private[tilecache] def hex8(s: String): Int =
     java.lang.Integer.parseUnsignedInt(s, 16)
 
-  /** Does `level` satisfy every pushed level predicate? Non-level filters
-    * are never pushed, so everything here is on the level column.
+  /** The level test a filter stands for, or None when it is not a level
+    * predicate. Only filters with a test are pushed, and a level
+    * directory is listed only when it passes every pushed test.
     */
-  private[tilecache] def levelSurvives(level: Int, pushed: Seq[Filter]): Boolean =
-    pushed.forall {
-      case EqualTo("level", v: Int) => level == v
-      case GreaterThan("level", v: Int) => level > v
-      case GreaterThanOrEqual("level", v: Int) => level >= v
-      case LessThan("level", v: Int) => level < v
-      case LessThanOrEqual("level", v: Int) => level <= v
-      case In("level", vs) => vs.exists(v => v.isInstanceOf[Int] && v.asInstanceOf[Int] == level)
-      case _ => true
-    }
-
-  private[tilecache] def isLevelFilter(f: Filter): Boolean = f match {
-    case EqualTo("level", _: Int) => true
-    case GreaterThan("level", _: Int) => true
-    case GreaterThanOrEqual("level", _: Int) => true
-    case LessThan("level", _: Int) => true
-    case LessThanOrEqual("level", _: Int) => true
-    case In("level", _) => true
-    case _ => false
+  private[tilecache] def levelTest(f: Filter): Option[Int => Boolean] = f match {
+    case EqualTo("level", v: Int) => Some(_ == v)
+    case GreaterThan("level", v: Int) => Some(_ > v)
+    case GreaterThanOrEqual("level", v: Int) => Some(_ >= v)
+    case LessThan("level", v: Int) => Some(_ < v)
+    case LessThanOrEqual("level", v: Int) => Some(_ <= v)
+    case In("level", vs) => Some(level => vs.exists { case v: Int => v == level; case _ => false })
+    case _ => None
   }
 }
 
@@ -133,7 +121,7 @@ class TileCacheScanBuilder(root: String)
   private var pushed: Array[Filter] = Array.empty
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(TileCacheSource.isLevelFilter)
+    pushed = filters.filter(TileCacheSource.levelTest(_).isDefined)
     filters // conservative: Spark re-evaluates everything post-scan
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -163,6 +151,7 @@ class TileCacheScan(root: String, pushed: Array[Filter], required: StructType)
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val rootFile = new java.io.File(root)
+    val levelTests = pushed.flatMap(TileCacheSource.levelTest)
     val levelDirs = Option(rootFile.listFiles()).getOrElse(Array.empty).toSeq
       .filter(_.isDirectory)
       .flatMap { d =>
@@ -171,7 +160,7 @@ class TileCacheScan(root: String, pushed: Array[Filter], required: StructType)
           case _ => None
         }
       }
-      .filter { case (lvl, _) => TileCacheSource.levelSurvives(lvl, pushed.toSeq) }
+      .filter { case (lvl, _) => levelTests.forall(_(lvl)) }
     levelDirs
       .flatMap { case (lvl, dir) =>
         Option(dir.listFiles()).getOrElse(Array.empty).toSeq

@@ -35,4 +35,11 @@ object Bridge {
     try f
     finally org.apache.spark.TaskContext.unset()
   }
+
+  /** Block until every event posted so far has reached every listener.
+    * `SparkContext.listenerBus` is `private[spark]`; timing tools need
+    * this hop to read a listener's counts for work that has just ended.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -239,6 +239,40 @@ class KernelEdgeCaseSpec extends SparkSuite {
     assert(ScaledLong.scaledLong(Double.NaN, 1e6) == 0L)
   }
 
+  test("ScaledDot argmin keys keep their order just inside the bound") {
+    // the pqAssign/ivfAssign key |c|²_raw − 2·dotRaw(v, c) at |⟨v,c⟩|
+    // up to 4.506e6, just inside the ~4.6e6 bound documented on
+    // ScaledDot.dotRaw. Integer-valued floats keep every product exact,
+    // so the key must equal the exact value and pick the exact nearest
+    // candidate (which here is not the one with the largest dot).
+    val v = Seq(3000f, 0f)
+    val cands = Seq(
+      1 -> Seq(1500f, 0f),
+      2 -> Seq(1499f, 1f),
+      3 -> Seq(1501f, -1f),
+      4 -> Seq(1502f, 30f))
+    def dot(a: Seq[Float], b: Seq[Float]): BigInt =
+      a.zip(b).map { case (x, y) => BigInt(x.toLong) * BigInt(y.toLong) }.sum
+    assert(cands.map(c => dot(v, c._2)).max == BigInt(4506000))
+    val keyed = cands
+      .map { case (cid, c) => (cid, v, c) }
+      .toDF("cid", "v", "c")
+      .select(
+        col("cid"),
+        (ScaledDot.dotRaw(col("c"), col("c")) - lit(2L) * ScaledDot.dotRaw(col("v"), col("c")))
+          .as("key"))
+    val keys = keyed.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    cands.foreach { case (cid, c) =>
+      assert(BigInt(keys(cid)) == (dot(c, c) - 2 * dot(v, c)) * BigInt(10).pow(12), s"cid $cid")
+    }
+    val nearest = cands.minBy { case (cid, c) =>
+      (dot(v, v) + dot(c, c) - 2 * dot(v, c), cid)
+    }._1
+    assert(nearest == 4)
+    val argmin = keyed.agg(min_by(col("cid"), struct(col("key"), col("cid")))).head().getInt(0)
+    assert(argmin == nearest)
+  }
+
   test("Shingles3Hashed equals md5-hash64 over Shingles3's strings on tricky corpus") {
     // pins the hashed kernel to the string kernel + the portable hash —
     // the dedup family's oracle parity rests on exactly this equivalence

@@ -46,7 +46,7 @@ object PartitionOutageStore {
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
-/** E2E tile fixture tests (SURVEY.md §5.5): grid → binaryFile scan →
+/** E2E tile fixture tests (SURVEY.md §5.5): `tilecache` scan ⋈ grid →
   * object sink into a local "bucket", asserting keys and byte identity.
   */
 class TileCacheSpec extends SparkSuite {
@@ -62,6 +62,21 @@ class TileCacheSpec extends SparkSuite {
       assert(r.getAs[Long]("length") == s"tile-$lvl-$row-$col".getBytes("UTF-8").length.toLong)
       assert(r.getAs[String]("object_key") == s"Lite/$lvl/$row/$col")
     }
+  }
+
+  test("delta sync counts its total from a scan that never reads bytes") {
+    // deltaUpload's `total` is this projection: the connector must drop
+    // `content` from the scan, so counting opens no tile file
+    val df =
+      TileCacheQueries.sourceTiles(spark, TileCacheQueries.ensureFixture()).select("object_key")
+    val scans = df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }
+    assert(scans.size == 1, df.queryExecution.sparkPlan.treeString)
+    assert(scans.head.isInstanceOf[graft.sources.tilecache.TileCacheScan])
+    val read = scans.head.readSchema()
+    assert(!read.fieldNames.contains("content"), read.treeString)
+    assert(df.count() == TileCacheQueries.fixturePresent.size)
   }
 
   test("upload sink round-trips bytes into the bucket") {

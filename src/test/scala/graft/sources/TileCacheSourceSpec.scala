@@ -6,19 +6,26 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, In, LessThanOrEqual}
 
-/** DataSource V2 tile-cache connector: result parity with the binaryFile
-  * formulation, level-directory partition pruning, content-column
-  * pruning, and the two's-complement hex key round trip.
+/** DataSource V2 tile-cache connector: the scan manifest against the
+  * fixture's arithmetic present set, level-directory partition pruning,
+  * content-column pruning, and the two's-complement hex key round trip.
   */
 class TileCacheSourceSpec extends SparkSuite {
 
   private lazy val root = graft.queries.TileCacheQueries.ensureFixture()
 
-  test("v2 manifest equals the binaryFile + regex formulation row-for-row") {
-    val v1 = graft.queries.TileCacheQueries.cacheScan(spark, sf001).collect()
-    val v2 = graft.queries.TileCacheQueries.cacheScanV2(spark, sf001).collect()
-    assert(v1.nonEmpty)
-    assert(v1.sameElements(v2))
+  test("connector manifest equals the fixture's arithmetic present set") {
+    val got = graft.queries.TileCacheQueries
+      .cacheScan(spark, sf001)
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getString(3), r.getLong(4)))
+    val want = graft.queries.TileCacheQueries.fixturePresent.map { case (l, r, c) =>
+      (l, r, c, s"Lite/$l/$r/$c", s"tile-$l-$r-$c".getBytes("UTF-8").length.toLong)
+    }
+    assert(want.nonEmpty)
+    assert(got.length == got.toSet.size, "duplicate manifest rows")
+    // every present tile appears, and nothing else (no gap, no off-world)
+    assert(got.toSet == want.toSet)
   }
 
   test("level predicates prune whole level directories at planning time") {
