@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Headline benchmark: runs the bench-flagged Registry queries on
@@ -79,22 +78,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Dev bisection knob: comma-separated query names; keeps declared order.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      // extension tier ON, same as Verify: benched plans are the plans a
-      // production (extensions-configured) session runs
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
     val comp = java.lang.management.ManagementFactory.getCompilationMXBean
     val cls = java.lang.management.ManagementFactory.getClassLoadingMXBean
     // Wall time vs task time: if a query's wall clock is far above

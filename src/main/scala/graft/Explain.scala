@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one registry query (or `entry`) with timing and an
   * optional formatted plan dump.
   *
@@ -15,20 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("entry")
     val sfDir = args.drop(1).headOption.filterNot(_.startsWith("--")).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      // extension tier ON, matching Verify/Bench: explained plans are
-      // the production plans
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // Time CONSTRUCTION + execution, like Bench/ScaleProbe do: queries
     // with eager checkpoints or driver-coordinated rounds (graph edge
     // lists, BPE training) do their dominant work while the DataFrame is

@@ -331,19 +331,7 @@ object ScaleProbe {
     val cpus = sys.env.getOrElse(
       "SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      // extension tier ON, matching Verify/Bench: probed plans are the
-      // production plans
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     // infrastructure warmup (codegen compiler, parquet reader, noop sink)
     spark.range(0, 1000000, 1, 8).selectExpr("sum(id * 2) as s")
       .write.format("noop").mode("overwrite").save()

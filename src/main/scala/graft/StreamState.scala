@@ -129,18 +129,7 @@ object StreamState {
     val x1Dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val x10Dir = args.drop(1).headOption.getOrElse("/tmp/graft_x10_r16")
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val scratch = new java.io.File(sys.props("java.io.tmpdir"), "graft_streamstate_feed").toString
     val active = probes.filter(p => only.isEmpty || only(p.name))
     var out = Vector.empty[String]

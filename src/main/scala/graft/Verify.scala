@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A failed query is
@@ -11,22 +10,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional: verify just these queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // r11: the production mains run with the extension tier ON (the
-    // spark.sql.extensions=graft.GraftExtensions configuration a user
-    // deploys) — injected kernels resolve in SQL and the optimizer
-    // rewrites (HofToKernelRule, WindowTopKRule) apply to every entry;
-    // the full oracle gate re-ran hash-identical under the rules, which
-    // is the strongest semantics-preservation evidence the rule tier has
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the extension tier is ON (see Sessions): the full oracle gate
+    // re-ran hash-identical under the rules, which is the strongest
+    // semantics-preservation evidence the rule tier has
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // repartition(1), NOT coalesce(1): coalesce collapses the whole
     // upstream pipeline into a single task (observed: interpreted-decimal

@@ -36,26 +36,31 @@ import org.apache.spark.sql.functions._
   */
 object DedupClusters {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  /** Test seam: called once per round with (round index, the round's
+    * `msgs` edges ⋈ labels frame) BEFORE the label aggregation runs, so a
+    * spec can assert on the loop's OWN per-round plan (e.g. the
+    * exchange-free pin) instead of reconstructing the frames and hoping
+    * the reconstruction tracks the loop. No-op by default; zero
+    * production cost.
+    */
+  type RoundProbe = (Int, DataFrame) => Unit
+  val noProbe: RoundProbe = (_, _) => ()
 
-  /** @param maxIters explicit FINAL round budget (> 0), or ≤ 0 (the
-    *               default) for the data-derived contract: run up to a
-    *               base of 20 rounds with zero extra driver actions; a
-    *               graph still propagating at the base EXTENDS the
-    *               budget once to the true mathematical bound —
-    *               ⌈log₂ |V|⌉ + 3 under `pathDoubling` (distance
-    *               doubles per round), |V| + 1 without (min-label
-    *               propagation fixes within the diameter) — paying one
-    *               |V| count only on that deep-graph path (r14 ask #1:
-    *               deep organic graphs converge instead of aborting;
-    *               the loud throw past the DERIVED bound marks a broken
-    *               invariant, not a tight constant).
-    * @param strict non-convergence in `maxIters` rounds THROWS instead of
-    *               returning silently-split components. Default on: at
-    *               bench scale an oracle would catch a bad split, at
-    *               100 TB nothing would — wrong groups must not outrun a
-    *               log line. Pass `strict = false` to get the old
-    *               warn-and-return-partial behavior for exploratory runs.
+  /** Base round budget before the data-derived extension (see
+    * `roundBudget` on [[clusters]]).
+    */
+  val BaseRounds = 20
+
+  /** @param roundBudget explicit FINAL round budget (> 0), or ≤ 0 (the
+    *               default) for the data-derived [[Fixpoint]] contract:
+    *               a base of [[BaseRounds]] rounds with zero extra driver
+    *               actions, extended once to the true bound —
+    *               ⌈log₂ |V|⌉ + 3 under `pathDoubling` (distance doubles
+    *               per round), |V| + 1 without (min-label propagation
+    *               fixes within the diameter) — paying one |V| count only
+    *               on that deep-graph path. Non-convergence within the
+    *               budget THROWS: at 100 TB no oracle would catch a
+    *               silently split component.
     * @param reliableCheckpoint materialize per-round state through
     *               `RDD.checkpoint` into `spark.sparkContext
     *               .setCheckpointDir`'s directory instead of
@@ -69,26 +74,14 @@ object DedupClusters {
     *               set (Spark's own failure would otherwise surface
     *               rounds later, mid-job).
     */
-  /** Test seam: called once per round with (round index, the round's
-    * `msgs` edges ⋈ labels frame) BEFORE the label aggregation runs, so a
-    * spec can assert on the loop's OWN per-round plan (e.g. the r12
-    * exchange-free pin) instead of reconstructing the frames and hoping
-    * the reconstruction tracks the loop — the drift ClusterSpec's first
-    * pin had (round-12 ADVICE). No-op by default; zero production cost.
-    */
-  type RoundProbe = (Int, DataFrame) => Unit
-  val noProbe: RoundProbe = (_, _) => ()
-
   def clusters(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIters: Int = 0,
-      strict: Boolean = true,
+      roundBudget: Int = 0,
       reliableCheckpoint: Boolean = false,
       pathDoubling: Boolean = false,
-      roundProbe: RoundProbe = noProbe,
-      baseRounds: Int = 0): DataFrame = {
+      roundProbe: RoundProbe = noProbe): DataFrame = {
     if (reliableCheckpoint && pairs.sparkSession.sparkContext.getCheckpointDir.isEmpty)
       throw new IllegalStateException(
         "DedupClusters(reliableCheckpoint = true) needs " +
@@ -140,20 +133,12 @@ object DedupClusters {
         .select(col("a").as("id"))
         .distinct()
         .withColumn("label", col("id")))
-    var converged = false
-    var i = 0
-    // `baseRounds` / SPARK_GRAFT_CC_BASE_ROUNDS exist for PROBES only
-    // (r14 ask #8): lowering the base on real data forces the lazy
-    // extension to fire organically so its one-extra-action cost can be
-    // measured end-to-end (the param for in-JVM specs, the env for the
-    // ×63 scale probe's separate JVM). Production leaves both unset
-    // (base 20).
-    var budget =
-      if (maxIters > 0) maxIters
-      else if (baseRounds > 0) baseRounds
-      else sys.env.get("SPARK_GRAFT_CC_BASE_ROUNDS").map(_.toInt).getOrElse(20)
-    var budgetFinal = maxIters > 0
-    while (!converged && i < budget) {
+    // lazy budget extension: only a graph still propagating past the
+    // base pays the one |V| count
+    Fixpoint.run("DedupClusters", BaseRounds, roundBudget) {
+      val n = labels.count()
+      if (pathDoubling) Fixpoint.ceilLog2(n) + 3L else n + 1L
+    } { i =>
       val msgs = sym
         .join(labels.withColumnRenamed("id", "a"), "a")
         .select(col("b").as("id"), col("label"), lit(false).as("own"))
@@ -185,11 +170,6 @@ object DedupClusters {
           .agg(
             min(col("label")).as("label"),
             (min(col("label")) < max(when(col("own"), col("label")))).as("chg")))
-      // local path: the round's SINGLE action — the count's full scan
-      // materializes every checkpoint partition AND yields the
-      // convergence signal; reliable path: a cheap count over the
-      // already-written checkpoint files
-      converged = next.where(col("chg")).count() == 0L
       // superseded rounds' checkpoint blocks are reclaimed by the
       // ContextCleaner once the old `labels` reference is dropped (GC-
       // driven, not immediate); convergence is diameter-bounded (near-dup
@@ -197,28 +177,11 @@ object DedupClusters {
       // coexist — acceptable; an explicit unpersist would need the
       // checkpoint RDD handle Spark doesn't expose publicly.
       labels = next.select("id", "label")
-      i += 1
-      // lazy budget extension (r14 ask #1): only a graph still
-      // propagating past the base constant pays the one |V| count
-      if (!converged && i >= budget && !budgetFinal) {
-        budgetFinal = true
-        val n = labels.count()
-        val bound =
-          if (pathDoubling) (if (n <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(n - 1L)) + 3
-          else math.min(n + 1L, Int.MaxValue.toLong).toInt
-        budget = math.max(budget, bound.toInt)
-      }
-    }
-    if (!converged) {
-      // a component with diameter > the budget would be silently split
-      // into several clusters; with the derived budget this marks a
-      // broken invariant (an explicit maxIters marks a tight caller
-      // contract)
-      val msg =
-        s"DedupClusters did not converge in $budget iterations; " +
-          "labels are a partial propagation and may split large-diameter components"
-      if (strict) throw new IllegalStateException(msg)
-      log.warn(msg)
+      // the round's SINGLE action on the local path — the count's full
+      // scan materializes every checkpoint partition AND yields the
+      // convergence signal; reliable path: a cheap count over the
+      // already-written checkpoint files
+      next.where(col("chg")).count()
     }
     labels
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -501,6 +502,13 @@ object SearchOps {
       .transform(e => if (materialize) e.localCheckpoint() else e)
   }
 
+  /** The adjacency of an undirected (u, v) edge frame: both directions
+    * as (a, b), the frame every propagation loop joins its state to.
+    */
+  private def undirected(e: DataFrame): DataFrame =
+    e.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
+
   /** Connected components of the co-purchase graph — the generalization
     * proof that [[graft.operators.DedupClusters]] is a graph primitive,
     * not a dedup special case: the same strict min-label propagation
@@ -597,10 +605,6 @@ object SearchOps {
     */
   val BoruvkaBaseRounds = 14
 
-  /** ⌈log₂ n⌉ for n ≥ 1 (0 for n ≤ 1). */
-  private[graft] def ceilLog2(n: Long): Int =
-    if (n <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(n - 1L)
-
   /** The Borůvka loop behind [[qGraphMst]], with the contraction
     * strategy split at `driverPairThreshold`: below it the per-round
     * pick-pair pseudoforest (ONE row per merging component, halving
@@ -622,26 +626,22 @@ object SearchOps {
     * distributed fallback probes its fixpoint every 3rd jump with the
     * probe count fused into the jump's own checkpoint job (ask #7).
     *
-    * Round budget (r14 ask #1): starts at the compile-time
-    * [[BoruvkaBaseRounds]]; if a graph is still merging when the base
-    * is exhausted the budget is EXTENDED ONCE to the data-derived true
-    * bound ⌈log₂ |V|⌉ + 2 (components at least halve per round — every
-    * live component merges with ≥1 other under the total order — so
-    * ⌈log₂ n⌉ rounds always suffice; |V| counted from the
-    * already-checkpointed labels frame, so the common case pays ZERO
-    * extra driver actions and only a genuinely deep graph pays one
-    * count). Past the derived bound the loop still THROWS loudly — at
-    * that point the invariant itself is broken, not the budget.
-    * `roundBudget > 0` pins an explicit final budget (test seam for
-    * the throw path; production callers leave it derived).
+    * Round budget: the [[graft.operators.Fixpoint]] contract from the
+    * compile-time [[BoruvkaBaseRounds]], extended once to the
+    * data-derived bound ⌈log₂ |V|⌉ + 2 — components at least halve per
+    * round (every live component merges with ≥1 other under the total
+    * order), so ⌈log₂ n⌉ merging rounds plus the one zero-pick round
+    * that observes the fixpoint always suffice; |V| is counted from the
+    * already-checkpointed labels frame, so only a genuinely deep graph
+    * pays that count. `roundBudget > 0` pins an explicit final budget
+    * (test seam for the throw path; production callers leave it
+    * derived).
     */
   private[graft] def boruvka(
       edges: DataFrame,
       driverPairThreshold: Long = 1000000L,
       roundBudget: Int = 0): DataFrame = {
     val spark = edges.sparkSession
-    var maxRounds = if (roundBudget > 0) roundBudget else BoruvkaBaseRounds
-    var budgetFinal = roundBudget > 0
     var lab = edges
       .select(col("u").as("id"))
       .unionByName(edges.select(col("v").as("id")))
@@ -649,12 +649,11 @@ object SearchOps {
       .withColumn("c", col("id"))
       .localCheckpoint()
     var mst = edges.limit(0).localCheckpoint()
-    var round = 0
-    var done = false
     // monotone upper bound on the current round's pick count — see the
     // fusion comment in the loop body
     var prevChosen = Long.MaxValue
-    while (!done && round < maxRounds) {
+    Fixpoint.run("Borůvka", BoruvkaBaseRounds, roundBudget)(
+      Fixpoint.ceilLog2(lab.count()) + 2L) { _ =>
       val cu = lab.select(col("id").as("uid"), col("c").as("cu"))
       val cv = lab.select(col("id").as("vid"), col("c").as("cv"))
       val e2 = edges
@@ -693,8 +692,7 @@ object SearchOps {
         else None
       val nChosen = fusedPairs.map(_.length.toLong).getOrElse(chosen.count())
       prevChosen = nChosen
-      if (nChosen == 0) done = true
-      else {
+      if (nChosen > 0) {
         // plain union chain: mst is only READ once, by the final orderBy
         // action — the ≤budget-deep union over already-cached `chosen`
         // blocks needs neither a per-round job NOR a per-level
@@ -788,29 +786,8 @@ object SearchOps {
           .join(f.withColumnRenamed("x", "oldc"), col("c") === col("oldc"), "left")
           .select(col("id"), coalesce(col("fx"), col("c")).as("c"))
           .localCheckpoint()
-        round += 1
-        // lazy budget extension (r14 ask #1): only a graph still merging
-        // past the base constant pays the one |V| count; the derived
-        // bound is mathematically sufficient, so reaching IT means a
-        // broken invariant and the throw below stays loud
-        if (!done && round >= maxRounds && !budgetFinal) {
-          budgetFinal = true
-          maxRounds = math.max(maxRounds, ceilLog2(lab.count()) + 2)
-        }
       }
-    }
-    if (!done) {
-      val cu = lab.select(col("id").as("uid"), col("c").as("cu"))
-      val cv = lab.select(col("id").as("vid"), col("c").as("cv"))
-      val left = edges
-        .join(cu, col("u") === col("uid"))
-        .join(cv, col("v") === col("vid"))
-        .where(col("cu") =!= col("cv"))
-        .count()
-      if (left > 0)
-        throw new IllegalStateException(
-          s"qGraphMst: $left cross-component edges after $maxRounds Borůvka rounds " +
-            "— raise the round contract for this graph")
+      nChosen
     }
     mst.orderBy("u", "v")
   }
@@ -847,9 +824,7 @@ object SearchOps {
       walkLength: Int = 4): DataFrame = {
     require(walksPerNode >= 1, "walksPerNode must be >= 1")
     val e = coPurchaseEdges(spark, sfDir)
-    val adj = e
-      .select(col("u").as("a"), col("v").as("b"))
-      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
+    val adj = undirected(e)
     val ranked = adj
       .withColumn("rk", row_number().over(Window.partitionBy("a").orderBy(col("b").asc)) - 1)
       .localCheckpoint() // referenced once per step; don't re-rank L×
@@ -895,20 +870,18 @@ object SearchOps {
 
   // ------------------------------------------------- bounded-hop BFS
 
-  /** Multi-hop reach profile: single-source BFS over the co-purchase
-    * graph from the minimum node id (deterministic seed), bounded at 4
-    * hops by CONTRACT — per hop, node count and id range, plus one
-    * `hops = -1` row for the never-reached remainder. The
-    * "what's within k recommendation steps" readout.
-    *
-    * Scale shape: each hop is ONE equi-join (frontier ⋈ adjacency) plus
-    * a fused min-distance aggregation — the [[graft.operators.
-    * DedupClusters]] propagation shape with distance instead of label,
-    * and a FIXED round budget instead of convergence (the contract pins
-    * hop ≤ 4, so the oracle unrolls exactly; the production unbounded
-    * variant is `q_graph_cc`'s strict loop). Per-round eager
-    * checkpoints truncate lineage; state is (id, dist) — 12 B/node.
+  /** The BFS seed frame: (min(u), d = 0), checkpointed. The global min
+    * node id always appears on the u side of its edges; the null guard
+    * makes an EMPTY edge set yield an empty frontier (and so only the
+    * hops = -1 remainder row) instead of a bogus hops = 0 row seeded
+    * from min(u) = NULL — mirrored in the oracle.
     */
+  private def bfsSeed(e: DataFrame): DataFrame =
+    e.agg(min(col("u")).as("id"))
+      .select(col("id"), lit(0).as("d"))
+      .where(col("id").isNotNull)
+      .localCheckpoint()
+
   /** One BFS relaxation round: frontier ⋈ adjacency (equi-join on the
     * node id) then fused min-distance aggregation. Exposed so PlanSpec
     * can pin the EXACT plan the loop executes each round (equi-join, no
@@ -924,25 +897,29 @@ object SearchOps {
       .agg(min(col("d")).as("d"))
   }
 
+  /** Multi-hop reach profile: single-source BFS over the co-purchase
+    * graph from the minimum node id (deterministic seed), bounded at 4
+    * hops by CONTRACT — per hop, node count and id range, plus one
+    * `hops = -1` row for the never-reached remainder. The
+    * "what's within k recommendation steps" readout.
+    *
+    * Scale shape: each hop is ONE equi-join (frontier ⋈ adjacency) plus
+    * a fused min-distance aggregation — the [[graft.operators.
+    * DedupClusters]] propagation shape with distance instead of label,
+    * and a FIXED round budget instead of convergence (the contract pins
+    * hop ≤ 4, so the oracle unrolls exactly; the production unbounded
+    * variant is `q_graph_cc`'s strict loop). Per-round eager
+    * checkpoints truncate lineage; state is (id, dist) — 12 B/node.
+    */
   def qGraphBfsHops(spark: SparkSession, sfDir: String): DataFrame = {
     val hops = 4
     val e = coPurchaseEdges(spark, sfDir)
-    val adj = e
-      .select(col("u").as("a"), col("v").as("b"))
-      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-    // the global min node id always appears on the u side of its edges;
-    // the null guard makes an EMPTY edge set yield an empty frontier
-    // (and so only the hops = -1 remainder row) instead of a bogus
-    // hops = 0 row seeded from min(u) = NULL — mirrored in the oracle.
+    val adj = undirected(e)
     // per-hop eager checkpoint — the one-plan variant was built and
-    // A/B-measured in r17 (see qGraphLabelProp's loop comment): fewer
-    // jobs (28 → 19) but +0.7 s warm min-of-4 from AQE replanning over
-    // the duplicated hop subtrees; reverted
-    var dist = e
-      .agg(min(col("u")).as("id"))
-      .select(col("id"), lit(0).as("d"))
-      .where(col("id").isNotNull)
-      .localCheckpoint()
+    // A/B-measured (see lpaLabels): fewer jobs (28 → 19) but +0.7 s
+    // warm min-of-4 from AQE replanning over the duplicated hop
+    // subtrees; reverted
+    var dist = bfsSeed(e)
     (1 to hops).foreach { _ =>
       dist = bfsRound(dist, adj).localCheckpoint()
     }
@@ -988,14 +965,14 @@ object SearchOps {
     * last two rounds agree), so budget mismatch fails loudly, never
     * silently.
     *
-    * Round budget (r14 ask #1): starts at [[BfsMaxRounds]]; a graph
-    * whose seed eccentricity exceeds it EXTENDS the budget once to the
-    * data-derived true bound 2|E| (= the checkpointed adjacency row
-    * count — every vertex in the edge frame has degree ≥ 1, so
-    * eccentricity ≤ |V| − 1 < 2|E|), paying the one extra count ONLY
-    * on that deep-graph path. Past the derived bound the throw stays:
-    * min-semiring relaxation that hasn't fixed in |V| rounds means a
-    * broken invariant, not a tight budget.
+    * Round budget (run by [[graft.operators.Fixpoint]]):
+    * starts at [[BfsMaxRounds]]; a graph whose seed eccentricity
+    * exceeds it EXTENDS the budget once to the data-derived true bound
+    * 2|E| (= the checkpointed adjacency row count — every vertex in
+    * the edge frame has degree ≥ 1, so eccentricity ≤ |V| − 1 < 2|E|),
+    * paying the one extra count ONLY on that deep-graph path. Past the
+    * derived bound the throw stays: min-semiring relaxation that hasn't
+    * fixed in |V| rounds means a broken invariant, not a tight budget.
     */
   def qGraphBfsFull(spark: SparkSession, sfDir: String): DataFrame =
     bfsFull(coPurchaseEdges(spark, sfDir))
@@ -1005,20 +982,11 @@ object SearchOps {
     * explicit final budget (test seam for the throw path).
     */
   private[graft] def bfsFull(e: DataFrame, roundBudget: Int = 0): DataFrame = {
-    val adj = e
-      .select(col("u").as("a"), col("v").as("b"))
-      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint() // referenced every round — materialize once
-    var dist = e
-      .agg(min(col("u")).as("id"))
-      .select(col("id"), lit(0).as("d"))
-      .where(col("id").isNotNull)
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    var budget = if (roundBudget > 0) roundBudget else BfsMaxRounds
-    var budgetFinal = roundBudget > 0
-    while (!converged && i < budget) {
+    val adj = undirected(e).localCheckpoint() // referenced every round — materialize once
+    var dist = bfsSeed(e)
+    // lazy budget extension: only a graph deeper than the base pays the
+    // one adjacency count
+    Fixpoint.run("BFS", BfsMaxRounds, roundBudget)(adj.count()) { _ =>
       val msgs = dist
         .join(adj, dist("id") === adj("a"))
         .select(col("b").as("id"), (col("d") + 1).as("d"), lit(false).as("own"))
@@ -1034,23 +1002,12 @@ object SearchOps {
           (min(col("d")) <
             coalesce(max(when(col("own"), col("d"))), lit(Int.MaxValue))).as("chg"))
         .localCheckpoint(eager = false)
+      dist = next.select("id", "d")
       // the round's ONE action (r13, the DedupClusters fusion): the
       // full-scan count materializes the lazy checkpoint AND returns
       // the convergence signal in the same job
-      converged = next.where(col("chg")).count() == 0L
-      dist = next.select("id", "d")
-      i += 1
-      // lazy budget extension (r14 ask #1): only a graph deeper than
-      // the base constant pays the one adjacency count
-      if (!converged && i >= budget && !budgetFinal) {
-        budgetFinal = true
-        budget = math.max(budget, math.min(adj.count(), Int.MaxValue.toLong).toInt)
-      }
+      next.where(col("chg")).count()
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"BFS did not reach a fixed point in $budget rounds; " +
-          "the reach profile would be partial")
     bfsProfile(dist, adj)
   }
 
@@ -1163,47 +1120,51 @@ object SearchOps {
     * |V|-row frame. Fixed rounds ⇒ the oracle unrolls exactly.
     */
   def qGraphLabelProp(spark: SparkSession, sfDir: String): DataFrame = {
-    val rounds = 4
-    val e = coPurchaseEdges(spark, sfDir)
-    val adj = e
-      .select(col("u").as("a"), col("v").as("b"))
-      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint()
-    // Per-round eager checkpoint CONFIRMED as the right shape (r17
-    // measured attempt, guide §1.2 feedback loop): both a single-plan
-    // rewrite (no checkpoints, AQE stage reuse deduping the duplicated
-    // round subtrees) and a batch-2 hybrid (checkpoint every second
-    // round) were built and A/B-measured at sf0.1 — the checkpoint-free
-    // logical tree grows exponentially (384 Exchange nodes formatted;
-    // AQE capped execution at 24 jobs but replans the whole remaining
-    // tree after every stage), costing +0.6 s (one-plan) / +1.0 s
-    // (batch-2) warm min-of-4 vs this shape. Driver actions are not the
-    // bottleneck here; AQE replanning over duplicated trees is.
-    var labels = adj
+    val adj = undirected(coPurchaseEdges(spark, sfDir)).localCheckpoint()
+    lpaLabels(adj, rounds = 4).zipWithIndex
+      .map { case (labels, r) =>
+        labels
+          .groupBy("lab")
+          .agg(count(lit(1)).as("sz"))
+          .agg(
+            count(lit(1)).as("n_comm"),
+            max(col("sz")).as("largest"),
+            sum(col("lab") * col("sz")).as("checksum"))
+          .select(lit(r).as("round"), col("n_comm"), col("largest"), col("checksum"))
+      }
+      .reduce(_ unionByName _)
+      .orderBy("round")
+  }
+
+  /** The labels after each of `rounds` [[lpaRound]]s over `adj`, index 0
+    * being the all-singletons start — every round eagerly checkpointed.
+    *
+    * Per-round eager checkpoint CONFIRMED as the right shape by a
+    * measured attempt: both a single-plan
+    * rewrite (no checkpoints, AQE stage reuse deduping the duplicated
+    * round subtrees) and a batch-2 hybrid (checkpoint every second
+    * round) were built and A/B-measured at sf0.1 — the checkpoint-free
+    * logical tree grows exponentially (384 Exchange nodes formatted;
+    * AQE capped execution at 24 jobs but replans the whole remaining
+    * tree after every stage), costing +0.6 s (one-plan) / +1.0 s
+    * (batch-2) warm min-of-4 vs this shape. Driver actions are not the
+    * bottleneck here; AQE replanning over duplicated trees is.
+    */
+  private def lpaLabels(adj: DataFrame, rounds: Int): Seq[DataFrame] = {
+    val singletons = adj
       .select(col("a").as("id"))
       .distinct()
       .select(col("id"), col("id").as("lab"))
       .localCheckpoint()
-    val profile = (0 to rounds).map { r =>
-      if (r > 0) labels = lpaRound(labels, adj).localCheckpoint()
-      labels
-        .groupBy("lab")
-        .agg(count(lit(1)).as("sz"))
-        .agg(
-          count(lit(1)).as("n_comm"),
-          max(col("sz")).as("largest"),
-          sum(col("lab") * col("sz")).as("checksum"))
-        .select(lit(r).as("round"), col("n_comm"), col("largest"), col("checksum"))
-    }
-    profile.reduce(_ unionByName _).orderBy("round")
+    (1 to rounds).scanLeft(singletons)((labels, _) => lpaRound(labels, adj).localCheckpoint())
   }
 
   /** Newman modularity of the 4-round label-propagation partition —
     * the partition-quality score that turns `q_graph_label_prop`'s
     * community detection into a judged result:
-    * `Q = Σ_c (e_c/m − (d_c/2m)²)`. The communities come from the SAME
-    * [[lpaRound]] core as the registry's label-prop entry (one
-    * definition, zero drift); Q ∈ (−0.5, 1], higher = stronger
+    * `Q = Σ_c (e_c/m − (d_c/2m)²)`. The communities are the last round
+    * of the SAME [[lpaLabels]] loop as the registry's label-prop entry
+    * (one definition, zero drift); Q ∈ (−0.5, 1], higher = stronger
     * community structure than the degree-preserving random graph.
     *
     * Exactness: e_c (intra-community edges), d_c (community degree
@@ -1215,21 +1176,9 @@ object SearchOps {
     * fold is |communities| rows.
     */
   def qGraphModularity(spark: SparkSession, sfDir: String): DataFrame = {
-    val rounds = 4
     val e = coPurchaseEdges(spark, sfDir)
-    val adj = e
-      .select(col("u").as("a"), col("v").as("b"))
-      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint()
-    // per-round eager checkpoint — see qGraphLabelProp's loop comment
-    // for the r17 measured A/B that confirmed this shape over the
-    // one-plan and batch-2 variants
-    var labels = adj
-      .select(col("a").as("id"))
-      .distinct()
-      .select(col("id"), col("id").as("lab"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) labels = lpaRound(labels, adj).localCheckpoint()
+    val adj = undirected(e).localCheckpoint()
+    val labels = lpaLabels(adj, rounds = 4).last
     val lu = labels.select(col("id").as("lu_id"), col("lab").as("lu"))
     val lv = labels.select(col("id").as("lv_id"), col("lab").as("lv"))
     val mrow = e.agg(count(lit(1)).as("m"))

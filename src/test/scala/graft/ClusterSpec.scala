@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.DedupClusters
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -68,43 +69,81 @@ class ClusterSpec extends SparkSuite {
       assert(got == expected, s"edges $edges")
     }
     // a 16-node path (diameter 15) must converge within ~log2 rounds when
-    // doubling — maxIters = 6 would fail plain propagation
+    // doubling — roundBudget = 6 would fail plain propagation
     val path = (1L until 16L).map(i => (i, i + 1)).toDF("d1", "d2")
     intercept[IllegalStateException] {
-      DedupClusters.clusters(path, "d1", "d2", maxIters = 6).collect()
+      DedupClusters.clusters(path, "d1", "d2", roundBudget = 6).collect()
     }
     val doubled = DedupClusters
-      .clusters(path, "d1", "d2", maxIters = 6, pathDoubling = true)
+      .clusters(path, "d1", "d2", roundBudget = 6, pathDoubling = true)
       .collect()
     assert(doubled.forall(_.getLong(1) == 1L))
+  }
+
+  /** Runs `f` with a listener registered that counts successful Dataset
+    * actions by name (`count`, `collect`, …); returns `f`'s result and
+    * the tally. The listener bus is drained BEFORE registering, so
+    * events still queued from earlier tests' actions are not dispatched
+    * to the new listener, and AFTER `f`, so every event `f` posted has
+    * been counted when the tally is read.
+    */
+  private def countingActions[T](f: => T): (T, Map[String, Int]) = {
+    import scala.jdk.CollectionConverters._
+    val byName = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = { byName.merge(funcName, 1, _ + _); () }
+      override def onFailure(
+          funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    Bridge.drainListeners(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val out =
+      try {
+        val r = f
+        Bridge.drainListeners(spark.sparkContext)
+        r
+      } finally spark.listenerManager.unregister(listener)
+    (out, byName.asScala.map { case (k, v) => k -> v.intValue }.toMap)
   }
 
   test("derived budget: a diameter past the 20-round base converges instead of aborting") {
     // 30-node path, diameter 29 > base 20, plain propagation: the
     // default (derived) budget extends once to |V| + 1 and converges
-    // where the old fixed 20-round default threw (r14 ask #1)
+    // where a fixed 20-round budget would throw. The
+    // extension fires once and pays exactly one extra action: the
+    // driver runs rounds + 1 counts (one fused count per round plus the
+    // one |V| count the extension pays).
     val path = (1L to 29L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val labels = DedupClusters.clusters(path, "d1", "d2").collect()
+    var rounds = 0
+    val (labels, byName) = countingActions {
+      DedupClusters
+        .clusters(path, "d1", "d2", roundProbe = (i, _) => rounds = i + 1)
+        .collect()
+    }
     assert(labels.length == 30 && labels.forall(_.getLong(1) == 1L))
-    // an EXPLICIT maxIters stays a final contract and still throws
+    assert(rounds > DedupClusters.BaseRounds, s"extension never needed: $rounds rounds")
+    assert(
+      byName.getOrElse("count", 0) == rounds + 1,
+      s"$byName over $rounds rounds — expected rounds + 1 count jobs (one extension)")
+    // an EXPLICIT roundBudget stays a final contract and still throws
     intercept[IllegalStateException] {
-      DedupClusters.clusters(path, "d1", "d2", maxIters = 20).collect()
+      DedupClusters.clusters(path, "d1", "d2", roundBudget = 20).collect()
     }
   }
 
-  test("strict mode throws when a component's diameter exceeds maxIters") {
-    // a path graph 1-2-3-...-8 needs ~log2(diameter) doubling rounds to
-    // fully propagate label 1 to vertex 8; maxIters = 1 cannot converge
+  test("a pinned roundBudget throws when a component's diameter exceeds it") {
+    // a path graph 1-2-3-...-8 needs 7 rounds of plain propagation to
+    // carry label 1 to vertex 8; roundBudget = 1 cannot converge
     val path = (1L until 8L).map(i => (i, i + 1)).toDF("d1", "d2")
     val e = intercept[IllegalStateException] {
-      DedupClusters.clusters(path, "d1", "d2", maxIters = 1).collect()
+      DedupClusters.clusters(path, "d1", "d2", roundBudget = 1).collect()
     }
-    assert(e.getMessage.contains("did not converge"))
-    // strict = false keeps the old warn-and-return-partial behavior: the
-    // partial labels still cover every vertex, just possibly split
-    val partial =
-      DedupClusters.clusters(path, "d1", "d2", maxIters = 1, strict = false).collect()
-    assert(partial.map(_.getLong(0)).toSet == (1L to 8L).toSet)
+    assert(e.getMessage.contains("DedupClusters did not reach a fixed point in 1 rounds"))
   }
 
   test("reliable checkpointing runs the loop and matches union-find") {
@@ -154,7 +193,7 @@ class ClusterSpec extends SparkSuite {
         edges,
         "a",
         "b",
-        maxIters = 40,
+        roundBudget = 40,
         pathDoubling = true,
         roundProbe = { (_, msgs) =>
           rounds += 1
@@ -184,140 +223,28 @@ class ClusterSpec extends SparkSuite {
     assert(second.getString(2) == "10,11")
   }
 
-  /** Drain the async listener bus BEFORE registering a counting listener
-    * (r15 ADVICE): events from earlier tests' actions are posted to a
-    * FIFO bus, so a straggler still queued at register() time would be
-    * dispatched to the new listener and inflate an exact-count assert.
-    * A sentinel action with a recognizable literal is run under a
-    * throwaway listener; once the sentinel's own event arrives, every
-    * event queued before it has been dispatched.
-    */
-  private def drainListenerBus(): Unit = {
-    val sentinelLo = 918273645L
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val marker = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        if (qe.analyzed.toString.contains(sentinelLo.toString)) seen.countDown()
-      override def onFailure(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(marker)
-    try {
-      spark.range(sentinelLo, sentinelLo + 1).toDF().count(): Unit
-      assert(
-        seen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus failed to deliver the drain sentinel within 30 s")
-    } finally spark.listenerManager.unregister(marker)
-  }
-
   test("one driver action per propagation round (r13 fused convergence pin)") {
     // regression pin for the r13 lazy-checkpoint + fused-count round: a
     // reintroduced eager-checkpoint-plus-probe round would double the
     // per-round Dataset actions and trip the budget below
-    val byName = new java.util.concurrent.ConcurrentHashMap[String, Integer]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { byName.merge(funcName, 1, _ + _); () }
-      override def onFailure(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
     // path graph 1-…-8: diameter 7 → enough rounds that a 2×-per-round
     // regression clearly separates from the constant setup cost
     val pairs = (1L to 7L).map(i => (i, i + 1)).toDF("a", "b")
     var rounds = 0
-    drainListenerBus()
-    spark.listenerManager.register(listener)
-    val labels =
-      try DedupClusters
+    val (labels, byName) = countingActions {
+      DedupClusters
         .clusters(pairs, "a", "b", roundProbe = (i, _) => rounds = i + 1)
         .collect()
-      finally spark.listenerManager.unregister(listener)
+    }
     assert(labels.forall(_.getLong(1) == 1L)) // one component, min label
     assert(rounds >= 5, s"fixture too shallow: $rounds rounds")
-    // listener delivery is async: poll until the tallies stabilize,
-    // BOUNDED so a delivery anomaly fails the test instead of hanging
-    // the suite (r13 ADVICE #2)
-    var last = -1
-    var stable = 0
-    var polls = 0
-    while (stable < 5 && polls < 150) {
-      Thread.sleep(100)
-      polls += 1
-      val now = byName.values().stream().mapToInt(_.intValue()).sum()
-      if (now == last) stable += 1 else { stable = 0; last = now }
-    }
-    assert(stable >= 5, s"listener tallies never stabilized within ${polls * 100} ms: $byName")
     // the round's ONE materializing job is the fused `count`; the lazy
     // checkpoint marks also emit (job-less) listener events under their
     // own funcName and are deliberately not budgeted here
     assert(
-      byName.getOrDefault("count", 0) == rounds,
+      byName.getOrElse("count", 0) == rounds,
       s"$byName over $rounds rounds — expected exactly one count job per round")
     // the retired per-round probe shapes must not reappear
-    assert(!byName.containsKey("isEmpty") && !byName.containsKey("take"), byName.toString)
-  }
-
-  test("forced budget extension: fires once, pays exactly one extra action, same labels (r15)") {
-    // r14 ask #8's in-JVM half: lower the BASE budget so the lazy
-    // extension must fire on a graph that needs more rounds — the result
-    // must equal the default-budget run and the total driver actions must
-    // be exactly rounds + 1 (the one |V| count the extension pays)
-    val byName = new java.util.concurrent.ConcurrentHashMap[String, Integer]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { byName.merge(funcName, 1, _ + _); () }
-      override def onFailure(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    val pairs = (1L to 7L).map(i => (i, i + 1)).toDF("a", "b")
-    var rounds = 0
-    drainListenerBus()
-    spark.listenerManager.register(listener)
-    val got =
-      try DedupClusters
-        .clusters(pairs, "a", "b", baseRounds = 2, roundProbe = (i, _) => rounds = i + 1)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .sorted
-        .toSeq
-      finally spark.listenerManager.unregister(listener)
-    // the default-budget reference run happens AFTER unregistering: the
-    // listener bus is async, so a run issued just before register() could
-    // leak its own count events into the tally (r15 self-review)
-    val want = DedupClusters
-      .clusters(pairs, "a", "b")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sorted
-      .toSeq
-    assert(got == want, "forced-extension labels differ from the default-budget run")
-    assert(rounds > 2, s"extension never needed: converged in $rounds rounds at base 2")
-    var last = -1
-    var stable = 0
-    var polls = 0
-    while (stable < 5 && polls < 150) {
-      Thread.sleep(100)
-      polls += 1
-      val now = byName.values().stream().mapToInt(_.intValue()).sum()
-      if (now == last) stable += 1 else { stable = 0; last = now }
-    }
-    assert(stable >= 5, s"listener tallies never stabilized within ${polls * 100} ms: $byName")
-    // rounds fused counts + EXACTLY ONE extension count (the |V| bound)
-    assert(
-      byName.getOrDefault("count", 0) == rounds + 1,
-      s"$byName over $rounds rounds — expected rounds + 1 count jobs (one extension)")
+    assert(!byName.contains("isEmpty") && !byName.contains("take"), byName.toString)
   }
 }

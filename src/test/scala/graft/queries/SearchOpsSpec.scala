@@ -776,7 +776,7 @@ class SearchOpsSpec extends SparkSuite {
     val e = intercept[IllegalStateException] {
       SearchOps.boruvka(edges, roundBudget = 14).collect()
     }
-    assert(e.getMessage.contains("cross-component edges after 14"))
+    assert(e.getMessage.contains("Borůvka did not reach a fixed point in 14 rounds"))
     // the derived budget (⌈log₂ 2^15⌉ + 2 = 17) converges to the full tree
     val mst = SearchOps.boruvka(edges).collect()
     assert(mst.length == n - 1, s"expected the full spanning tree, got ${mst.length} edges")
