@@ -17,8 +17,8 @@ import org.apache.spark.util.LongAccumulator
   * one client per partition, one PUT per row, per-record fault tolerance
   * (swallow-and-count, mirroring Program.cs:120-123) via accumulators
   * instead of stdout. Each task keeps up to [[ObjectSink.Window]] PUTs in
-  * flight, so parallelism = partitions × executor cores × `Window` — the
-  * distributed generalization of the S3 example's 40-thread semaphore
+  * flight, so at most min(partitions, task slots) × `Window` PUTs are in
+  * flight at once — the distributed generalization of the S3 example's 40-thread semaphore
   * (EtlToS3.cs:36-43). Uploads stay at-least-once and idempotent by key.
   *
   * At 100 TB scale: the DataFrame reaching this sink should carry only
@@ -97,10 +97,12 @@ object ObjectSink {
 
   /** PUTs one task keeps in flight. A constant, not a knob: the sink is the
     * only place that needs the concurrency. On a 4-vCPU VM against a store
-    * answering each PUT in 20 ms (~21 objects per task), objects/s was 164,
-    * 734, 964, 1145 and 1184 at windows of 1, 8, 16, 32 and 64, so it
-    * levels off at 32; against a store with no latency, 32 ran as fast as
-    * one PUT at a time per task.
+    * answering each PUT in 20 ms, objects/s was 164, 734, 964, 1145 and
+    * 1184 at windows of 1, 8, 16, 32 and 64, so it levels off at 32;
+    * against a store with no latency, 32 ran as fast as one PUT at a time
+    * per task. That curve was taken with ~21 objects per task (one
+    * `tilecache` partition per row dir); the scan now packs row dirs into
+    * about one partition per task slot, ~480 objects per task there.
     */
   private[graft] val Window = 32
 

@@ -1,14 +1,18 @@
 package graft.sources.tilecache
 
-import java.util.{List => JList, Map => JMap}
+import java.io.File
+import java.util.{Map => JMap}
 
-import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -37,14 +41,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    schema. Manifest queries (keys, counts, lengths) run at directory-
   *    listing speed.
   *
-  * One input partition per (level, R-row directory): at real scale the
-  * row dirs inside a level are the natural parallelism grain (a level-11
-  * cache holds thousands of R dirs), and each reader streams one
-  * directory listing — no global file list on the driver beyond dir
-  * names. Filters are also RE-returned to Spark as residuals (the
-  * standard conservative contract: pruning is an optimization, Spark's
-  * post-scan filter keeps correctness even for predicates the source
-  * only partially applies, e.g. row/col comparisons).
+  * Input partitions are contiguous runs of R-row directories in
+  * (level, row) order, across levels, each holding about the same
+  * estimated bytes: about one run per task slot on a small cache, runs of
+  * at most `spark.sql.files.maxPartitionBytes` (128 MB by default) on a
+  * large one, and never a row directory split in two (see
+  * [[TileCacheScan.planInputPartitions]]), so a sink task fed by one run
+  * keeps its PUT window full for the whole run. The driver lists level
+  * dirs, their row dir names, and one row dir per level; no global file
+  * list. Filters are also RE-returned to Spark as residuals (the standard
+  * conservative contract: pruning is an optimization, Spark's post-scan
+  * filter keeps correctness even for predicates the source only
+  * partially applies, e.g. row/col comparisons).
   *
   * Negative row/col (padded probes can go off-world, `Program.cs:102`)
   * round-trip through a two's-complement 8-hex parse ([[TileCacheSource.hex8]]).
@@ -84,6 +92,45 @@ object TileCacheSource {
     */
   private[tilecache] def hex8(s: String): Int =
     java.lang.Integer.parseUnsignedInt(s, 16)
+
+  /** The entries of `dir` whose names match `re`, keyed by `key` of the
+    * captured group and sorted by it. A missing dir lists as empty.
+    */
+  private[tilecache] def entries(dir: File, re: Regex, key: String => Int): Seq[(Int, File)] =
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq
+      .flatMap { f =>
+        f.getName match {
+          case re(g) => Some((key(g), f))
+          case _ => None
+        }
+      }
+      .sortBy(_._1)
+
+  /** The tile files of one row dir as (col, file), in col order. */
+  private[tilecache] def tiles(rowDir: File): Seq[(Int, File)] =
+    entries(rowDir, TileFileRe, hex8).filter(_._2.isFile)
+
+  /** Contiguous runs over items of `bytes` (each > 0), in order. The runs
+    * fill n = min(#items, ceil(total / split)) slots of total / n bytes:
+    * an item joins the slot its byte midpoint falls in, and an item above
+    * `split` runs alone. When no item is above total / n, every slot gets
+    * at least one item, so there are exactly n runs.
+    */
+  private[sources] def pack(bytes: IndexedSeq[Long], split: Long): Seq[Range] =
+    if (bytes.isEmpty) Nil
+    else {
+      val total = bytes.sum
+      val n = math.min(bytes.length.toLong, (total + split - 1) / split)
+      val slot = total.toDouble / n
+      var before = 0L
+      val keys = bytes.indices.map { i =>
+        val mid = before + bytes(i) / 2.0
+        before += bytes(i)
+        (math.min(n - 1, (mid / slot).toLong), if (bytes(i) > split) i else -1)
+      }
+      val ends = keys.indices.tail.filter(i => keys(i) != keys(i - 1)) :+ keys.length
+      (0 +: ends.init).zip(ends).map { case (from, until) => from until until }
+    }
 
   /** The level test a filter stands for, or None when it is not a level
     * predicate. Only filters with a test are pushed, and a level
@@ -145,85 +192,97 @@ class TileCacheScan(root: String, pushed: Array[Filter], required: StructType)
     s"TileCacheScan root=$root pushed=[${pushed.mkString(", ")}] " +
       s"columns=[${required.fieldNames.mkString(", ")}]"
 
-  /** One partition per (level dir, row dir): level dirs that fail the
-    * pushed predicates are pruned HERE — their row dirs are never even
-    * listed.
+  /** Contiguous runs of row dirs in (level, row) order, across levels,
+    * each holding about the same estimated bytes. Level dirs that fail the
+    * pushed predicates are pruned HERE: their row dirs are never listed.
+    *
+    *  - '''Estimate''': per surviving level, the tile lengths of its
+    *    middle row dir times its row-dir count: one row-dir listing per
+    *    level on the driver.
+    *  - '''Split size''': Spark's file-source rule
+    *    (`FilePartition.maxSplitBytes`) with the session's settings:
+    *    min(`spark.sql.files.maxPartitionBytes`, max(
+    *    `spark.sql.files.openCostInBytes`, total / slots)), where slots is
+    *    `spark.sql.files.minPartitionNum`, else the leaf-node default
+    *    parallelism. The per-slot share rounds up, so an even spread over
+    *    p slots plans p runs, not p + 1.
+    *  - '''Runs''': ceil(total / split), at most one per row dir, packed by
+    *    [[TileCacheSource.pack]]; a row dir above the split size is a run
+    *    of its own and is never split.
+    *
+    * So a small cache plans about one partition per task slot, and at
+    * 100 TB every partition stays near the 128 MB `maxPartitionBytes`
+    * default.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val rootFile = new java.io.File(root)
     val levelTests = pushed.flatMap(TileCacheSource.levelTest)
-    val levelDirs = Option(rootFile.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap { d =>
-        d.getName match {
-          case TileCacheSource.LevelDirRe(dd) => Some((dd.toInt, d))
-          case _ => None
-        }
-      }
-      .filter { case (lvl, _) => levelTests.forall(_(lvl)) }
-    levelDirs
-      .flatMap { case (lvl, dir) =>
-        Option(dir.listFiles()).getOrElse(Array.empty).toSeq
-          .filter(_.isDirectory)
-          .flatMap { rd =>
-            rd.getName match {
-              case TileCacheSource.RowDirRe(hex) =>
-                Some(TileCachePartition(lvl, TileCacheSource.hex8(hex), rd.getAbsolutePath))
-              case _ => None
-            }
-          }
-      }
-      .sortBy(p => (p.level, p.row)) // deterministic partition order
-      .toArray[InputPartition]
+    val levels = TileCacheSource
+      .entries(new File(root), TileCacheSource.LevelDirRe, _.toInt)
+      .filter { case (lvl, d) => d.isDirectory && levelTests.forall(_(lvl)) }
+    val dirs = levels.flatMap { case (lvl, levelDir) =>
+      val rows = TileCacheSource
+        .entries(levelDir, TileCacheSource.RowDirRe, TileCacheSource.hex8)
+        .filter(_._2.isDirectory)
+      // a 1-byte floor keeps an all-empty level in the packing
+      lazy val est = math.max(1L, TileCacheSource.tiles(rows(rows.length / 2)._2).map(_._2.length).sum)
+      rows.map { case (row, d) => (TileCacheRowDir(lvl, row, d.getAbsolutePath), est) }
+    }.toIndexedSeq
+    val bytes = dirs.map(_._2)
+    TileCacheSource
+      .pack(bytes, splitBytes(bytes.sum))
+      .map(run => TileCachePartition(run.map(dirs(_)._1)))
+      .toArray
+  }
+
+  private def splitBytes(total: Long): Long = {
+    val conf = SQLConf.get
+    val slots = conf.filesMinPartitionNum.getOrElse(Bridge.leafNodeDefaultParallelism(SparkSession.active))
+    math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes, (total + slots - 1) / slots))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TileCacheReaderFactory(required)
 }
 
-case class TileCachePartition(level: Int, row: Int, rowDirPath: String) extends InputPartition
+/** One row directory of the cache: `L{level}/R{row}` at `path`. */
+case class TileCacheRowDir(level: Int, row: Int, path: String)
+
+/** A run of row directories, in (level, row) order. */
+case class TileCachePartition(rowDirs: Seq[TileCacheRowDir]) extends InputPartition
 
 class TileCacheReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TileCacheReader(partition.asInstanceOf[TileCachePartition], required)
 }
 
-/** Streams one row directory. Tile bytes are read lazily and ONLY when
-  * the pruned schema still contains `content`.
+/** Streams a partition's row directories in order, each listed when the
+  * reader reaches it. Tile bytes are read lazily and ONLY when the pruned
+  * schema still contains `content`.
   */
 class TileCacheReader(part: TileCachePartition, required: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val needContent = required.fieldNames.contains("content")
-  private val files: Iterator[(Int, java.io.File)] = {
-    val listed = Option(new java.io.File(part.rowDirPath).listFiles())
-      .getOrElse(Array.empty)
-      .toSeq
-      .filter(_.isFile)
-      .flatMap { f =>
-        f.getName match {
-          case TileCacheSource.TileFileRe(hex) => Some((TileCacheSource.hex8(hex), f))
-          case _ => None
-        }
-      }
-      .sortBy(_._1)
-    listed.iterator
+  private type Value = (TileCacheRowDir, Int, File) => Any
+
+  /** One value function per required column, resolved once. */
+  private val values: Array[Value] = required.fieldNames.map[Value] {
+    case "level" => (d, _, _) => d.level
+    case "row" => (d, _, _) => d.row
+    case "col" => (_, c, _) => c
+    case "path" => (_, _, f) => UTF8String.fromString(f.getAbsolutePath)
+    case "length" => (_, _, f) => f.length()
+    case "content" => (_, _, f) => java.nio.file.Files.readAllBytes(f.toPath)
   }
+  private val files: Iterator[(TileCacheRowDir, Int, File)] =
+    part.rowDirs.iterator.flatMap { d =>
+      TileCacheSource.tiles(new File(d.path)).map { case (c, f) => (d, c, f) }
+    }
   private var current: InternalRow = _
 
   override def next(): Boolean =
-    if (!files.hasNext) false
-    else {
-      val (colIdx, f) = files.next()
-      val values = required.fieldNames.map {
-        case "level" => part.level
-        case "row" => part.row
-        case "col" => colIdx
-        case "path" => UTF8String.fromString(f.getAbsolutePath)
-        case "length" => f.length()
-        case "content" => java.nio.file.Files.readAllBytes(f.toPath)
-      }
-      current = new GenericInternalRow(values.asInstanceOf[Array[Any]])
+    files.hasNext && {
+      val (d, c, f) = files.next()
+      current = new GenericInternalRow(values.map(_(d, c, f)))
       true
     }
 

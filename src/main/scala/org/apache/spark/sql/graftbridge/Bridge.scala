@@ -42,4 +42,13 @@ object Bridge {
     */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The parallelism Spark's file sources size their splits by:
+    * `spark.sql.leafNodeDefaultParallelism`, else the SparkContext's
+    * default parallelism. `SparkSession.leafNodeDefaultParallelism` is
+    * `private[sql]`; a connector that plans its input partitions the same
+    * way needs this hop.
+    */
+  def leafNodeDefaultParallelism(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].leafNodeDefaultParallelism
 }

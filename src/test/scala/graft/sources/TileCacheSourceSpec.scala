@@ -4,17 +4,40 @@ import graft.SparkSuite
 import graft.sources.tilecache._
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{EqualTo, In, LessThanOrEqual}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.sources.{EqualTo, Filter, In, LessThanOrEqual}
 
 /** DataSource V2 tile-cache connector: the scan manifest against the
-  * fixture's arithmetic present set, level-directory partition pruning,
-  * content-column pruning, and the two's-complement hex key round trip.
+  * fixture's arithmetic present set, row-directory packing into input
+  * partitions, level-directory partition pruning, content-column pruning,
+  * and the two's-complement hex key round trip.
   */
 class TileCacheSourceSpec extends SparkSuite {
 
   private lazy val root = graft.queries.TileCacheQueries.ensureFixture()
 
-  test("connector manifest equals the fixture's arithmetic present set") {
+  /** The planned input partitions, each as its run of row dirs. */
+  private def runs(pushed: Array[Filter] = Array.empty): Seq[Seq[TileCacheRowDir]] =
+    new TileCacheScan(root, pushed, TileCacheSource.Schema)
+      .planInputPartitions()
+      .toSeq
+      .map(_.asInstanceOf[TileCachePartition].rowDirs)
+
+  /** The planned row dirs as (level, row), in partition order. */
+  private def rowDirs(pushed: Array[Filter] = Array.empty): Seq[(Int, Int)] =
+    runs(pushed).flatten.map(d => (d.level, d.row))
+
+  private def withConf[T](key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f
+    finally prev match {
+      case Some(v0) => spark.conf.set(key, v0)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def assertManifestIsFixture(): Unit = {
     val got = graft.queries.TileCacheQueries
       .cacheScan(spark, sf001)
       .collect()
@@ -28,20 +51,49 @@ class TileCacheSourceSpec extends SparkSuite {
     assert(got.toSet == want.toSet)
   }
 
+  test("connector manifest equals the fixture's arithmetic present set") {
+    assertManifestIsFixture()
+  }
+
+  test("row directories pack into contiguous byte-balanced runs, about one per slot") {
+    val listed = graft.queries.TileCacheQueries.fixturePresent.map { case (l, r, _) => (l, r) }.distinct.sorted
+    assert(listed.length > 1)
+    // every listed row dir lands in exactly one run, in (level, row) order
+    assert(runs().forall(_.nonEmpty))
+    assert(rowDirs() == listed)
+    // a split size below every row dir (each holds >= 1 tile of >= 10 bytes):
+    // one dir per run, and the scan still reads every tile exactly once
+    withConf("spark.sql.files.maxPartitionBytes", "8") {
+      assert(runs().map(_.length) == Seq.fill(listed.length)(1))
+      assertManifestIsFixture()
+    }
+    // no open cost: the estimated bytes spread evenly over the task slots
+    withConf("spark.sql.files.openCostInBytes", "1") {
+      assert(runs().length == math.min(listed.length, Bridge.leafNodeDefaultParallelism(spark)))
+    }
+  }
+
+  test("pack: even runs over uniform row dirs, and a row dir above the split runs alone") {
+    // 90 equal dirs over 4 slots: the rounded-up share plans 4 runs, not 5
+    val even = TileCacheSource.pack(Vector.fill(90)(5L), split = (450L + 3) / 4)
+    assert(even.length == 4 && even.flatten == (0 until 90))
+    assert(even.map(_.length).max - even.map(_.length).min <= 1, even)
+    // 2 slots of 4.5 bytes: by midpoint alone the 6-byte dir would share the first
+    assert(TileCacheSource.pack(Vector(1L, 6L, 1L, 1L), split = 5) == Seq(0 until 1, 1 until 2, 2 until 4))
+    assert(TileCacheSource.pack(Vector.empty, split = 1).isEmpty)
+  }
+
   test("level predicates prune whole level directories at planning time") {
-    val all = new TileCacheScan(root, Array.empty, TileCacheSource.Schema)
-      .planInputPartitions()
-    val only3 = new TileCacheScan(root, Array(EqualTo("level", 3)), TileCacheSource.Schema)
-      .planInputPartitions()
-    val le3 = new TileCacheScan(root, Array(LessThanOrEqual("level", 3)), TileCacheSource.Schema)
-      .planInputPartitions()
-    val in24 = new TileCacheScan(root, Array(In("level", Array(2, 4))), TileCacheSource.Schema)
-      .planInputPartitions()
-    assert(all.nonEmpty && only3.length < all.length)
-    assert(only3.forall(_.asInstanceOf[TileCachePartition].level == 3))
-    assert(le3.forall(_.asInstanceOf[TileCachePartition].level <= 3))
-    assert(in24.forall(p => Set(2, 4)(p.asInstanceOf[TileCachePartition].level)))
-    assert(only3.length + in24.length == all.length) // 2..4 partitioned exactly
+    val all = rowDirs()
+    val only3 = rowDirs(Array(EqualTo("level", 3)))
+    val le3 = rowDirs(Array(LessThanOrEqual("level", 3)))
+    val in24 = rowDirs(Array(In("level", Array(2, 4))))
+    assert(all.nonEmpty && only3.nonEmpty && only3.length < all.length)
+    assert(only3.toSet == all.filter(_._1 == 3).toSet)
+    assert(le3.toSet == all.filter(_._1 <= 3).toSet)
+    assert(in24.toSet == all.filter(d => Set(2, 4)(d._1)).toSet)
+    // 2..4 partitioned exactly: disjoint, and together every row dir
+    assert(only3.toSet.intersect(in24.toSet).isEmpty && only3.toSet ++ in24.toSet == all.toSet)
     // and the pushdown is wired through the ScanBuilder, not just the Scan
     val sb = new TileCacheScanBuilder(root)
     sb.pushFilters(Array(EqualTo("level", 3), EqualTo("row", 1)))
