@@ -1,5 +1,26 @@
 package graft.operators
 
+/** Byte readers shared by the header parsers in this file: unsigned
+  * (u8/U16/U32/U64) and signed (I32) fields at a byte offset, big- or
+  * little-endian, plus a 4-byte ASCII `tag` match that is false for an
+  * out-of-range offset instead of throwing.
+  */
+private[operators] object Bytes {
+  def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  def beU16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
+  def leU16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
+  def beI32(b: Array[Byte], i: Int): Int =
+    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
+  def leI32(b: Array[Byte], i: Int): Int =
+    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
+  def beU32(b: Array[Byte], i: Int): Long = beI32(b, i) & 0xffffffffL
+  def leU32(b: Array[Byte], i: Int): Long = leI32(b, i) & 0xffffffffL
+  def beU64(b: Array[Byte], i: Int): Long = (beU32(b, i) << 32) | beU32(b, i + 4)
+  def tag(b: Array[Byte], i: Int, s: String): Boolean =
+    i >= 0 && b.length >= i + 4 && b(i) == s(0).toByte && b(i + 1) == s(1).toByte &&
+      b(i + 2) == s(2).toByte && b(i + 3) == s(3).toByte
+}
+
 /** Container-format metadata probe: format identification + pixel
   * dimensions parsed directly from binary headers — no codec library, no
   * decompression. This is the real first stage of a multimodal ingestion
@@ -21,18 +42,11 @@ package graft.operators
   * in this container); header parsing needs none of it.
   */
 object MediaProbe {
+  import Bytes._
 
   final case class Probe(format: String, width: Int, height: Int)
 
   private val Unknown = Probe("unknown", -1, -1)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def beU16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-  private def leU16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def beU32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-  private def leI32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
 
   def probe(b: Array[Byte]): Probe =
     if (b.length >= 24 &&
@@ -79,6 +93,7 @@ object MediaProbe {
   * stub boundary as pixel decode.
   */
 object AudioProbe {
+  import Bytes._
 
   /** nSamples / sampleRate etc. are -1 when the container doesn't carry
     * them without decode (flac/ogg/mp3 here) or the file is corrupt.
@@ -91,15 +106,6 @@ object AudioProbe {
       nSamples: Long)
 
   private val Unknown = Audio("unknown", -1, -1, -1, -1L)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def leU16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    u8(b, i).toLong | (u8(b, i + 1).toLong << 8) | (u8(b, i + 2).toLong << 16) |
-      (u8(b, i + 3).toLong << 24)
-  private def tag(b: Array[Byte], i: Int, s: String): Boolean =
-    b.length >= i + 4 && b(i) == s(0).toByte && b(i + 1) == s(1).toByte &&
-      b(i + 2) == s(2).toByte && b(i + 3) == s(3).toByte
 
   def probe(b: Array[Byte]): Audio =
     if (tag(b, 0, "RIFF") && tag(b, 8, "WAVE")) wav(b)
@@ -181,6 +187,7 @@ object AudioProbe {
   * filters (duration caps, aspect-ratio gates, format routing) read.
   */
 object VideoProbe {
+  import Bytes._
 
   /** `timescale`/`durationMs`/`width`/`height` are -1 where the container
     * doesn't carry them without decode (avi/mkv here) or the file is
@@ -195,15 +202,6 @@ object VideoProbe {
       height: Int)
 
   private val Unknown = Video("unknown", "", -1, -1L, -1, -1)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def beU32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-  private def beU64(b: Array[Byte], i: Int): Long =
-    (beU32(b, i) << 32) | beU32(b, i + 4)
-  private def tag(b: Array[Byte], i: Int, s: String): Boolean =
-    i >= 0 && b.length >= i + 4 && b(i) == s(0).toByte && b(i + 1) == s(1).toByte &&
-      b(i + 2) == s(2).toByte && b(i + 3) == s(3).toByte
 
   def probe(b: Array[Byte]): Video =
     if (tag(b, 4, "ftyp")) mp4(b)
@@ -359,6 +357,7 @@ object VideoProbe {
   * DuckDB oracle from the same synthesis formula.
   */
 object ImageCodec {
+  import Bytes.leI32
 
   val W = 8
   val H = 8
@@ -433,11 +432,9 @@ object ImageCodec {
     */
   def aHash(b: Array[Byte]): Long = {
     require(b.length >= 54 && b(0) == 'B' && b(1) == 'M', "not a BMP")
-    def leI32(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    val off = leI32(10)
-    val w = leI32(18)
-    val rawH = leI32(22)
+    val off = leI32(b, 10)
+    val w = leI32(b, 18)
+    val rawH = leI32(b, 22)
     val h = math.abs(rawH)
     val bottomUp = rawH > 0
     require(w == W && h == H, s"aHash expects ${W}x$H, got ${w}x$h")
@@ -483,6 +480,7 @@ object ImageCodec {
   * doc_id + fixed-width metadata ever reach a shuffle.
   */
 object PngCodec {
+  import Bytes.beI32
   import java.util.zip.{CRC32, Deflater, Inflater}
 
   val W: Int = ImageCodec.W
@@ -496,9 +494,6 @@ object PngCodec {
       nChunks: Int,
       crcOk: Boolean,
       hash: Long)
-
-  private def beI32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
   private def chunk(bb: java.nio.ByteBuffer, typ: String, data: Array[Byte]): Unit = {
     val t = typ.getBytes("US-ASCII")

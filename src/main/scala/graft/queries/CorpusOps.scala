@@ -1975,18 +1975,20 @@ object CorpusOps {
     // pipeline (measured +0.4 s at sf0.1), with an EAGER mark the
     // materialization is one extra driver action.
     val small = scored.select(col("doc_id"), col("nll")).localCheckpoint(eager = false)
-    // No checkpoint on the ranged frame: its two consumers (the offset
-    // table and the rank join) are identical canonical subtrees, so AQE
-    // stage reuse computes the range exchange once — and even if a
-    // consumer recomputed it, the result is deterministic end to end
-    // (pinned input blocks, RangePartitioner's fixed per-partition
-    // sampling seeds, a strict (nll, doc_id) sort, and
-    // monotonically_increasing_id assigned after that sort), so both
-    // reads see the same (pid, mid) layout either way.
+    // The ranged frame is pinned the same lazy way: its two consumers
+    // (the offset table and the rank join) must see ONE (pid, mid)
+    // layout, and a recomputed range exchange need not give it —
+    // RangePartitioner seeds its boundary sample from the RDD id, so a
+    // second exchange (exchange reuse off or defeated) can pick other
+    // boundaries and the rank join then drops or misranks rows. The
+    // mark fixes the boundaries once, when the checkpoint RDD is built,
+    // and the offset table's broadcast job materializes the blocks the
+    // rank join then reads.
     val ranged = small
       .repartitionByRange(col("nll"), col("doc_id"))
       .sortWithinPartitions(col("nll"), col("doc_id"))
       .withColumn("mid", monotonically_increasing_id())
+      .localCheckpoint(eager = false)
     val pid = shiftright(col("mid"), 33)
     val localIdx = col("mid").bitwiseAND(lit((1L << 33) - 1))
     val wOff = Window.orderBy("pid")

@@ -1441,9 +1441,7 @@ object LlmOps {
     val e = Tables.embeddings(spark, sfDir)
     val q = withSigs(e)
       .where(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb") +: bandStructs.zipWithIndex.map {
-        case (c, b) => c.as(s"bk$b")
-      }: _*)
+      .select(bandStructs.zipWithIndex.map { case (c, b) => c.as(s"bk$b") }: _*)
     val masks = spark
       .range(1 << 16)
       .select(col("id").cast("int").as("mask"))
@@ -1463,10 +1461,19 @@ object LlmOps {
       .join(broadcast(probes), Seq("band", "key"), "left_semi")
       .select("vec_id")
       .distinct()
-    val qEmb = q.select("q_emb")
-    e.select(col("vec_id"), col("label"), col("embedding"))
-      .join(candidates, "vec_id")
-      .crossJoin(broadcast(qEmb))
+    annRerank(e, candidates)
+  }
+
+  /** The exact rerank every single-query ANN entry ends in — the engine
+    * twin of [[ANN_RERANK_TAIL]]: fixed-point cosine of each candidate
+    * vector against vec 0, top 10 by (sim DESC, vec_id). `cand` holds
+    * distinct `vec_id`s; embeddings join back by id, so only the
+    * candidates' vectors are read for scoring (TakeOrdered k-merge).
+    */
+  private def annRerank(e: DataFrame, cand: DataFrame): DataFrame = {
+    val q = e.where(col("vec_id") === 0).select(col("embedding").as("q_emb"))
+    e.join(cand.select("vec_id"), "vec_id")
+      .crossJoin(broadcast(q))
       .select(
         col("vec_id"),
         col("label"),
@@ -1474,6 +1481,8 @@ object LlmOps {
       .orderBy(col("sim").desc, col("vec_id").asc)
       .limit(10)
   }
+
+  private val RecallQueries = 5 // the eval batch: vec_ids 0..4 query the rest
 
   /** ANN recall@10 evaluation harness — the measurement loop that makes
     * an ANN index deployable (the `q_dedup_near_eval` idea applied to
@@ -1506,11 +1515,16 @@ object LlmOps {
     * ONE definition so the matrix rows cannot drift: exact brute-force
     * top-k per query, candidate-restricted rerank (the production plan
     * shape — not a filtered copy of the exact scan), per-query hit
-    * count, candidate count, and recall. `cand` must already be
-    * materialized by the caller (localCheckpoint) — it feeds both the
-    * rerank and the candidate count.
+    * count, candidate count, and recall over the [[RecallQueries]]-query
+    * batch, for a (q_id, vec_id) `candidates` frame.
     */
-  private def recallReadout(data: DataFrame, q: DataFrame, cand: DataFrame, k: Int): DataFrame = {
+  private def recallReadout(e: DataFrame, candidates: DataFrame): DataFrame = {
+    val k = 10
+    val data = e.where(col("vec_id") >= RecallQueries)
+    val q = e
+      .where(col("vec_id") < RecallQueries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val cand = candidates.localCheckpoint() // feeds both the rerank and the candidate count
     val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
     val exact = data
       .crossJoin(broadcast(q))
@@ -1542,27 +1556,21 @@ object LlmOps {
   }
 
   def qAnnRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val nQ = 5
     val e = Tables.embeddings(spark, sfDir)
-    val data = e.where(col("vec_id") >= nQ)
-    val q = e
-      .where(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val masks = spark
       .range(1 << 16)
       .select(col("id").cast("int").as("mask"))
       .where(bit_count(col("mask")) <= 2)
-    val probes = withSigs(e.where(col("vec_id") < nQ))
+    val probes = withSigs(e.where(col("vec_id") < RecallQueries))
       .select(col("vec_id").as("q_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("q_id"), col("bk.band").as("band"), col("bk.key").as("key"))
       .crossJoin(masks)
       .select(col("q_id"), col("band"), col("key").bitwiseXOR(col("mask")).as("key"))
-    val cand = bandedIndex(data)
+    val cand = bandedIndex(e.where(col("vec_id") >= RecallQueries))
       .join(broadcast(probes), Seq("band", "key"))
       .select("q_id", "vec_id")
       .distinct()
-      .localCheckpoint() // feeds both the rerank and the candidate count
-    recallReadout(data, q, cand, k = 10)
+    recallReadout(e, cand)
   }
 
   /** ANN recall@10 for the IVF index — [[qAnnRecall]]'s harness applied
@@ -1577,49 +1585,12 @@ object LlmOps {
     * fraction (≈ NProbe/K of the corpus) — the harness shows which buys
     * more recall per candidate on THIS corpus.
     *
-    * Scale shape: identical to the pieces it composes — the build is
-    * [[ivfTrain]]'s two bounded Lloyd rounds, probes are driver-side
-    * model math (nQ×K fixed-point distances), candidates flow through
-    * one broadcast (q_id, cid) join against the assignment frame, and
-    * only the exact truth arm scans all pairs (the harness's job; run
-    * sampled in production).
+    * Scale shape: the candidate stage is [[ivfCandidates]]; only the
+    * exact truth arm scans all pairs (the harness's job; run sampled in
+    * production).
     */
-  def qAnnRecallIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val nQ = 5
-    val K = 16
-    val NProbe = 4
-    val e = Tables.embeddings(spark, sfDir)
-    val data = e.where(col("vec_id") >= nQ)
-    val q = e
-      .where(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    // corpus-only IVF index; seeds are the first K corpus ids (nQ..nQ+K-1)
-    val cents = ivfTrain(spark, e, data, seedLo = nQ, k = K)
-    val assigned = ivfAssign(spark, data, cents)
-    // per-query probe set: driver-side fixed-point distances over nQ×K
-    // model cells (same arithmetic the generated oracle's pd CTE replays)
-    import spark.implicits._
-    val probePairs = e
-      .where(col("vec_id") < nQ)
-      .select("vec_id", "embedding")
-      .orderBy("vec_id")
-      .collect()
-      .toIndexedSeq
-      .flatMap { r =>
-        val qid = r.getLong(0)
-        val qv = r.getSeq[Float](1)
-        cents
-          .sortBy(c => (ivfProbeDist(c._2, qv), c._1))
-          .take(NProbe)
-          .map(c => (qid, c._1))
-      }
-    val probeDf = probePairs.toDF("q_id", "cid")
-    val cand = assigned
-      .join(broadcast(probeDf), "cid")
-      .select("q_id", "vec_id")
-      .localCheckpoint() // feeds both the rerank and the candidate count
-    recallReadout(data, q, cand, k = 10)
-  }
+  def qAnnRecallIvf(spark: SparkSession, sfDir: String): DataFrame =
+    recallReadout(Tables.embeddings(spark, sfDir), ivfCandidates(spark, sfDir, RecallQueries))
 
   /** ANN recall@10 for the PQ index — the harness applied to the third
     * index family, completing the recall-vs-candidate-count matrix
@@ -1632,68 +1603,12 @@ object LlmOps {
     * constant-budget candidate set buys vs LSH's variable ball and
     * IVF's cluster fraction.
     *
-    * Scale shape: the build is [[pqTrain]]'s bounded Lloyd rounds; the
-    * per-query LUTs are nQ×8×16 driver-side cells broadcast as one tiny
-    * frame; the ADC scan is one broadcast join + (q_id, vec_id) partial
-    * agg over 4-bit codes (never embeddings); only the exact truth arm
-    * scans all pairs (the harness's job, sampled in production).
+    * Scale shape: the candidate stage is [[pqAdcCandidates]]; only the
+    * exact truth arm scans all pairs (the harness's job, sampled in
+    * production).
     */
-  def qAnnRecallPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val nQ = 5
-    val e = Tables.embeddings(spark, sfDir)
-    val data = e.where(col("vec_id") >= nQ)
-    val q = e
-      .where(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    // feeds both the rerank and the candidate count
-    val cand = pqAdcCandidates(spark, sfDir).localCheckpoint()
-    recallReadout(data, q, cand, k = 10)
-  }
-
-  /** The ADC candidate stage of [[qAnnRecallPq]], pre-checkpoint —
-    * package-visible so PlanSpec can pin its physical shape: the
-    * ascending-distance top-50 ranks through the native bounded-heap
-    * [[graft.plans.GroupTopK]] (ASC form — one hash exchange + 50-slot
-    * heaps) instead of a WindowExec FULL sort of the (nQ×N) distance
-    * frame across only nQ partitions — the parallelism collapse the r10
-    * verdict flagged. SQL/window users writing the equivalent
-    * `row_number() OVER (ORDER BY adc ASC, vec_id ASC)` shape get the
-    * same operator via the generalized WindowTopKRule in
-    * extension-configured sessions (pinned in ExtensionsSpec).
-    */
-  private[graft] def pqAdcCandidates(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val nQ = 5
-    val e = Tables.embeddings(spark, sfDir)
-    val data = e.where(col("vec_id") >= nQ)
-    // corpus-only codebook; seeds are the first PqK corpus ids (nQ..nQ+15).
-    // NOT checkpointed despite 5 references (r17 A/B): materializing the
-    // exploded subvector rows measured +0.5 s warm min-of-4 vs letting
-    // each reference re-run the column-pruned scan + slice projection —
-    // block-store float-array round-trips cost more than the re-derive.
-    val sv = pqSubvectorsFrom(data)
-    val codebook = pqTrain(spark, e, sv, seedLo = nQ)
-    // per-query LUTs: nQ×PqM×PqK driver-side cells, broadcast as one frame
-    val lut = e
-      .where(col("vec_id") < nQ)
-      .select("vec_id", "embedding")
-      .orderBy("vec_id")
-      .collect()
-      .toIndexedSeq
-      .flatMap { r =>
-        val qid = r.getLong(0)
-        val qv = r.getSeq[Float](1)
-        codebook.map { case (m, code, cw) => (qid, m, code, pqLutMicro(qv, m, cw)) }
-      }
-      .toDF("q_id", "m", "code", "d_micro")
-    val adc = pqAssign(sv, codebook.toDF("m", "code", "cw"))
-      .join(broadcast(lut), Seq("m", "code"))
-      .groupBy("q_id", "vec_id")
-      .agg(sum(col("d_micro")).as("adc"))
-    graft.plans.GroupTopK
-      .topk(adc, "q_id", "adc", "vec_id", 50, "rk", orderAsc = true)
-      .select("q_id", "vec_id")
-  }
+  def qAnnRecallPq(spark: SparkSession, sfDir: String): DataFrame =
+    recallReadout(Tables.embeddings(spark, sfDir), pqAdcCandidates(spark, sfDir, RecallQueries))
 
   /** Matryoshka (prefix-dimension) retrieval eval: rank by cosine over
     * only the FIRST [[MrlPrefixDims]] of the 64 embedding dims, and score
@@ -1749,205 +1664,66 @@ object LlmOps {
       .orderBy("q_id")
   }
 
-  /** ANN via IVF (inverted file): k-means-lite centroids (deterministic
-    * init from vec_id 1..K, two Lloyd iterations with exact decimal-mean
-    * centroid updates), every vector assigned to its nearest centroid,
-    * query probes the NProbe nearest clusters, exact cosine rerank of
-    * only those clusters' vectors. The industry-standard dense-ANN shape
-    * next to the LSH probe-ball of `q_sim_ann`: at 100 TB the assignment
-    * is one linear N×K pass, the vector table is stored partitioned by
-    * cluster id, and a query reads NProbe/K of the corpus.
-    *
-    * Model state (K centroids = K×64 floats) is bounded and driver-side
-    * by design — the standard k-means pattern; nothing unbounded is ever
-    * collected. Oracle-verified since round 7: the whole build replays in
-    * generated SQL with the 2 Lloyd iterations unrolled as CTEs (see
-    * [[ivfOracle]], the `q_embed_pca` unrolled-iteration precedent).
+  // ----------------------------------------------------- k-means index builds
+
+  private val EmbDim = 64 // embedding width of every fixture
+
+  /** One (m, code, codeword) row per trained codeword: IVF centroids are
+    * the codewords of the single full-width subspace m = 0, the PQ
+    * codebook is [[PqK]] codewords in each of [[PqM]] subspaces.
     */
-  /** IVF nearest-centroid assignment as one partial-aggregable min_by
-    * pass (N×K rows in, map-side combine, no window sort/exchange); the
-    * (dist, cid) ordering struct keeps the tiebreak deterministic —
-    * identical to the row_number-over-(dist asc, cid asc) formulation it
-    * replaces. Package-visible so PlanSpec can assert the no-Window shape.
+  private[queries] type Codebook = Seq[(Int, Int, Seq[Float])]
+
+  /** (vec_id, m, sv) k-means points: each embedding of `corpus` splits
+    * into `nSub` contiguous slices of `EmbDim / nSub` dims — one
+    * full-width point per vector for IVF (`nSub` = 1), [[PqM]] 8-dim
+    * subvectors for PQ.
     */
-  private[graft] def ivfAssign(
-      spark: SparkSession,
-      e: DataFrame,
-      cents: Seq[(Int, Seq[Float])]): DataFrame = {
-    import spark.implicits._
-    // Reduced ordering key (r17, guide step 4): the full squared distance
-    // |v|² − 2v·c + |c|² is only ever an argmin order within a vec_id
-    // group, and |v|² is constant within the group — dropping it cannot
-    // reorder candidates. The key is built from the RAW ScaledDot LONGs
-    // (|c|²_raw − 2·⟨v,c⟩_raw), so the engine-side comparison is exact
-    // integer arithmetic: on the 1e-12 quantization grid the true order
-    // equals the full-distance order term for term, and the descaled
-    // DOUBLE keys both engines previously compared carry < half-grid
-    // rounding error, so distinct-key comparisons agree with the exact
-    // order everywhere. The only theoretical divergence surface vs the
-    // oracle's full-distance double replay is an EXACT rational tie
-    // between two codewords (both formulations then fall to noise/cid
-    // tiebreaks) — absent in every fixture (hash-PASS sf0.001/sf0.01).
-    // |c|² is computed once per centroid on the K-row broadcast side;
-    // the N×K hot projection runs ONE ScaledDot (was three).
-    val cDf = broadcast(
-      cents
-        .toDF("cid", "cvec")
-        .withColumn("cvec", col("cvec").cast("array<float>"))
-        .withColumn("cn", graft.functions.ScaledDot.dotRaw(col("cvec"), col("cvec"))))
-    // exact only while |⟨v,c⟩| < ~4.6e6 (see ScaledDot.dotRaw): the
-    // long key overflows past it
-    e.crossJoin(cDf)
-      .withColumn(
-        "dist",
-        col("cn") - lit(2L) * graft.functions.ScaledDot.dotRaw(col("embedding"), col("cvec")))
-      .groupBy("vec_id")
-      .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cid"))
-  }
-
-  /** Test probe: the IVF assignment plan against a fixed 2-centroid
-    * model — exposes [[ivfAssign]]'s plan shape without running the
-    * k-means build.
-    */
-  private[graft] def ivfAssignmentPlanProbe(spark: SparkSession, sfDir: String): DataFrame =
-    ivfAssign(
-      spark,
-      Tables.embeddings(spark, sfDir),
-      Seq(0 -> Seq.fill(64)(0.1f), 1 -> Seq.fill(64)(-0.1f)))
-
-  /** Deterministic IVF centroid build over `corpus`: seeds are the
-    * vectors with `vec_id` in `[seedLo, seedLo + K)` (in id order), then
-    * 2 Lloyd iterations of [[ivfAssign]] + exact decimal means (davg
-    * contract, `.toFloat` model state) — identical across partitionings,
-    * so the generated oracle replays the build bit-for-bit. Driver state
-    * is K×dim floats (bounded model state, not data).
-    */
-  private def ivfTrain(
-      spark: SparkSession,
-      e: DataFrame,
-      corpus: DataFrame,
-      seedLo: Int,
-      k: Int): Seq[(Int, Seq[Float])] = {
-    var cents: Seq[(Int, Seq[Float])] = e
-      .where(col("vec_id").between(seedLo, seedLo + k - 1))
-      .orderBy("vec_id")
-      .collect()
-      .toIndexedSeq
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](r.fieldIndex("embedding"))) }
-    (1 to 2).foreach { _ =>
-      val assigned = ivfAssign(spark, corpus, cents)
-      cents = assigned
-        .join(corpus, "vec_id")
-        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg(Tables.davg(col("x").cast("double")).as("m"))
-        .groupBy("cid")
-        .agg(map_from_arrays(collect_list(col("pos")), collect_list(col("m"))).as("dims"))
-        .collect()
-        .map { r =>
-          val dims = r.getMap[Int, Double](1)
-          (r.getInt(0), (0 until dims.size).map(i => dims(i).toFloat))
-        }
-        .toSeq
-        .sortBy(_._1)
-    }
-    cents
-  }
-
-  /** The fixed-point squared-distance of a query vector to a centroid —
-    * the driver-side probe-selection arithmetic shared by the IVF
-    * entries (scaled-round-sum, so ordering is summation-order-
-    * independent and SQL-replayable).
-    */
-  private def ivfProbeDist(c: Seq[Float], qVec: Seq[Float]): Long =
-    c.zip(qVec).map { case (a, b) =>
-      val d = a.toDouble - b.toDouble
-      graft.functions.ScaledDot.roundHalfAway(d * d * 1e12)
-    }.sum
-
-  def qSimAnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val K = 16
-    val NProbe = 4
-    val e = Tables.embeddings(spark, sfDir)
-    // the index (centroids + assignments) is built over the CORPUS only:
-    // a persisted IVF index cannot depend on the query vector — letting
-    // vec_id 0 train the centroids made probed-cluster contents shift
-    // with the query (the PQ twin always excluded it)
-    val corpus = e.where(col("vec_id") =!= 0)
-
-    def assignTo(cents: Seq[(Int, Seq[Float])]): DataFrame = ivfAssign(spark, corpus, cents)
-
-    // deterministic seed + 2 Lloyd iterations; exact decimal means keep
-    // the centroids identical across partitionings
-    val cents = ivfTrain(spark, e, corpus, seedLo = 1, k = K)
-
-    // probe the NProbe nearest centroids to the query vector (driver-side
-    // model math over K candidates) — scaled-round-sum fixed point, so the
-    // ordering is summation-order-independent and the generated oracle's
-    // `pd` CTE replays it exactly (plain double sums would tie the result
-    // to Scala's left-fold order, which SQL cannot promise)
-    val qVec = e.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val probes =
-      cents.sortBy(c => (ivfProbeDist(c._2, qVec), c._1)).take(NProbe).map(_._1)
-
-    val assigned = assignTo(cents).where(col("cid").isin(probes: _*))
-    val q = e.where(col("vec_id") === 0).select(col("embedding").as("q_emb"))
-    e.where(col("vec_id") =!= 0)
-      .join(assigned, "vec_id")
-      .crossJoin(broadcast(q))
-      .select(
-        col("vec_id"),
-        col("label"),
-        cosSim(col("embedding"), col("q_emb")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(10)
-  }
-
-  // -------------------------------------------------------- product quantization
-
-  private val PqM = 8 // subspaces
-  private val PqK = 16 // codewords per subspace (4-bit codes)
-  private val PqSub = 8 // dims per subspace (64 / PqM)
-
-  /** (vec_id, m, sv) subvector rows for every non-query vector: each
-    * 64-dim embedding splits into [[PqM]] contiguous 8-dim slices.
-    */
-  private def pqSubvectors(e: DataFrame): DataFrame =
-    pqSubvectorsFrom(e.where(col("vec_id") =!= 0))
-
-  /** The subvector explode over an arbitrary corpus frame (the recall
-    * eval excludes the query batch instead of just vec 0).
-    */
-  private def pqSubvectorsFrom(corpus: DataFrame): DataFrame =
+  private def subvectors(corpus: DataFrame, nSub: Int): DataFrame = {
+    val dim = EmbDim / nSub
     corpus
       .select(
         col("vec_id"),
-        explode(sequence(lit(0), lit(PqM - 1))).as("m"),
+        explode(sequence(lit(0), lit(nSub - 1))).as("m"),
         col("embedding"))
       .select(
         col("vec_id"),
         col("m"),
-        slice(col("embedding"), col("m") * PqSub + 1, lit(PqSub)).as("sv"))
+        slice(col("embedding"), col("m") * dim + 1, lit(dim)).as("sv"))
+  }
 
-  /** Nearest-codeword assignment: broadcast the (m, code, cw) codebook,
-    * one `min_by` partial agg per (vec_id, m) — the IVF assignment shape
-    * per subspace, (dist, code) struct tiebreak for determinism. The
-    * oracles replay the FULL squared distance |a|² + |b|² − 2a·b; the
-    * engine orders by the |a|²-reduced key (identical argmin — see the
-    * comment in the body).
+  /** Nearest-codeword assignment of (vec_id, m, sv) points — the one
+    * assignment behind both index builds, both encoders and every Lloyd
+    * round: broadcast the codebook, one partial-aggregable `min_by` pass
+    * per (vec_id, m) (no window sort/exchange), (d, code) ordering struct
+    * for a deterministic tiebreak — identical to the oracles' row_number
+    * over (dist asc, code asc). The oracles replay the FULL squared
+    * distance |v|² + |c|² − 2v·c; the engine orders by a reduced key
+    * (identical argmin — see the body).
     */
-  private def pqAssign(sv: DataFrame, cb: DataFrame): DataFrame = {
-    // Reduced ordering key in RAW ScaledDot LONGs (r17, guide step 4;
-    // the ivfAssign argument applies verbatim): |sv|² is constant
-    // within the (vec_id, m) argmin group, |cw|² is precomputed on the
-    // PqM×PqK-row broadcast side — the 128N-row hot projection runs ONE
-    // ScaledDot (was three) and compares exact integers.
-    val cbn =
-      cb.withColumn("cwn", graft.functions.ScaledDot.dotRaw(col("cw"), col("cw")))
-    // exact only while |⟨sv,cw⟩| < ~4.6e6 (see ScaledDot.dotRaw): the
+  private def assignCodes(spark: SparkSession, points: DataFrame, cb: Codebook): DataFrame = {
+    import spark.implicits._
+    // Reduced ordering key: the full squared distance is only ever an
+    // argmin order within a (vec_id, m) group, and |v|² is constant
+    // within the group — dropping it cannot reorder candidates. The key
+    // is built from the RAW ScaledDot LONGs (|c|²_raw − 2·⟨v,c⟩_raw), so
+    // the comparison is exact integer arithmetic: on the 1e-12
+    // quantization grid its order equals the full-distance order term
+    // for term, and the oracles' descaled DOUBLE distances carry
+    // < half-grid rounding error, so distinct-key comparisons agree
+    // everywhere. The only theoretical divergence is an EXACT rational
+    // tie between two codewords (both formulations then fall to
+    // noise/code tiebreaks) — absent in every fixture (hash-PASS
+    // sf0.001/sf0.01). |c|² is computed once per codeword on the
+    // broadcast side; the hot projection runs ONE ScaledDot per
+    // (point, codeword) pair.
+    val cbn = broadcast(
+      cb.toDF("m", "code", "cw")
+        .withColumn("cwn", graft.functions.ScaledDot.dotRaw(col("cw"), col("cw"))))
+    // exact only while |⟨v,c⟩| < ~4.6e6 (see ScaledDot.dotRaw): the
     // long key overflows past it
-    sv.join(broadcast(cbn), "m")
+    points
+      .join(cbn, "m")
       .select(
         col("vec_id"),
         col("m"),
@@ -1957,31 +1733,43 @@ object LlmOps {
       .agg(min_by(col("code"), struct(col("d"), col("code"))).as("code"))
   }
 
-  /** PQ codebook training shared by [[qSimAnnPq]] and
-    * [[qAnnRecallPq]]: deterministic init (codeword c of subspace m =
-    * seed vector (seedLo+c)'s m-th slice, in id order), two Lloyd
-    * rounds of [[pqAssign]] + exact decimal means (davg contract,
-    * `.toFloat` model state). Driver state is PqM×PqK×PqSub floats.
+  /** Test probe: the IVF assignment plan against a fixed 2-centroid
+    * model — exposes [[assignCodes]]'s plan shape without running the
+    * k-means build.
     */
-  private def pqTrain(
+  private[graft] def ivfAssignmentPlanProbe(spark: SparkSession, sfDir: String): DataFrame =
+    assignCodes(
+      spark,
+      subvectors(Tables.embeddings(spark, sfDir), 1),
+      Seq((0, 0, Seq.fill(EmbDim)(0.1f)), (0, 1, Seq.fill(EmbDim)(-0.1f))))
+
+  /** The one Lloyd trainer behind both index builds: deterministic init
+    * (codeword c of subspace m = the m-th slice of the c-th seed, the
+    * seeds being the points with `vec_id` in `[seedLo, seedLo + k)`
+    * numbered in id order), then 2 rounds of [[assignCodes]] + exact
+    * decimal means (davg contract, `.toFloat` model state) — identical
+    * across partitionings, so [[ivfBuildCtes]] / [[pqBuildCtes]] replay
+    * the build bit-for-bit. A codeword that loses all its members is
+    * dropped, not re-seeded. Driver state is the bounded codebook
+    * (subspaces × k × dims floats), never data.
+    */
+  private[queries] def trainCodebook(
       spark: SparkSession,
-      e: DataFrame,
-      sv: DataFrame,
-      seedLo: Int): Seq[(Int, Int, Seq[Float])] = {
-    import spark.implicits._
-    var codebook: Seq[(Int, Int, Seq[Float])] = e
-      .where(col("vec_id").between(seedLo, seedLo + PqK - 1))
-      .orderBy("vec_id")
+      points: DataFrame,
+      seedLo: Int,
+      k: Int): Codebook = {
+    val seeds = points
+      .where(col("vec_id").between(seedLo, seedLo + k - 1))
+      .select("vec_id", "m", "sv")
       .collect()
       .toIndexedSeq
-      .flatMap { r =>
-        val code = r.getLong(r.fieldIndex("vec_id")).toInt - seedLo
-        val emb = r.getSeq[Float](r.fieldIndex("embedding"))
-        (0 until PqM).map(m => (m, code, emb.slice(m * PqSub, (m + 1) * PqSub)))
-      }
+    val seedCode = seeds.map(_.getLong(0)).distinct.sorted.zipWithIndex.toMap
+    var cb: Codebook = seeds
+      .map(r => (r.getInt(1), seedCode(r.getLong(0)), r.getSeq[Float](2)))
+      .sortBy(c => (c._1, c._2))
     (1 to 2).foreach { _ =>
-      codebook = pqAssign(sv, codebook.toDF("m", "code", "cw"))
-        .join(sv, Seq("vec_id", "m"))
+      cb = assignCodes(spark, points, cb)
+        .join(points, Seq("vec_id", "m"))
         .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy("m", "code", "pos")
         .agg(Tables.davg(col("x").cast("double")).as("mean"))
@@ -1990,13 +1778,92 @@ object LlmOps {
         .groupBy(r => (r.getInt(0), r.getInt(1)))
         .map { case ((m, code), rows) =>
           val byPos = rows.map(r => r.getInt(2) -> r.getDouble(3).toFloat).toMap
-          (m, code, (0 until PqSub).map(byPos))
+          (m, code, (0 until byPos.size).map(byPos))
         }
         .toSeq
-        .sortBy(t => (t._1, t._2))
+        .sortBy(c => (c._1, c._2))
     }
-    codebook
+    cb
   }
+
+  /** The query batch `vec_id < nQ` as driver-side (q_id, vector) pairs in
+    * id order — the input of the IVF probe and PQ LUT model math.
+    */
+  private def queryBatch(e: DataFrame, nQ: Int): IndexedSeq[(Long, Seq[Float])] =
+    e.where(col("vec_id") < nQ)
+      .select("vec_id", "embedding")
+      .orderBy("vec_id")
+      .collect()
+      .toIndexedSeq
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+
+  // ------------------------------------------------------------------- IVF
+
+  private val IvfK = 16 // centroids
+  private val IvfNProbe = 4 // clusters probed per query
+
+  /** The fixed-point squared-distance of a query vector to a centroid —
+    * the driver-side probe-selection arithmetic (scaled-round-sum, so
+    * ordering is summation-order-independent and the oracles' `pd` CTE
+    * replays it exactly; plain double sums would tie the result to
+    * Scala's left-fold order, which SQL cannot promise).
+    */
+  private def ivfProbeDist(c: Seq[Float], qVec: Seq[Float]): Long =
+    c.zip(qVec).map { case (a, b) =>
+      val d = a.toDouble - b.toDouble
+      graft.functions.ScaledDot.roundHalfAway(d * d * 1e12)
+    }.sum
+
+  /** The IVF candidate stage for the query batch `vec_id < nQ`, shared by
+    * [[qSimAnnIvf]] (nQ = 1) and [[qAnnRecallIvf]] (nQ = 5). The index
+    * ([[IvfK]] centroids from [[trainCodebook]] seeded by vec_ids
+    * nQ..nQ+15, plus every corpus vector's assignment) builds over the
+    * corpus `vec_id ≥ nQ` only — a persisted IVF index cannot depend on
+    * its queries. Each query probes its [[IvfNProbe]] nearest centroids
+    * (driver-side model math over nQ×K cells), and the probed clusters'
+    * members flow out as (q_id, vec_id) through one broadcast join
+    * against the assignment frame.
+    */
+  private def ivfCandidates(spark: SparkSession, sfDir: String, nQ: Int): DataFrame = {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sfDir)
+    val points = subvectors(e.where(col("vec_id") >= nQ), 1)
+    val cents = trainCodebook(spark, points, seedLo = nQ, k = IvfK)
+    val probes = queryBatch(e, nQ).flatMap { case (qid, qv) =>
+      cents
+        .sortBy { case (_, cid, c) => (ivfProbeDist(c, qv), cid) }
+        .take(IvfNProbe)
+        .map { case (_, cid, _) => (qid, cid) }
+    }.toDF("q_id", "code")
+    assignCodes(spark, points, cents)
+      .join(broadcast(probes), "code")
+      .select("q_id", "vec_id")
+  }
+
+  /** ANN via IVF (inverted file): k-means-lite centroids (deterministic
+    * init, two Lloyd iterations with exact decimal-mean centroid
+    * updates), every vector assigned to its nearest centroid, the query
+    * probes the [[IvfNProbe]] nearest clusters, exact cosine rerank of
+    * only those clusters' vectors ([[ivfCandidates]] then [[annRerank]]).
+    * The industry-standard dense-ANN shape next to the LSH probe-ball of
+    * `q_sim_ann`: at 100 TB the assignment is one linear N×K pass, the
+    * vector table is stored partitioned by cluster id, and a query reads
+    * NProbe/K of the corpus.
+    *
+    * Model state (K centroids = K×64 floats) is bounded and driver-side
+    * by design — the standard k-means pattern; nothing unbounded is ever
+    * collected. Oracle-verified since round 7: the whole build replays in
+    * generated SQL with the 2 Lloyd iterations unrolled as CTEs (see
+    * [[ivfOracle]], the `q_embed_pca` unrolled-iteration precedent).
+    */
+  def qSimAnnIvf(spark: SparkSession, sfDir: String): DataFrame =
+    annRerank(Tables.embeddings(spark, sfDir), ivfCandidates(spark, sfDir, nQ = 1))
+
+  // -------------------------------------------------------- product quantization
+
+  private val PqM = 8 // subspaces
+  private val PqK = 16 // codewords per subspace (4-bit codes)
+  private val PqSub = EmbDim / PqM // dims per subspace
 
   /** The driver-side PQ distance LUT row for one (query, codeword)
     * cell: the query's m-th slice vs the codeword, float subtraction →
@@ -2010,62 +1877,72 @@ object LlmOps {
     math.round(d * 1e6)
   }
 
+  /** The PQ candidate stage for the query batch `vec_id < nQ`, shared by
+    * [[qSimAnnPq]] (nQ = 1) and [[qAnnRecallPq]] (nQ = 5): the codebook
+    * trains over the query-free corpus `vec_id ≥ nQ` ([[trainCodebook]],
+    * seeds nQ..nQ+15 → codes 0..15), each query's [[PqM]]×[[PqK]]
+    * distance LUT is built driver-side and broadcast as one frame, the
+    * ADC scan is one broadcast join + (q_id, vec_id) partial agg over
+    * 4-bit codes (never embeddings), and the 50 best compressed
+    * distances per query are the candidates. Package-visible so PlanSpec
+    * can pin its physical shape: the ascending-distance top-50 ranks
+    * through the native bounded-heap [[graft.plans.GroupTopK]] (ASC form
+    * — one hash exchange + 50-slot heaps) instead of a WindowExec FULL
+    * sort of the (nQ×N) distance frame across only nQ partitions.
+    * SQL/window users
+    * writing the equivalent `row_number() OVER (ORDER BY adc ASC, vec_id
+    * ASC)` shape get the same operator via the generalized
+    * WindowTopKRule in extension-configured sessions (pinned in
+    * ExtensionsSpec).
+    */
+  private[graft] def pqAdcCandidates(
+      spark: SparkSession,
+      sfDir: String,
+      nQ: Int = RecallQueries): DataFrame = {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sfDir)
+    // NOT checkpointed despite 5 references (r17 A/B): materializing the
+    // exploded subvector rows measured +0.5 s warm min-of-4 vs letting
+    // each reference re-run the column-pruned scan + slice projection —
+    // block-store float-array round-trips cost more than the re-derive.
+    val points = subvectors(e.where(col("vec_id") >= nQ), PqM)
+    val codebook = trainCodebook(spark, points, seedLo = nQ, k = PqK)
+    val lut = queryBatch(e, nQ).flatMap { case (qid, qv) =>
+      codebook.map { case (m, code, cw) => (qid, m, code, pqLutMicro(qv, m, cw)) }
+    }.toDF("q_id", "m", "code", "d_micro")
+    val adc = assignCodes(spark, points, codebook)
+      .join(broadcast(lut), Seq("m", "code"))
+      .groupBy("q_id", "vec_id")
+      .agg(sum(col("d_micro")).as("adc"))
+    graft.plans.GroupTopK
+      .topk(adc, "q_id", "adc", "vec_id", 50, "rk", orderAsc = true)
+      .select("q_id", "vec_id")
+  }
+
   /** ANN via product quantization — the fourth rung of the vector-search
     * ladder (brute force → banded LSH → IVF → PQ), the standard
     * billion-scale memory trade: each vector compresses to [[PqM]]
     * 4-bit codes (32 bits vs 256 bytes — 64×), queries scan CODES with
     * an additive lookup table, and only the ADC top-50 see their full
-    * embeddings again for the exact rerank.
+    * embeddings again for the exact rerank ([[pqAdcCandidates]] then
+    * [[annRerank]]).
     *
-    * Scale shapes, in order: codebook training is [[PqM]] parallel
-    * k-means-lite problems ([[pqTrain]]: deterministic init from
-    * vec_ids 1..16, two Lloyd rounds, exact decimal means — at 100 TB
-    * you train on a `q_sample_hash`-style sample and encode the full
-    * corpus map-side); the trained codebook and the query's distance
-    * LUT are bounded model state (8×16 codewords / 128 doubles)
-    * broadcast like the IVF centroids; ADC scoring is a broadcast join
-    * + one partial-agg shuffle of (vec_id, partial sums) — NO
-    * higher-order functions on the hot path (the LUT lookup is a join,
-    * not an `aggregate` lambda — §6's cliff); rerank joins embeddings
-    * back by id for the top-50 only. Fully oracle-checked:
-    * [[pqOracle]] replays the entire build (the 8 "nested" k-means are
-    * one grouped k-means with `m` as a key) plus LUT/ADC/rerank;
-    * PqSpec additionally pins determinism, code-range, and rerank
-    * recall vs the exact top-k.
+    * Scale shapes: codebook training is [[PqM]] parallel k-means-lite
+    * problems run as one grouped k-means ([[trainCodebook]] with the
+    * subspace `m` as a key — at 100 TB you train on a
+    * `q_sample_hash`-style sample and encode the full corpus map-side);
+    * the trained codebook and the query's distance LUT are bounded model
+    * state (8×16 codewords / 128 doubles) broadcast like the IVF
+    * centroids; ADC scoring is a broadcast join + one partial-agg
+    * shuffle of (vec_id, partial sums) — NO higher-order functions on
+    * the hot path (the LUT lookup is a join, not an `aggregate` lambda —
+    * §6's cliff); rerank joins embeddings back by id for the top-50
+    * only. Fully oracle-checked: [[pqOracle]] replays the entire build
+    * plus LUT/ADC/rerank; PqSpec additionally pins determinism,
+    * code-range, and rerank recall vs the exact top-k.
     */
-  def qSimAnnPq(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val e = Tables.embeddings(spark, sfDir)
-    val sv = pqSubvectors(e)
-
-    // deterministic init: codeword c of subspace m = vec (c+1)'s m-th slice
-    val codebook = pqTrain(spark, e, sv, seedLo = 1)
-    def cbDf = codebook.toDF("m", "code", "cw")
-
-    // query LUT: distance from the query's m-th slice to every codeword
-    // (8×16 driver-side evaluations — bounded model math, like IVF probes)
-    val qEmb = e.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val lut = codebook.map { case (m, code, cw) =>
-      (m, code, pqLutMicro(qEmb, m, cw))
-    }.toDF("m", "code", "d_micro")
-
-    // ADC scan over codes + exact rerank of the top 50
-    val adcTop = pqAssign(sv, cbDf)
-      .join(broadcast(lut), Seq("m", "code"))
-      .groupBy("vec_id")
-      .agg(sum(col("d_micro")).as("adc"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(50)
-    val q = e.where(col("vec_id") === 0).select(col("embedding").as("q_emb"))
-    e.join(adcTop, "vec_id")
-      .crossJoin(broadcast(q))
-      .select(
-        col("vec_id"),
-        col("label"),
-        cosSim(col("embedding"), col("q_emb")).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(10)
-  }
+  def qSimAnnPq(spark: SparkSession, sfDir: String): DataFrame =
+    annRerank(Tables.embeddings(spark, sfDir), pqAdcCandidates(spark, sfDir, nQ = 1))
 
   // ------------------------------------------------------------ text analysis
 

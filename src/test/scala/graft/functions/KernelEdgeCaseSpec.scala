@@ -240,7 +240,7 @@ class KernelEdgeCaseSpec extends SparkSuite {
   }
 
   test("ScaledDot argmin keys keep their order just inside the bound") {
-    // the pqAssign/ivfAssign key |c|²_raw − 2·dotRaw(v, c) at |⟨v,c⟩|
+    // the LlmOps.assignCodes key |c|²_raw − 2·dotRaw(v, c) at |⟨v,c⟩|
     // up to 4.506e6, just inside the ~4.6e6 bound documented on
     // ScaledDot.dotRaw. Integer-valued floats keep every product exact,
     // so the key must equal the exact value and pick the exact nearest
