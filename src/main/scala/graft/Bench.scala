@@ -1,5 +1,7 @@
 package graft
 
+import graft.Sessions.num
+
 import scala.jdk.CollectionConverters._
 
 /** Headline benchmark: runs the bench-flagged Registry queries on
@@ -65,47 +67,22 @@ object Bench {
       .map(_.getCollectionTime)
       .sum
 
-  /** Locale-independent decimal formatting for every machine-parsed line
-    * (the partial-line protocol and the final JSON): Scala's `f`
-    * interpolator uses the DEFAULT locale, so a comma-decimal JVM
-    * (de_DE, fr_FR) would emit `"sec":1,234` — unparseable by the
-    * child-rescue regex and the driver's JSON reader.
-    */
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Dev bisection knob: comma-separated query names; keeps declared order.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
+    val spark = Sessions.local()
     val comp = java.lang.management.ManagementFactory.getCompilationMXBean
     val cls = java.lang.management.ManagementFactory.getClassLoadingMXBean
     // Wall time vs task time: if a query's wall clock is far above
     // (task-runtime sum / cores), the time went to the driver/scheduler,
     // not executor compute — the round-1 mystery this locates.
-    val taskRun = new java.util.concurrent.atomic.AtomicLong
-    val taskCpu = new java.util.concurrent.atomic.AtomicLong
-    val taskCnt = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          taskRun.addAndGet(m.executorRunTime)
-          taskCpu.addAndGet(m.executorCpuTime / 1000000L)
-          taskCnt.incrementAndGet()
-        }
-      }
-    })
-    // Warm the execution infrastructure once (codegen compiler, parquet
-    // reader, shuffle machinery) so the first measured query doesn't
-    // absorb one-time JVM/Spark startup compilation (~4-6 s observed on
-    // whichever query runs first). This is infrastructure warmup, not a
-    // rehearsal of any measured query.
-    spark.range(0, 1000000, 1, 8).selectExpr("sum(id * 2) as s").write.format("noop").mode("overwrite").save()
-    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count()
-      .write.format("noop").mode("overwrite").save()
+    val tally = Sessions.tally(spark)
+    // Warm the execution infrastructure and the parquet reader once, so
+    // the first measured query doesn't absorb one-time JVM/Spark startup
+    // compilation (~4-6 s observed on whichever query runs first).
+    Sessions.warmUp(spark)
+    Sessions.timeNoop(spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count())
     // Shared-JIT warmup battery (r14 ask #5): run the HISTORICAL deopt
     // victims once, untimed, before the clock starts. The documented
     // rotation class (~1 run in 3 shows one query cluster 10-100x slow;
@@ -117,8 +94,7 @@ object Bench {
     // min-of-2 still guards the mid-run cliffs. Disabled for child
     // rescue JVMs (their 240 s cap must go to the rescues) and
     // single-query bisection runs (cold numbers are the point there).
-    if (!sys.env.contains("SPARK_GRAFT_NO_WARMUP") &&
-      !sys.env.contains("SPARK_GRAFT_NO_RESPAWN") && only.isEmpty) {
+    if (!sys.env.contains("SPARK_GRAFT_NO_RESPAWN") && only.isEmpty) {
       val t0 = System.nanoTime()
       // victims list: every entry observed parked 2x+ by the rotation
       // across r12-r14 triples (q_fn_variant's variant-builder paths
@@ -138,7 +114,7 @@ object Bench {
         "q_embed_quantize_binary")
         .foreach { n =>
           Registry.all.collectFirst { case (`n`, q) => q }.foreach { q =>
-            try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            try Sessions.timeNoop(q.fn(spark, sfDir))
             catch { case scala.util.control.NonFatal(_) => () }
           }
         }
@@ -152,25 +128,22 @@ object Bench {
         // one measured attempt; NaN = the attempt threw
         def attempt(i: Int): Double = {
           val (gc0, jit0) = (gcMillis, comp.getTotalCompilationTime)
-          val (tr0, tc0, tn0) = (taskRun.get, taskCpu.get, taskCnt.get)
-          val t0 = System.nanoTime()
-          val succeeded =
-            try {
-              q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              true
-            } catch {
+          val (tr0, tc0, tn0) = (tally.taskRunMs.get, tally.taskCpuMs.get, tally.tasks.get)
+          val dt =
+            try Sessions.timeNoop(q.fn(spark, sfDir))
+            catch {
               case e: Throwable =>
                 System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-                false
+                Double.NaN
             }
-          val dt = (System.nanoTime() - t0) / 1e9
           org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark.sparkContext)
           System.err.println(
             f"[bench] $name#$i $dt%.2f s (gc +${gcMillis - gc0} ms, jit +${comp.getTotalCompilationTime - jit0} ms, " +
               f"codecache ${poolUsed("codeheap") / 1024 / 1024} MB, metaspace ${poolUsed("metaspace") / 1024 / 1024} MB, " +
               s"classes ${cls.getLoadedClassCount}, " +
-              f"tasks ${taskCnt.get - tn0}, taskrun ${(taskRun.get - tr0) / 1000.0}%.1f s, taskcpu ${(taskCpu.get - tc0) / 1000.0}%.1f s)")
-          if (succeeded) dt else Double.NaN
+              f"tasks ${tally.tasks.get - tn0}, taskrun ${(tally.taskRunMs.get - tr0) / 1000.0}%.1f s, " +
+              f"taskcpu ${(tally.taskCpuMs.get - tc0) / 1000.0}%.1f s)")
+          dt
         }
         val d1 = attempt(1)
         if (d1.isNaN) failed :+= name
@@ -202,8 +175,7 @@ object Bench {
     // attempts vs 1.5 s fresh; q_layout_hilbert 3.42/3.42 vs 0.71 fresh)
     // now gets the fresh-JVM re-measure it needs. min-of-2 can't catch
     // that mode: both same-JVM attempts are honestly slow.
-    val stragglerSec = sys.env.getOrElse("SPARK_GRAFT_STRAGGLER_SEC", "3.5").toDouble
-    val stragglers = ok.collect { case (n, v) if v > stragglerSec => n }
+    val stragglers = ok.collect { case (n, v) if v > 3.5 => n }
     if (stragglers.nonEmpty && !sys.env.contains("SPARK_GRAFT_NO_RESPAWN")) {
       System.err.println(
         s"[bench] re-measuring ${stragglers.size} straggler(s) in fresh JVM(s): ${stragglers.mkString(",")}")
@@ -266,7 +238,7 @@ object Bench {
       // task-CPU on a query whose steady state is 1 s); its min-of-2
       // still lands right, but the wall cost must stay bounded — past
       // the cap we keep whatever it already decided
-      val capSec = sys.env.getOrElse("SPARK_GRAFT_CHILD_CAP_SEC", "240").toLong
+      val capSec = 240L
       val done = proc.waitFor(capSec, java.util.concurrent.TimeUnit.SECONDS)
       if (!done) {
         System.err.println(s"[bench] straggler child JVM exceeded $capSec s; killed (partial results kept)")

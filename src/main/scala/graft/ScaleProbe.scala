@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * Usage: ScaleProbe <srcSfDir> <workDir> <factor> [--organic] [query...]
   * (`--organic` switches to the organic-growth synthesis documented at
   * [[organicKeys]]; default is the re-keyed duplication mode.)
-  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SCALEPROBE_OUT (JSON out path).
+  * Env: SPARK_GRAFT_SCALEPROBE_OUT (JSON out path); cores as in
+  * [[Sessions.cpus]].
   */
 object ScaleProbe {
 
@@ -222,9 +223,6 @@ object ScaleProbe {
     // window grid, so the ratio must stay ~linear
     "s_stream_quantile")
 
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   /** Per-copy content synthesis for organic mode; identity for copy 0 so
     * the 1× slice of organic data IS the pristine fixture.
     */
@@ -313,14 +311,8 @@ object ScaleProbe {
   }
 
   /** min-of-2 noop-sink wall time, the Bench measurement discipline. */
-  private def time(q: (SparkSession, String) => DataFrame, spark: SparkSession, dir: String): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      q(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once(), once())
-  }
+  private def time(q: (SparkSession, String) => DataFrame, spark: SparkSession, dir: String): Double =
+    Seq.fill(2)(Sessions.timeNoop(q(spark, dir))).min
 
   def main(args: Array[String]): Unit = {
     val organic = args.contains("--organic")
@@ -328,13 +320,8 @@ object ScaleProbe {
     val Array(srcDir, workDir, factorS) = pos.take(3)
     val factor = factorS.toInt
     val queries = if (pos.length > 3) pos.drop(3).toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.local(cpus)
-    // infrastructure warmup (codegen compiler, parquet reader, noop sink)
-    spark.range(0, 1000000, 1, 8).selectExpr("sum(id * 2) as s")
-      .write.format("noop").mode("overwrite").save()
+    val spark = Sessions.local()
+    Sessions.warmUp(spark)
     inflate(spark, srcDir, workDir, factor, organic)
     val reg = Registry.all.toMap
     var base = Vector.empty[(String, Double)]
@@ -357,10 +344,10 @@ object ScaleProbe {
       }
     }
     def obj(xs: Vector[(String, Double)]): String =
-      xs.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
+      xs.map { case (k, v) => "\"" + k + "\":" + Sessions.num(v) }.mkString("{", ",", "}")
     val json =
       s"""{"factor":$factor,"mode":"${if (organic) "organic" else "dup"}",""" +
-        s""""src":"$srcDir","cpus":$cpus,"base_sec":${obj(base)},""" +
+        s""""src":"$srcDir","cpus":${Sessions.cpus},"base_sec":${obj(base)},""" +
         s""""scaled_sec":${obj(scaled)},"failed":${failed
             .map("\"" + _ + "\"")
             .mkString("[", ",", "]")}}"""

@@ -38,8 +38,8 @@ import org.apache.spark.sql.streaming.Trigger
   *    Recorded.
   *
   * Usage: StreamState <x1SfDir> <x10WorkDir> [entry...]
-  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_STREAMSTATE_OUT (default
-  * STREAMSTATE.json).
+  * Env: SPARK_GRAFT_STREAMSTATE_OUT (default STREAMSTATE.json); cores as
+  * in [[Sessions.cpus]].
   */
 object StreamState {
 
@@ -129,7 +129,7 @@ object StreamState {
     val x1Dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val x10Dir = args.drop(1).headOption.getOrElse("/tmp/graft_x10_r16")
     val only = args.drop(2).toSet
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.local()
     val scratch = new java.io.File(sys.props("java.io.tmpdir"), "graft_streamstate_feed").toString
     val active = probes.filter(p => only.isEmpty || only(p.name))
     var out = Vector.empty[String]

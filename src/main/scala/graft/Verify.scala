@@ -13,7 +13,7 @@ object Verify {
     // the extension tier is ON (see Sessions): the full oracle gate
     // re-ran hash-identical under the rules, which is the strongest
     // semantics-preservation evidence the rule tier has
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // repartition(1), NOT coalesce(1): coalesce collapses the whole
     // upstream pipeline into a single task (observed: interpreted-decimal

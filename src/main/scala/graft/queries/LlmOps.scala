@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.functions.ScaledDot
 import graft.Tables.{davg, dsum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1123,26 +1124,21 @@ object LlmOps {
 
   // ---------------------------------------------------- embedding-cosine dedup
 
-  /** Deterministic, engine-portable dot product — see
-    * [[graft.functions.ScaledDot]] (custom codegen Expression; the
-    * zip_with/aggregate HOF formulation of the same math ran interpreted
-    * at ~190 s for 125k pairs × 64 dims).
-    */
   /** Exact decimal-cored cosine similarity — ONE definition shared by
     * every similarity query so quantization and operation order can't
-    * drift between them (the oracles all replay this exact form).
+    * drift between them (the oracles all replay this exact form). The
+    * dot product is [[graft.functions.ScaledDot]] (custom codegen
+    * Expression; the zip_with/aggregate HOF formulation of the same math
+    * ran interpreted at ~190 s for 125k pairs × 64 dims).
     */
   private[queries] def cosSim(a: Column, b: Column): Column =
-    dotDec(a, b) / (sqrt(dotDec(a, a)) * sqrt(dotDec(b, b)))
-
-  private def dotDec(a: Column, b: Column): Column =
-    graft.functions.ScaledDot.dot(a, b)
+    ScaledDot.dot(a, b) / (sqrt(ScaledDot.dot(a, a)) * sqrt(ScaledDot.dot(b, b)))
 
   private def withNorm(e: DataFrame): DataFrame =
     e.select(
       col("vec_id"),
       col("embedding"),
-      sqrt(dotDec(col("embedding"), col("embedding"))).as("nrm"))
+      sqrt(ScaledDot.dot(col("embedding"), col("embedding"))).as("nrm"))
 
   /** All-pairs exact core of the embedding dedups (package-private so the
     * spec can drive it over a synthetic clustered fixture). Pairs at
@@ -1159,7 +1155,7 @@ object LlmOps {
       .select(
         col("a.vec_id").as("v1"),
         col("b.vec_id").as("v2"),
-        (dotDec(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm")))
+        (ScaledDot.dot(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm")))
           .as("cos"))
       .where(col("cos") >= theta)
       .withColumn("is_near_dup", (col("cos") >= 0.8).cast("int"))
@@ -1219,7 +1215,7 @@ object LlmOps {
       .select(
         col("v1"),
         col("v2"),
-        (dotDec(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("cos"))
+        (ScaledDot.dot(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("cos"))
       .where(col("cos") >= theta)
       .withColumn("is_near_dup", (col("cos") >= 0.8).cast("int"))
       .orderBy("v1", "v2")
@@ -1719,7 +1715,7 @@ object LlmOps {
     // (point, codeword) pair.
     val cbn = broadcast(
       cb.toDF("m", "code", "cw")
-        .withColumn("cwn", graft.functions.ScaledDot.dotRaw(col("cw"), col("cw"))))
+        .withColumn("cwn", ScaledDot.dotRaw(col("cw"), col("cw"))))
     // exact only while |⟨v,c⟩| < ~4.6e6 (see ScaledDot.dotRaw): the
     // long key overflows past it
     points
@@ -1728,7 +1724,7 @@ object LlmOps {
         col("vec_id"),
         col("m"),
         col("code"),
-        (col("cwn") - lit(2L) * graft.functions.ScaledDot.dotRaw(col("sv"), col("cw"))).as("d"))
+        (col("cwn") - lit(2L) * ScaledDot.dotRaw(col("sv"), col("cw"))).as("d"))
       .groupBy("vec_id", "m")
       .agg(min_by(col("code"), struct(col("d"), col("code"))).as("code"))
   }
@@ -1811,7 +1807,7 @@ object LlmOps {
   private def ivfProbeDist(c: Seq[Float], qVec: Seq[Float]): Long =
     c.zip(qVec).map { case (a, b) =>
       val d = a.toDouble - b.toDouble
-      graft.functions.ScaledDot.roundHalfAway(d * d * 1e12)
+      ScaledDot.roundHalfAway(d * d * 1e12)
     }.sum
 
   /** The IVF candidate stage for the query batch `vec_id < nQ`, shared by

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.functions.ScaledDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,15 +45,12 @@ object MiningOps {
   private def cents(c: Column): Column =
     round(c * 100).cast("long")
 
-  private def dotDec(a: Column, b: Column): Column =
-    graft.functions.ScaledDot.dot(a, b)
-
   /** Identical IEEE sequence to the DuckDB oracle's
     * `dot / (sqrt(n1) * sqrt(n2))` (each factor a correctly-rounded op
     * on identical inputs ⇒ bit-identical cosines).
     */
   private def cosOf(ea: Column, eb: Column, na: Column, nb: Column): Column =
-    dotDec(ea, eb) / (na * nb)
+    ScaledDot.dot(ea, eb) / (na * nb)
 
   // ------------------------------------------------------- market basket
 
@@ -853,8 +851,8 @@ object MiningOps {
           cosOf(
             col("embedding"),
             col("cent"),
-            sqrt(dotDec(col("embedding"), col("embedding"))),
-            sqrt(dotDec(col("cent"), col("cent")))),
+            sqrt(ScaledDot.dot(col("embedding"), col("embedding"))),
+            sqrt(ScaledDot.dot(col("cent"), col("cent")))),
           6).as("centroid_cos"))
       .orderBy(col("centroid_cos").asc, col("vec_id").asc)
       .limit(20)
@@ -883,7 +881,7 @@ object MiningOps {
         col("label"),
         col("vec_id"),
         col("embedding"),
-        sqrt(dotDec(col("embedding"), col("embedding"))).as("nrm"))
+        sqrt(ScaledDot.dot(col("embedding"), col("embedding"))).as("nrm"))
     e.as("a")
       .join(
         e.as("b"),

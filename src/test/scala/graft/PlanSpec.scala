@@ -541,8 +541,9 @@ class PlanSpec extends SparkSuite {
     // back to a WindowExec full sort of the (nQ×N) distance frame over
     // only nQ=5 partitions; it must now rank through the native heap
     // (ASC form) — no Window, and no Sort touching the adc distance
-    // column (the only Sort left is pqAssign's group-local SortAggregate
-    // for min_by over struct, which never sees the distance frame)
+    // column (the only Sort left is LlmOps.assignCodes's group-local
+    // SortAggregate for min_by over struct, which never sees the distance
+    // frame)
     val p = finalPlan(graft.queries.LlmOps.pqAdcCandidates(spark, sf001))
     assert(p.contains("GroupTopK"), p)
     assert(!p.contains("Window"), p)

@@ -1,7 +1,8 @@
 #!/bin/bash
-# Plain-java runner for graft mains (Verify/Bench/ScaleProbe callers that
-# must not share CPU with sbt): copies compiled classes to a scratch
-# classpath and applies the build.sbt JVM flags.
+# Plain-java runner for graft mains (Verify/Bench/Explain/ScaleProbe callers
+# that must not share CPU with sbt): copies compiled classes to a scratch
+# classpath and applies the build.sbt JVM flags (heap from
+# SPARK_DRIVER_MEM, default 64g, as in build.sbt).
 # Usage: tools/run_class.sh <mainClass> [args...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -22,6 +23,7 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
 done
 # no exec: the EXIT trap must fire to remove this run's scratch classpath
 java $ADDOPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx64g -XX:ReservedCodeCacheSize=1g \
+  "-Xmx${SPARK_DRIVER_MEM:-64g}" -XX:ReservedCodeCacheSize=1g \
+  -XX:-UseCodeCacheFlushing -XX:CICompilerCount=8 \
   -XX:PerMethodRecompilationCutoff=-1 -XX:PerBytecodeRecompilationCutoff=-1 \
   -cp "$CP:/opt/spark/jars/*" "$MAIN" "$@"

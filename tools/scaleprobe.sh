@@ -1,7 +1,7 @@
 #!/bin/bash
-# Scale-probe runner (round-6 verdict ask #3). MUST NOT run concurrently
-# with sbt (CPU steal — same rule as Bench): copies compiled classes to a
-# scratch classpath and runs plain java with the build.sbt JVM flags.
+# Scale-probe runner (round-6 verdict ask #3): graft.ScaleProbe through
+# tools/run_class.sh (classes snapshot + build.sbt JVM flags). MUST NOT
+# run concurrently with sbt (CPU steal — same rule as Bench).
 # Usage: tools/scaleprobe.sh [factor] [workdir] [extra ScaleProbe args...]
 # (pass --organic as an extra arg for the organic-growth mode; set
 # SCALEPROBE_OUT to redirect the JSON artifact, default SCALEPROBE.json)
@@ -10,29 +10,15 @@ cd "$(dirname "$0")/.."
 FACTOR="${1:-20}"
 WORK="${2:-/tmp/graft_scaleprobe}"
 shift $(( $# > 2 ? 2 : $# ))
-EXTRA=("$@")
-CP=$(mktemp -d /tmp/scaleprobecp.XXXXXX)
-cp -r target/scala-2.13/classes/. "$CP"
-ADDOPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens $p=ALL-UNNAMED"
-done
 # Round-8 postmortem: leftover spill from cert tooling filled the disk and
 # zeroed the round. No exec — the trap must fire even when the JVM is
 # killed or dies, cleaning DuckDB spill (from any oracle step sharing the
-# .tmp) and the inflated scratch data.
+# .tmp).
 # Per-run spill subdir: concurrent cert runs must not delete each
 # other's live spill (each run's trap removes only its own dir).
-# Owner-only trap: this run's spill dir and scratch classpath ONLY — a
-# shared glob here would delete a concurrent run's live spill mid-oracle.
+# Owner-only trap: this run's spill dir ONLY — a shared glob here would
+# delete a concurrent run's live spill mid-oracle.
 export GRAFT_SPILL_DIR="$PWD/.tmp/duckdb_spill.$$"
-trap 'rm -rf "$GRAFT_SPILL_DIR" "$CP"' EXIT
+trap 'rm -rf "$GRAFT_SPILL_DIR"' EXIT
 SPARK_GRAFT_SCALEPROBE_OUT="${SCALEPROBE_OUT:-$PWD/SCALEPROBE.json}" \
-java $ADDOPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx64g -XX:ReservedCodeCacheSize=1g \
-  -XX:PerMethodRecompilationCutoff=-1 -XX:PerBytecodeRecompilationCutoff=-1 \
-  -cp "$CP:/opt/spark/jars/*" graft.ScaleProbe /root/testdata/sf0.1 "$WORK" "$FACTOR" ${EXTRA[@]+"${EXTRA[@]}"}
+  tools/run_class.sh graft.ScaleProbe /root/testdata/sf0.1 "$WORK" "$FACTOR" "$@"
