@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.PrefixScan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1940,82 +1941,29 @@ object CorpusOps {
     * rollup: doc count, nll range, fixed-point mean.
     *
     * Bucketing is `ntile(3)` over the (nll, doc_id) total order — an
-    * exact global rank. The window sorts ONE 16-byte row per DOCUMENT
-    * (not per token; docs ≪ tokens, and the heavy NLL scoring below it is
-    * the usual broadcast-model scan), so the sort is doc-count-bounded;
-    * at true 100 TB corpora production CCNet derives fixed thresholds
-    * from a sampled histogram instead — that variant drops in by
-    * replacing the window with two broadcast threshold scalars, leaving
-    * every other stage untouched. Mean NLL sums the 1e-6-quantized scores
-    * as LONGs (partition-order-proof, house float discipline).
+    * exact global rank, computed by [[graft.operators.PrefixScan]] with
+    * no group, so no task ever sorts the whole corpus. (nll, doc_id) is
+    * a strict total order, so the buckets equal the single-window
+    * `ntile(3)` of the oracle, bucket for bucket. Mean NLL sums the
+    * 1e-6-quantized scores as LONGs (partition-order-proof, house float
+    * discipline).
     */
   def qTextPplBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    val scored = qTextUnigramNll(spark, sfDir)
-    // Exact distributed ntile(3) (r17, guide §2): the former
-    // `ntile(3) OVER (ORDER BY nll, doc_id)` planned a single-partition
-    // WindowExec — one task sorting one row per document, the clearest
-    // scale-killer left in a declared path (billions of rows through one
-    // task at 100 TB). Replacement, bucket-for-bucket identical because
-    // (nll, doc_id) is a strict total order:
-    //   1. range-partition + sort by the window's order key — a parallel
-    //      range exchange instead of the all-to-one exchange;
-    //   2. global rank = per-partition offset + local row index, both
-    //      derived from ONE materialization (monotonically_increasing_id
-    //      encodes (partition << 33) + row index; the checkpoint pins the
-    //      partition layout so the offset table and the rank join read
-    //      the same instance);
-    //   3. ntile arithmetic from (rank, n) directly: with n = 3q + r,
-    //      buckets 1..r take q+1 rows, buckets r+1..3 take q rows.
-    // The offset window runs over ≤ |partitions| rows, not |docs|.
-    // the (doc_id, nll) frame is LAZILY checkpoint-marked before the
-    // range exchange: RangePartitioner's boundary-sampling pass reads
-    // every partition (reservoir per partition), so it both materializes
-    // the mark and computes the boundaries in one pass — without the
-    // mark the sampling job would re-execute the whole NLL scoring
-    // pipeline (measured +0.4 s at sf0.1), with an EAGER mark the
-    // materialization is one extra driver action.
-    val small = scored.select(col("doc_id"), col("nll")).localCheckpoint(eager = false)
-    // The ranged frame is pinned the same lazy way: its two consumers
-    // (the offset table and the rank join) must see ONE (pid, mid)
-    // layout, and a recomputed range exchange need not give it —
-    // RangePartitioner seeds its boundary sample from the RDD id, so a
-    // second exchange (exchange reuse off or defeated) can pick other
-    // boundaries and the rank join then drops or misranks rows. The
-    // mark fixes the boundaries once, when the checkpoint RDD is built,
-    // and the offset table's broadcast job materializes the blocks the
-    // rank join then reads.
-    val ranged = small
-      .repartitionByRange(col("nll"), col("doc_id"))
-      .sortWithinPartitions(col("nll"), col("doc_id"))
-      .withColumn("mid", monotonically_increasing_id())
-      .localCheckpoint(eager = false)
-    val pid = shiftright(col("mid"), 33)
-    val localIdx = col("mid").bitwiseAND(lit((1L << 33) - 1))
-    val wOff = Window.orderBy("pid")
-    val offs = ranged
-      .groupBy(pid.as("pid"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("pid"),
-        (coalesce(
-          sum(col("cnt")).over(wOff.rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L))).as("off"),
-        sum(col("cnt")).over(
-          wOff.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("n"))
-    // integer ntile arithmetic: Spark `/` is double division, so every
-    // quotient is floored back to long explicitly (all operands are
-    // non-negative counts, well inside double's exact-integer range)
+    val scored = qTextUnigramNll(spark, sfDir).select(col("doc_id"), col("nll"))
+    val ranked = PrefixScan(scored, Nil, Seq(col("nll"), col("doc_id")))
+    // ntile(3) from (rank, n): with n = 3q + r, buckets 1..r take q+1
+    // rows and buckets r+1..3 take q rows. Spark `/` is double division,
+    // so every quotient is floored back to long explicitly (all operands
+    // are non-negative counts, well inside double's exact-integer range)
     def idiv(a: Column, b: Column): Column = (a / b).cast("long")
     val r = col("n") % 3
     val q = idiv(col("n") - r, lit(3))
     val cut = (q + 1) * r
-    val rn = col("off") + localIdx + 1
+    val rn = col("rank")
     val bucket = when(rn <= cut, idiv(rn - 1, q + 1) + 1)
       .otherwise(r + idiv(rn - cut - 1, q) + 1)
-    ranged
-      .withColumn("pid", pid)
-      .join(broadcast(offs), "pid")
-      .select(col("doc_id"), col("nll"), bucket.cast("int").as("b"))
+    ranked
+      .select(col("nll"), bucket.cast("int").as("b"))
       .groupBy(col("b"))
       .agg(
         count(lit(1)).as("n_docs"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.ScaledDot
+import graft.operators.PrefixScan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1826,38 +1827,11 @@ object MiningOps {
     * exact integer arithmetic (`cum·5 ≥ total·4` on LONG cents — no
     * 0.8·total double), so the crossover rank is engine-identical.
     *
-    * Scale shape (round 5 — the two-phase DISTRIBUTED prefix sum this
-    * query's round-4 scaladoc promised): a per-segment `row_number` +
-    * running-sum window sorts the whole customer set of each segment on
-    * ~5 tasks, a sort that grows linearly with the corpus. Instead:
-    *   1. range-partition the per-customer spend by the FULL rank key
-    *     (segment, cents desc, custkey) — partitions are contiguous
-    *     slices of the global rank order, each bounded by corpus/N;
-    *   2. local rank/cumsum windows over (segment, partition-slice) —
-    *     every window partition is one bounded slice, never a segment;
-    *   3. per-slice partials (count, sum) — ≤ N·|segments| rows — get
-    *     exclusive prefix offsets via a window over that TINY frame;
-    *   4. offsets broadcast-join back; global rank = slice rank +
-    *     offset, global cumsum = slice cumsum + offset.
-    * The integer crossover test then runs identically. Boundary ties
-    * can't split wrongly: the range key includes the custkey tiebreak,
-    * so the slice order IS the total rank order. The oracle keeps the
-    * naive single-window SQL — rank/cumsum are partition-invariant, so
-    * the hash match proves the offset algebra.
-    *
-    * Slice-evenness caveat (r13 ask #8, honest cost): range bounds come
-    * from `repartitionByRange`'s reservoir SAMPLE of the key
-    * distribution, so a pathological spend distribution (e.g. a massive
-    * tie plateau of equal-cents customers) can land uneven slices — the
-    * worst slice then bounds step 2's sort. CORRECTNESS is unaffected
-    * (the custkey tiebreak keeps every key globally unique, and rank/
-    * cumsum algebra is slice-shape-independent); the cost is one
-    * slower task. The uniqueness of the full key is also why no
-    * salt-within-slice refinement is needed: unlike a hash-skew join,
-    * a unique-key range sort has no single hot KEY, only a mis-sampled
-    * boundary, and `spark.sql.execution.rangeExchange.sampleSizePerPartition`
-    * is the production knob when a known-pathological distribution
-    * needs tighter bounds.
+    * Scale shape: the per-segment rank and running spend come from
+    * [[graft.operators.PrefixScan]] over (segment; cents desc, custkey),
+    * so no sort ever holds a whole segment. The custkey tiebreak makes
+    * the key a strict total order. The oracle keeps the naive
+    * single-window SQL, so the hash match proves the offset algebra.
     */
   def qOrdersPareto(spark: SparkSession, sfDir: String): DataFrame = {
     val spend = Tables
@@ -1867,51 +1841,11 @@ object MiningOps {
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("c_custkey"))
       .agg(sum(cents(col("o_totalprice"))).as("cents"))
-    // localCheckpoint PINS the slice assignment by data (r15 VERDICT —
-    // same hazard class as rankMatrix, QualityOps): both the `local`
-    // rank/cumsum branch and the `offsets` partials branch re-derive
-    // spark_partition_id() from this subplan, and without the pin their
-    // agreement rests on exchange reuse — a canonicalization miss (or
-    // spark.sql.exchange.reuse.enabled=false) would let the range
-    // sampler pick different boundaries per instantiation and silently
-    // corrupt ranks.
-    val sliced = spend
-      .repartitionByRange(col("c_mktsegment"), col("cents").desc, col("c_custkey"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val wLocal = Window
-      .partitionBy("c_mktsegment", "pid")
-      .orderBy(col("cents").desc, col("c_custkey"))
-    val local = sliced
-      .withColumn("lrank", row_number().over(wLocal))
-      .withColumn(
-        "lcum",
-        sum("cents").over(wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // per-slice partials: ≤ shuffle-partitions × segments rows — the tiny
-    // frame whose single-partition window is the whole driver-side cost
-    val wSeg = Window.partitionBy("c_mktsegment").orderBy("pid")
-    val offsets = local
-      .groupBy("c_mktsegment", "pid")
-      .agg(count(lit(1)).as("n_part"), sum("cents").as("c_part"))
-      .select(
-        col("c_mktsegment"),
-        col("pid"),
-        (sum("n_part").over(wSeg) - col("n_part")).as("rank_off"),
-        (sum("c_part").over(wSeg) - col("c_part")).as("cum_off"),
-        sum("c_part").over(Window.partitionBy("c_mktsegment")).as("total"),
-        sum("n_part").over(Window.partitionBy("c_mktsegment")).as("n_customers"))
-    local
-      .join(broadcast(offsets), Seq("c_mktsegment", "pid"))
-      .select(
-        col("c_mktsegment"),
-        col("n_customers"),
-        (col("lrank") + col("rank_off")).as("rank"),
-        (col("lcum") + col("cum_off")).as("cum"),
-        col("total"))
+    PrefixScan(spend, Seq("c_mktsegment"), Seq(col("cents").desc, col("c_custkey")), Seq("cents"))
       .groupBy("c_mktsegment")
       .agg(
-        max(col("n_customers")).as("n_customers"),
-        min(when(col("cum") * 5 >= col("total") * 4, col("rank"))).cast("long").as("pareto_n"))
+        max(col("n")).as("n_customers"),
+        min(when(col("cum_cents") * 5 >= col("total_cents") * 4, col("rank"))).cast("long").as("pareto_n"))
       .select(
         col("c_mktsegment"),
         col("n_customers"),

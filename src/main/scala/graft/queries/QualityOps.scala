@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.PrefixScan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -842,11 +843,11 @@ object QualityOps {
     * aggregation (map-side combined). Everything downstream runs on the
     * distinct-VALUE frame: the D×|types| dense matrix (zero-filled via a
     * broadcast of the ≤|types| type list), per-type strictly-less
-    * running counts as a two-phase distributed prefix sum (bounded
-    * range-partitioned slices — see [[rankMatrix]]; a continuous-valued
-    * metric with D ≈ corpus no longer concentrates a type's D rows in
-    * one window task), and a self-join on value producing D·|types|²
-    * rows folded map-side to the pair frame.
+    * running counts from the range-sliced prefix scan (see
+    * [[rankMatrix]]; a continuous-valued metric with D ≈ corpus no
+    * longer concentrates a type's D rows in one window task), and a
+    * self-join on value producing D·|types|² rows folded map-side to
+    * the pair frame.
     */
   /** Shared rank machinery of the two rank tests
     * ([[qStatsMannWhitney]], [[qStatsKruskal]]): the dense
@@ -855,19 +856,12 @@ object QualityOps {
     * reread it (pair self-join / two grouped folds) and must not rescan
     * events.
     *
-    * The running count is a TWO-PHASE distributed prefix sum (r14 ask
-    * #2 — the `q_orders_pareto` shape, replacing one WindowExec whose
-    * per-type partition held all D rows): range-partition the dense
-    * matrix on the full (et, v) order key — every slice is a contiguous
-    * run of one type's values, bounded by D·|types|/N, and (et, v) is
-    * UNIQUE per row so a slice boundary can never split equal keys —
-    * then local inclusive cumsums per slice, per-slice partials (≤
-    * N·|types| rows) prefix-offset on the tiny frame, offsets broadcast
-    * back, and strictly-less = inclusive − own cnt. A continuous-valued
-    * metric (D ≈ corpus) now sorts in bounded slices instead of one
-    * task per type. The oracle keeps the naive per-type running-count
-    * SQL — prefix sums are partition-invariant, so the hash match
-    * proves the offset algebra.
+    * The running count is [[graft.operators.PrefixScan]] over (type;
+    * value): (et, v) is unique per row, so it is a strict total order,
+    * and strictly-less = inclusive running count − own cnt. A
+    * continuous-valued metric (D ≈ corpus) sorts in bounded slices
+    * instead of one task per type. The oracle keeps the naive per-type
+    * running-count SQL, so the hash match proves the offset algebra.
     */
   private[graft] def rankMatrix(spark: SparkSession, sfDir: String): DataFrame = {
     val vt = Tables
@@ -889,37 +883,8 @@ object QualityOps {
       .crossJoin(broadcast(types))
       .join(vt, Seq("v", "et"), "left")
       .select(col("v"), col("et"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-    // phase 1: contiguous (et, v)-ordered slices, local inclusive cumsum.
-    // localCheckpoint PINS the slice assignment by data (r14 ADVICE): both
-    // branches below re-derive spark_partition_id() from this subplan, and
-    // without the pin their agreement rests on exchange reuse — a
-    // canonicalization miss (or spark.sql.exchange.reuse=false) would let
-    // the range sampler pick different boundaries per instantiation and
-    // silently corrupt lt.
-    val sliced = dense
-      .repartitionByRange(col("et"), col("v"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val wLocal = Window
-      .partitionBy("et", "pid")
-      .orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = sliced.withColumn("lcum", sum("cnt").over(wLocal))
-    // phase 2: per-slice partials → exclusive offsets on the tiny frame
-    // (from the PRE-window frame — the offsets branch needs only sums,
-    // so it must not depend on phase 1's window pass)
-    val wOff = Window.partitionBy("et").orderBy("pid")
-    val offsets = sliced
-      .groupBy("et", "pid")
-      .agg(sum(col("cnt")).as("c_part"))
-      .select(col("et"), col("pid"), (sum("c_part").over(wOff) - col("c_part")).as("cum_off"))
-    local
-      .join(broadcast(offsets), Seq("et", "pid"))
-      .select(
-        col("v"),
-        col("et"),
-        col("cnt"),
-        (col("lcum") + col("cum_off") - col("cnt")).as("lt"))
+    PrefixScan(dense, Seq("et"), Seq(col("v")), Seq("cnt"))
+      .select(col("v"), col("et"), col("cnt"), (col("cum_cnt") - col("cnt")).as("lt"))
       .localCheckpoint()
   }
 

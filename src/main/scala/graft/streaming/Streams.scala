@@ -953,9 +953,11 @@ object Streams {
     * (n, Σv, Σv²) is ADDITIVE over (ts, event_id)-contiguous slices, so
     *   1. range-partition by the full order key (event_type, ts,
     *      event_id) and sort within partitions — each partition is a
-    *      contiguous slice of each type's timeline (the
-    *      `q_orders_pareto` slicing pattern); one eager localCheckpoint
-    *      materializes the sorted slices for both passes;
+    *      contiguous slice of each type's timeline (the slicing of
+    *      [[graft.operators.PrefixScan]], kept separate because this
+    *      fold carries typed (n, Σv, Σv²) state across micro-batches,
+    *      not LONG column sums); one eager localCheckpoint materializes
+    *      the sorted slices for both passes;
     *   2. pass A: per (partition, type) state TOTALS — ≤ parts × types
     *      tiny rows to the driver;
     *   3. exclusive prefix offsets per (partition, type) = the carry

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.DedupClusters
-import org.apache.spark.sql.graftbridge.Bridge
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -80,35 +79,10 @@ class ClusterSpec extends SparkSuite {
     assert(doubled.forall(_.getLong(1) == 1L))
   }
 
-  /** Runs `f` with a listener registered that counts successful Dataset
-    * actions by name (`count`, `collect`, …); returns `f`'s result and
-    * the tally. The listener bus is drained BEFORE registering, so
-    * events still queued from earlier tests' actions are not dispatched
-    * to the new listener, and AFTER `f`, so every event `f` posted has
-    * been counted when the tally is read.
-    */
+  /** [[recordingActions]] tallied by action name (`count`, `collect`, …). */
   private def countingActions[T](f: => T): (T, Map[String, Int]) = {
-    import scala.jdk.CollectionConverters._
-    val byName = new java.util.concurrent.ConcurrentHashMap[String, Integer]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { byName.merge(funcName, 1, _ + _); () }
-      override def onFailure(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    Bridge.drainListeners(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    val out =
-      try {
-        val r = f
-        Bridge.drainListeners(spark.sparkContext)
-        r
-      } finally spark.listenerManager.unregister(listener)
-    (out, byName.asScala.map { case (k, v) => k -> v.intValue }.toMap)
+    val (out, actions) = recordingActions(f)
+    (out, actions.groupBy(_._1).view.mapValues(_.size).toMap)
   }
 
   test("derived budget: a diameter past the 20-round base converges instead of aborting") {

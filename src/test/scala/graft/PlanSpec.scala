@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions: the scale properties the engine claims
@@ -33,6 +37,9 @@ class PlanSpec extends SparkSuite {
     val cut = s.indexOf("== Initial Plan ==")
     if (cut >= 0) s.substring(0, cut) else s
   }
+
+  /** Walks adaptive plans into their query stages. */
+  private object Stages extends AdaptiveSparkPlanHelper
 
   test("interpolate: both neighbor lookups are growing frames — no shrinking re-aggregation (r12)") {
     // the (1, unboundedFollowing) shrinking frame re-aggregates the
@@ -474,17 +481,46 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("pareto prefix sum is range-sliced — no growing per-segment window") {
-    val p = plan(graft.queries.MiningOps.qOrdersPareto(spark, sf001))
-    // phase 1: the big frame must be RANGE-partitioned on the full rank
-    // key, and its rank/cumsum windows partitioned by (segment, slice) —
-    // a window partitioned by the segment alone would be the growing
-    // per-segment sort this plan exists to avoid
-    assert(p.contains("rangepartitioning(c_mktsegment"), p)
-    assert(p.contains("windowspecdefinition(c_mktsegment"), p)
-    assert(p.contains("pid"), p)
-    // phase 4: slice offsets come back via broadcast, not a shuffle join
-    assert(p.contains("BroadcastHashJoin"), p)
+  test("prefix-scan callers are range-sliced with broadcast offsets") {
+    // every plan a caller runs, the pinned slice frame's included: the
+    // slices come from a range exchange on the full (group, order) key,
+    // the offsets return through a broadcast join on the run id, and
+    // every window runs over the per-run partials — a window over the
+    // rows, partitioned by the group alone, would be the growing
+    // per-group sort the operator exists to avoid
+    val callers = Seq(
+      "rangepartitioning(c_mktsegment ASC NULLS FIRST, cents DESC NULLS LAST, c_custkey ASC" ->
+        (() => graft.queries.MiningOps.qOrdersPareto(spark, sf001)),
+      "rangepartitioning(et ASC NULLS FIRST, v ASC" ->
+        (() => graft.queries.QualityOps.rankMatrix(spark, sf001)),
+      "rangepartitioning(nll ASC NULLS FIRST, doc_id ASC" ->
+        (() => graft.queries.CorpusOps.qTextPplBuckets(spark, sf001)))
+    val run = graft.operators.PrefixScan.Run
+    // a window's input: the first node below it that is an aggregate or
+    // has other than one child
+    def input(p: SparkPlan): SparkPlan = p match {
+      case a: BaseAggregateExec => a
+      case s: QueryStageExec => input(s.plan)
+      case _ if p.children.size == 1 => input(p.children.head)
+      case _ => p
+    }
+    callers.foreach { case (rangeKey, build) =>
+      // every action's plan, build-time checkpoints included, which the
+      // DataFrame's own plan shows only as an RDD scan
+      val plans = recordingActions(build().collect())._2.map(_._2.executedPlan)
+      val text = plans.map(_.toString.replaceAll("#\\d+L?", "")).mkString("\n")
+      assert(text.contains(rangeKey), text)
+      assert(text.contains(s"BroadcastHashJoin [$run]"), text)
+      val windows = plans.flatMap(p => Stages.collect(p) { case w: WindowExec => w })
+      assert(windows.nonEmpty, text)
+      windows.foreach { w =>
+        val perRun = input(w.child) match {
+          case a: BaseAggregateExec => a.groupingExpressions.exists(_.references.exists(_.name == run))
+          case _ => false
+        }
+        assert(perRun, s"window over rows, not per-run partials:\n$w")
+      }
+    }
   }
 
   test("vocab pairs partial-aggregate before the shuffle; top-50 is TakeOrdered") {

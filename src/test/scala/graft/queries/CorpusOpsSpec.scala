@@ -708,22 +708,6 @@ class CorpusOpsSpec extends SparkSuite {
     assert(t.getDouble(3) == scored.map(_.getDouble(3)).max)
   }
 
-  test("q_text_ppl_buckets: both rank consumers read one pinned range layout") {
-    // with exchange reuse and AQE off, an unpinned ranged frame plans one
-    // range exchange per consumer, each sampling its own boundaries; the
-    // pinned frame leaves none in the final plan
-    val keys = Seq("spark.sql.exchange.reuse", "spark.sql.adaptive.enabled")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "false"))
-    try {
-      val df = CorpusOps.qTextPplBuckets(spark, sf001)
-      val rows = df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("rangepartitioning(nll"), p)
-      assert(rows.map(_.getLong(1)).sum == CorpusOps.qTextUnigramNll(spark, sf001).count())
-    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   // --------------------------------------------------------- bloom join
 
   test("q_join_bloom equals the plain exact join (FPs removed by join)") {

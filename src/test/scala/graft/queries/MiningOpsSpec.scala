@@ -1067,34 +1067,4 @@ class MiningOpsSpec extends SparkSuite {
     }
     assert(loadings.toSeq == v.toSeq)
   }
-
-  test("two-phase prefix-sum entries are exchange-reuse-independent (r15 verdict #1)") {
-    // Both two-phase range-partitioned prefix sums (q_orders_pareto here,
-    // q_stats_mannwhitney via rankMatrix) derive spark_partition_id() in
-    // two branches of one repartitionByRange subplan. The localCheckpoint
-    // pin makes the slice assignment data, so results must be IDENTICAL
-    // with exchange reuse disabled — without the pin, each branch would
-    // re-instantiate the range sampler (different RDD id -> different
-    // sample seed) and could corrupt ranks/offsets silently.
-    def runBoth(): (Seq[String], Seq[String]) = {
-      def dump(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.collect().map(_.toString).toSeq.sorted
-      (
-        dump(MiningOps.qOrdersPareto(spark, sf001)),
-        dump(graft.queries.QualityOps.qStatsMannWhitney(spark, sf001)))
-    }
-    val (paretoDefault, mwDefault) = runBoth()
-    assert(paretoDefault.nonEmpty && mwDefault.nonEmpty)
-    val key = "spark.sql.exchange.reuse.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val (paretoNoReuse, mwNoReuse) = runBoth()
-      assert(paretoNoReuse == paretoDefault, "q_orders_pareto drifted without exchange reuse")
-      assert(mwNoReuse == mwDefault, "q_stats_mannwhitney drifted without exchange reuse")
-    } finally prev match {
-      case Some(v0) => spark.conf.set(key, v0)
-      case None     => spark.conf.unset(key)
-    }
-  }
 }
