@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,9 +53,9 @@ object BandChecks {
       .agg(
         countDistinct(col("l_partkey")).as("x_parts"),
         countDistinct(col("l_orderkey")).as("x_orders"))
-      .localCheckpoint() // read twice: the count gate and the join
+      .transform(Materialize.eager) // read twice: the count gate and the join
     val nExact = exact.count()
-    val joined = est.join(exact, "l_returnflag").localCheckpoint()
+    val joined = Materialize.eager(est.join(exact, "l_returnflag"))
     val nJoined = joined.count()
     if (nJoined != nExact || nExact == 0L)
       return BandResult("q_agg_approx", "exact countDistinct (same run)",
@@ -93,9 +94,9 @@ object BandChecks {
         percentile(q, lit(0.5 + eps)).as("hi50"),
         percentile(q, lit(0.99 - eps)).as("lo99"),
         percentile(q, lit(math.min(1.0, 0.99 + eps))).as("hi99"))
-      .localCheckpoint() // read twice: the coverage gate and the join
+      .transform(Materialize.eager) // read twice: the coverage gate and the join
     val nExact = exact.count()
-    val joined = est.join(exact, "l_returnflag").localCheckpoint()
+    val joined = Materialize.eager(est.join(exact, "l_returnflag"))
     val nJoined = joined.count()
     if (nJoined != nExact || nExact == 0L)
       return BandResult("q_agg_percentile_approx", "exact percentile at p -/+ 2/acc (same run)",

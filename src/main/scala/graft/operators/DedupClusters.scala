@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * vertex id. Pure DataFrame ops — per iteration one join (edge ⋈ label)
   * and one min-aggregate, both key-equality shuffles; iterations are
   * bounded by the component diameter (near-dup clusters are dense, so
-  * typically 2-3). `localCheckpoint` truncates the lineage each round —
+  * typically 2-3). A [[Materialize]] pin truncates the lineage each round —
   * without it the plan doubles per iteration and the driver dies at
   * scale long before the executors do.
   *
@@ -28,9 +28,8 @@ import org.apache.spark.sql.functions._
   * returns the convergence signal in the same job. One driver action
   * per round, down from two (eager checkpoint job + `take(1)` probe),
   * down from round 2's three (checkpoint + shuffle-join count, 37% of
-  * the whole bench). The fusion applies to the LOCAL checkpoint path
-  * only — the reliable path keeps its eager checkpoint (see
-  * `roundCkpt` for why lazy reliable checkpoints recompute). The loop
+  * the whole bench). Under a checkpoint dir the pin is eager and the
+  * round is two actions ([[Materialize.lazily]] says why). The loop
   * also pays one final no-change round to observe the fixpoint —
   * inherent to synchronous label propagation.
   */
@@ -61,46 +60,14 @@ object DedupClusters {
     *               on that deep-graph path. Non-convergence within the
     *               budget THROWS: at 100 TB no oracle would catch a
     *               silently split component.
-    * @param reliableCheckpoint materialize per-round state through
-    *               `RDD.checkpoint` into `spark.sparkContext
-    *               .setCheckpointDir`'s directory instead of
-    *               `localCheckpoint`'s executor block store. Local blocks
-    *               are faster (no FS round-trip) but die with their
-    *               executor — one lost executor mid-loop kills the job
-    *               unrecoverably. On a multi-hour 100 TB run, set a
-    *               durable checkpoint dir (HDFS/object store) and flip
-    *               this on; the loop itself is unchanged. Throws
-    *               IllegalStateException up front if no checkpoint dir is
-    *               set (Spark's own failure would otherwise surface
-    *               rounds later, mid-job).
     */
   def clusters(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
       roundBudget: Int = 0,
-      reliableCheckpoint: Boolean = false,
       pathDoubling: Boolean = false,
       roundProbe: RoundProbe = noProbe): DataFrame = {
-    if (reliableCheckpoint && pairs.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "DedupClusters(reliableCheckpoint = true) needs " +
-          "spark.sparkContext.setCheckpointDir(...) before the loop starts")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint()
-    // LOCAL path: lazy mark — the caller's next FULL-SCAN action (the
-    // fused convergence count) materializes the block-store checkpoint
-    // in the same job. RELIABLE path: keep the EAGER checkpoint — a
-    // lazy RDD.checkpoint is NOT finalized by the count's job; Spark
-    // writes the checkpoint files in a SEPARATE job that recomputes the
-    // un-persisted aggregation from scratch, so "lazy + count" would
-    // silently run every round twice there (r13 review finding). The
-    // reliable round is therefore two actions (checkpoint job + a cheap
-    // count over the checkpoint files); only the local path gets the
-    // one-action fusion.
-    def roundCkpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint()
-      else df.localCheckpoint(eager = false)
     val edges = pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
@@ -127,8 +94,8 @@ object DedupClusters {
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .distinct()
-    val sym = ckpt(if (pathDoubling) symBase.repartition(col("a")) else symBase)
-    var labels = ckpt(
+    val sym = Materialize.eager(if (pathDoubling) symBase.repartition(col("a")) else symBase)
+    var labels = Materialize.eager(
       sym
         .select(col("a").as("id"))
         .distinct()
@@ -163,7 +130,7 @@ object DedupClusters {
               .select(col("x.id").as("id"), col("y.label").as("label"), lit(false).as("own")))
       // one aggregation computes the new label AND whether it changed:
       // the vertex's own old label is the unique own=true row per id
-      val next = roundCkpt( // local: lazy mark materialized by the count
+      val next = Materialize.lazily( // marked; the count materializes it
         jumped
           .foldLeft(labels.withColumn("own", lit(true)).unionByName(msgs))(_ unionByName _)
           .groupBy("id")

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types._
   *      + offset, cum = local cum + offset.
   *
   * The slices are pinned once: the run frame (step 2) is lazily marked
-  * with `localCheckpoint`, so the partials and the join read ONE slice
+  * by [[Materialize.lazily]], so the partials and the join read ONE slice
   * layout. RangePartitioner seeds its boundary sample from the RDD id,
   * and a second range exchange (exchange reuse off or defeated) could cut
   * other boundaries and misrank rows. The mark is lazy because the
@@ -71,7 +71,7 @@ object PrefixScan {
       .sortWithinPartitions(keys: _*)
       .mapPartitions(scan(group.map(schema.fieldIndex).toArray, sums.map(schema.fieldIndex).toArray))(
         Encoders.row(runSchema))
-      .localCheckpoint(eager = false)
+      .transform(Materialize.lazily)
     val g = group.map(col)
     val byRun = Window.partitionBy(g: _*).orderBy(Run)
     val upTo = byRun.rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.PrefixScan
+import graft.operators.{Materialize, PrefixScan}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -597,11 +597,11 @@ object CorpusOps {
       // referenced by the span agg AND the grid join — uncheckpointed,
       // each reference re-ran the events (type, bucket) aggregation.
       // |types| × slots rows (wall-time-sized, not corpus-sized).
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val span = obs
       .groupBy(col("o_et"))
       .agg(min(col("o_bucket")).as("b0"), max(col("o_bucket")).as("b1"))
-      .localCheckpoint() // ≤|types| rows; grid fan-out rereads this, not events
+      .transform(Materialize.eager) // ≤|types| rows; grid fan-out rereads this, not events
     val grid = Tables.chunkedSlotGrid(
       span.withColumnRenamed("o_et", "event_type"),
       "event_type",
@@ -878,7 +878,7 @@ object CorpusOps {
       // ≤ |days| rows; materialize so the corpus-scale user-keyed agg
       // runs ONCE even though both `tot` and the main chain consume it
       // (mirrors qStatsChi2's cells checkpoint)
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val wPrev = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     val tot = churn.agg(sum("n_churn").as("n_total"))
@@ -1109,7 +1109,7 @@ object CorpusOps {
         Tables
           .events(spark, sfDir)
           .where(col("event_type").isin("click", "purchase")))
-      .localCheckpoint() // read three times: two segment folds + union
+      .transform(Materialize.eager) // read three times: two segment folds + union
     val seg = hllEstimate(regs, Seq("event_type"), "est")
     val union = hllEstimate(
       regs.groupBy("j").agg(max(col("m_rho")).as("m_rho")).withColumn("g", lit(1)),
@@ -1341,7 +1341,7 @@ object CorpusOps {
         when(col("prev").isNull, "new")
           .when(datediff(col("d"), col("prev")) <= 7, "retained")
           .otherwise("resurrected"))
-      .localCheckpoint() // feeds the status counts AND the churn ledger
+      .transform(Materialize.eager) // feeds the status counts AND the churn ledger
     val statusCnt = st
       .groupBy(col("d"), col("status"))
       .agg(count(lit(1)).as("n"))
@@ -1350,7 +1350,7 @@ object CorpusOps {
     // span from the CHECKPOINTED st (same (user_id, d) rows as act) — the
     // old `act.agg` reference re-derived the events distinct a second
     // time (r16, guide §2.4)
-    val span = st.agg(min(col("d")).as("d0"), max(col("d")).as("d1")).localCheckpoint()
+    val span = Materialize.eager(st.agg(min(col("d")).as("d0"), max(col("d")).as("d1")))
     val midChurn = st
       .where(col("prev").isNotNull && datediff(col("d"), col("prev")) > 7)
       .select(date_add(col("prev"), 8).as("d"))
@@ -1901,7 +1901,7 @@ object CorpusOps {
       // model table is referenced by the (N, V) totals AND the per-token
       // log-prob projection — each uncheckpointed reference re-ran the
       // token explode + split join + count shuffle. |train vocab| rows.
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val nv = counts.agg(sum(col("cnt")).as("n"), count(lit(1)).as("v"))
     // Per-TERM micro quantization with INTEGER-only ln arguments and NO
     // final round — the q_text_bigram_nll discipline (r8), applied here
@@ -2015,7 +2015,7 @@ object CorpusOps {
       // referenced by the vocab total (itself read twice — uniL and the
       // unseen-w1 constant) and the denominator projection — three
       // re-derivations of the train-side token agg without this.
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val vocab = uni.agg(count(lit(1)).as("v"))
     // Per-TERM micro quantization (r8, closes the r7 ×10 ln-ulp boundary):
     // lp = round6(ln(cbg+1)) − round6(ln(c1+V)), so ln only ever takes
@@ -2359,7 +2359,7 @@ object CorpusOps {
       .select(
         col("l_returnflag").as("grp"),
         round(col("l_extendedprice") * 100).cast("long").as("v"))
-      .localCheckpoint() // scanned once per pass — materialize the cents once
+      .transform(Materialize.eager) // scanned once per pass — materialize the cents once
     val init = vals
       .groupBy("grp")
       .agg(count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"))
@@ -2522,7 +2522,7 @@ object CorpusOps {
       .withColumn("rn", rank().over(Window.partitionBy("event_type").orderBy(col("h").asc)))
       .where(col("rn") <= k)
       .select(col("event_type").as("et"), col("h"))
-      .localCheckpoint() // ≤|types|·k rows; feeds pair union, common, θ
+      .transform(Materialize.eager) // ≤|types|·k rows; feeds pair union, common, θ
     val tp = kept
       .select(col("et").as("ta"))
       .distinct()
@@ -2558,7 +2558,7 @@ object CorpusOps {
     val exact = ev
       .select(col("user_id"), col("event_type"))
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val exPair = exact
       .select(col("user_id"), col("event_type").as("xa"))
       .join(exact.select(col("user_id"), col("event_type").as("xb")), "user_id")
@@ -2685,7 +2685,7 @@ object CorpusOps {
       .withColumn(
         "dim",
         conv(substring(md5(col("tok").cast("binary")), 1, 4), 16, 10).cast("long") % dims)
-      .localCheckpoint() // vocab-sized; feeds the fold AND the argmax
+      .transform(Materialize.eager) // vocab-sized; feeds the fold AND the argmax
     val wTop = Window.partitionBy("dim").orderBy(col("cnt").desc, col("tok").desc)
     val top = tokCnt
       .withColumn("rn", row_number().over(wTop))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.ScaledDot
+import graft.operators.Materialize
 import graft.Tables.{davg, dsum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -558,7 +559,7 @@ object LlmOps {
     * broadcast anti-join downstream replays from those blocks.
     */
   private def cappedShingles(spark: SparkSession, sfDir: String): DataFrame = {
-    val ex0 = shingles(spark, sfDir).localCheckpoint()
+    val ex0 = Materialize.eager(shingles(spark, sfDir))
     val hot = ex0
       .groupBy("sh")
       .agg(count(lit(1)).as("df"))
@@ -1098,7 +1099,7 @@ object LlmOps {
           array((0 until 4).map(i =>
             shiftrightunsigned(col(sigCol), i * 16).bitwiseAND(lit(0xffffL))): _*))
           .as(Seq("seg", "seg_val")))
-      .transform(s => if (materializeSegs) s.localCheckpoint() else s)
+      .transform(s => if (materializeSegs) Materialize.eager(s) else s)
     val segs = cap.fold(segs0) { c =>
       val ok = segs0
         .groupBy("seg", "seg_val")
@@ -1520,7 +1521,7 @@ object LlmOps {
     val q = e
       .where(col("vec_id") < RecallQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cand = candidates.localCheckpoint() // feeds both the rerank and the candidate count
+    val cand = Materialize.eager(candidates) // feeds both the rerank and the candidate count
     val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
     val exact = data
       .crossJoin(broadcast(q))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.ScaledDot
-import graft.operators.PrefixScan
+import graft.operators.{Materialize, PrefixScan}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,9 +81,9 @@ object MiningOps {
       .lineitem(spark, sfDir)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize.eager)
     // |parts|-row count table: read by both lift factor joins
-    val partCnt = items.groupBy(col("p")).agg(count(lit(1)).as("cnt")).localCheckpoint()
+    val partCnt = Materialize.eager(items.groupBy(col("p")).agg(count(lit(1)).as("cnt")))
     val nOrders = items.select(countDistinct(col("o")).as("n_orders"))
     items
       .as("a")
@@ -1134,7 +1134,7 @@ object MiningOps {
     val span = daily
       .groupBy(col("event_type").as("s_et"))
       .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .localCheckpoint() // ≤|types| rows
+      .transform(Materialize.eager) // ≤|types| rows
     val grid = span.select(
       col("s_et").as("event_type"),
       explode(sequence(col("d0"), col("d1"))).as("d"))
@@ -1556,7 +1556,7 @@ object MiningOps {
     val byClassBucket = cust
       .groupBy("c_nationkey", "c_mktsegment", "bucket")
       .agg(count(lit(1)).as("n_cj"))
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val globalBucket = byClassBucket.groupBy("bucket").agg(sum(col("n_cj")).as("g_j"))
     val totals = byClassBucket
       .groupBy("c_nationkey", "c_mktsegment")
@@ -1676,7 +1676,7 @@ object MiningOps {
       // per-user lead window + transition count is referenced from the
       // out-weight agg, the frac join, and the node list — each
       // uncheckpointed reference re-ran the events window. ≤ |types|² rows.
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
     val frac = edges
       .join(outw, "src")
@@ -1800,7 +1800,7 @@ object MiningOps {
       // is referenced from three plan positions (per-source sizes, both
       // intersection arms) and each uncheckpointed reference re-ran the
       // token explode + distinct shuffle. |sources|×vocab rows.
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val sizes = st.groupBy("source").agg(count(lit(1)).as("vocab"))
     val inter = st
       .as("x")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.PrefixScan
+import graft.operators.{Materialize, PrefixScan}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -266,7 +266,7 @@ object QualityOps {
           .as("digit"))
       .groupBy("digit")
       .agg(count(lit(1)).as("n_obs"))
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val total = counts.agg(sum("n_obs").as("total"))
     benford
       .join(broadcast(counts), Seq("digit"), "left")
@@ -359,7 +359,7 @@ object QualityOps {
     // this (the §4 plan-subtree-reuse rule) — checkpointed, the whole
     // query reads the corpus exactly twice (model pass + explode pass)
     val counts =
-      docs.groupBy(col("lang")).agg(count(lit(1)).as("n_docs")).localCheckpoint()
+      Materialize.eager(docs.groupBy(col("lang")).agg(count(lit(1)).as("n_docs")))
     val tot = counts.agg(sum("n_docs").as("n"))
     val weighted = counts
       .crossJoin(broadcast(tot))
@@ -459,7 +459,7 @@ object QualityOps {
       .agg(
         count(lit(1)).as("c_r"),
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c_t"))
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val tots = model.agg(sum(col("c_r")).as("n_r"), sum(col("c_t")).as("n_t"))
     val llr = model
       .crossJoin(broadcast(tots))
@@ -604,7 +604,7 @@ object QualityOps {
       .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("c_mktsegment").as("seg"), col("n_name").as("nat"))
       .agg(count(lit(1)).as("nij"))
-      .localCheckpoint() // ~125 rows, feeds four downstream aggs
+      .transform(Materialize.eager) // ~125 rows, feeds four downstream aggs
     val segM = cells.groupBy("seg").agg(sum("nij").as("ni"))
     val natM = cells.groupBy("nat").agg(sum("nij").as("nj"))
     val tot = cells.agg(sum("nij").as("n"))
@@ -742,7 +742,7 @@ object QualityOps {
       .where(col("value").isNotNull)
       .groupBy(col("event_type").as("et"))
       .agg(count(lit(1)).as("n"), sum(w).as("sw"), sum(w * w).as("sww"))
-      .localCheckpoint()
+      .transform(Materialize.eager)
   }
 
   /** Guarded exact-decimal M2 numerator `n·Σw² − (Σw)²` (r13 ADVICE #4):
@@ -874,7 +874,7 @@ object QualityOps {
       // value spine, the zero-fill join) and each uncheckpointed reference
       // re-ran the events scan + (value, type) count shuffle. ≤ D×|types|
       // rows of (double, string, long) — executor-local blocks.
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val types = vt.select("et").distinct()
     // dense D×|types| matrix: every (value, type) cell, zero-filled
     val dense = vt
@@ -885,7 +885,7 @@ object QualityOps {
       .select(col("v"), col("et"), coalesce(col("cnt"), lit(0L)).as("cnt"))
     PrefixScan(dense, Seq("et"), Seq(col("v")), Seq("cnt"))
       .select(col("v"), col("et"), col("cnt"), (col("cum_cnt") - col("cnt")).as("lt"))
-      .localCheckpoint()
+      .transform(Materialize.eager)
   }
 
   def qStatsMannWhitney(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1000,7 +1000,7 @@ object QualityOps {
         least(floor(col("value") / 50.0), lit(5.0)).cast("int").as("vb"))
       .groupBy("et", "vb")
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint() // ≤ 30 rows; feeds marginals, total, and the fold
+      .transform(Materialize.eager) // ≤ 30 rows; feeds marginals, total, and the fold
     val rowM = cells.groupBy("et").agg(sum("o").as("rt"))
     val colM = cells.groupBy("vb").agg(sum("o").as("ct"))
     val tot = cells.agg(
@@ -1131,7 +1131,7 @@ object QualityOps {
     val span = b
       .groupBy("event_type")
       .agg(min(col("bucket")).as("b0"), max(col("bucket")).as("b1"), count(lit(1)).as("n_active"))
-      .localCheckpoint() // ≤|types| rows; fan-out + report reread this, not events
+      .transform(Materialize.eager) // ≤|types| rows; fan-out + report reread this, not events
     // chunked fan-out (days → ≤288 in-day slots) via the SHARED
     // Tables.chunkedSlotGrid (one copy of the chunk arithmetic for this
     // and qEventsInterpolate): closes the r12 ADVICE caveat that a

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.Fixpoint
+import graft.operators.{Fixpoint, Materialize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,7 +88,7 @@ object SearchOps {
     val perDoc = tok
       .groupBy("doc_id")
       .agg(count(lit(1)).as("dl"), tfCols: _*)
-      .localCheckpoint()
+      .transform(Materialize.eager)
     val st = perDoc.agg(
       count(lit(1)).as("n"),
       (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
@@ -492,14 +492,12 @@ object SearchOps {
       // Spark re-derives an uncheckpointed subtree at every reference —
       // the r7 fixture refresh made the per-order C(n,2) self-join above
       // expensive enough that those copies dominated the query (6.7 s vs
-      // 2.9 s checkpointed, same fixtures). |E| rows, executor-local
-      // blocks; same fault-tolerance caveat as DedupClusters (an option
-      // for reliable checkpointing exists there for cluster runs).
+      // 2.9 s checkpointed, same fixtures). |E| rows.
       // `materialize = false` for single-reference callers that
       // checkpoint downstream themselves (qGraphCc: DedupClusters
       // checkpoints the symmetrized list immediately — a second
       // materialization here would be pure overhead).
-      .transform(e => if (materialize) e.localCheckpoint() else e)
+      .transform(e => if (materialize) Materialize.eager(e) else e)
   }
 
   /** The adjacency of an undirected (u, v) edge frame: both directions
@@ -569,8 +567,8 @@ object SearchOps {
     * [[graft.operators.DedupClusters]] with pointer doubling. Forest
     * and labels are checkpointed per round — lineage stays flat.
     */
-  /** localCheckpoint + STATS RESET for self-composing loop frames.
-    * `Dataset.localCheckpoint` preserves the source plan's statistics,
+  /** [[Materialize.eager]] + STATS RESET for self-composing loop frames.
+    * A pinned Dataset keeps the source plan's statistics,
     * and Spark's size-only join estimate is the PRODUCT of the child
     * sizes — so a pointer-doubling loop (f ⋈ f each step) SQUARES the
     * sizeInBytes BigInt per iteration: by jump 7 the driver burns tens
@@ -578,11 +576,14 @@ object SearchOps {
     * SizeInBytesOnlyStatsPlanVisitor (jstack-verified; jobs themselves
     * ran in ms). Round-tripping the checkpointed RDD through
     * createDataFrame rebuilds a LogicalRDD with DEFAULT stats, resetting
-    * the exponent each jump. Linear per-round loops (DedupClusters)
-    * only grow the estimate's exponent linearly and don't need this.
+    * the exponent each jump. DedupClusters' pathDoubling loop squares
+    * its estimate too (the round's `msgs` read 29, 44, 73, … 29,397
+    * bits over rounds 0–11 on a 1,024-node path) but is not flattened:
+    * the reset would drop the hash partitioning its exchange-free round
+    * join depends on; a fix must reset the stats and keep it.
     */
   private def ckptFlat(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
+    val ck = Materialize.eager(df)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
@@ -592,12 +593,12 @@ object SearchOps {
     * driver action per probed round (r13 ask #7).
     */
   private def ckptFlatLazy(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(eager = false)
+    val ck = Materialize.lazily(df)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
   def qGraphMst(spark: SparkSession, sfDir: String): DataFrame =
-    boruvka(coPurchaseEdgesWeighted(spark, sfDir).localCheckpoint())
+    boruvka(Materialize.eager(coPurchaseEdgesWeighted(spark, sfDir)))
 
   /** Base Borůvka round budget before the data-derived extension kicks
     * in: covers ~2^14 initial components with zero extra driver
@@ -647,8 +648,8 @@ object SearchOps {
       .unionByName(edges.select(col("v").as("id")))
       .distinct()
       .withColumn("c", col("id"))
-      .localCheckpoint()
-    var mst = edges.limit(0).localCheckpoint()
+      .transform(Materialize.eager)
+    var mst = Materialize.eager(edges.limit(0))
     // monotone upper bound on the current round's pick count — see the
     // fusion comment in the loop body
     var prevChosen = Long.MaxValue
@@ -684,7 +685,7 @@ object SearchOps {
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .drop("rn")
-        .localCheckpoint(eager = false)
+        .transform(Materialize.lazily)
       val fusedPairs: Option[Array[(Long, Long)]] =
         if (prevChosen <= driverPairThreshold)
           Some(chosen.select(col("cc"), col("oc")).collect()
@@ -785,7 +786,7 @@ object SearchOps {
         lab = lab
           .join(f.withColumnRenamed("x", "oldc"), col("c") === col("oldc"), "left")
           .select(col("id"), coalesce(col("fx"), col("c")).as("c"))
-          .localCheckpoint()
+          .transform(Materialize.eager)
       }
       nChosen
     }
@@ -827,8 +828,8 @@ object SearchOps {
     val adj = undirected(e)
     val ranked = adj
       .withColumn("rk", row_number().over(Window.partitionBy("a").orderBy(col("b").asc)) - 1)
-      .localCheckpoint() // referenced once per step; don't re-rank L×
-    val deg = adj.groupBy(col("a").as("dn")).agg(count(lit(1)).as("deg")).localCheckpoint()
+      .transform(Materialize.eager) // referenced once per step; don't re-rank L×
+    val deg = Materialize.eager(adj.groupBy(col("a").as("dn")).agg(count(lit(1)).as("deg")))
     // walk 0 keeps the pinned `c:i` salt; walks ≥ 1 extend it with the
     // walk index (`c:i:w`) for an independent deterministic stream
     def salt(cur: Column, i: Int): Column =
@@ -880,7 +881,7 @@ object SearchOps {
     e.agg(min(col("u")).as("id"))
       .select(col("id"), lit(0).as("d"))
       .where(col("id").isNotNull)
-      .localCheckpoint()
+      .transform(Materialize.eager)
 
   /** One BFS relaxation round: frontier ⋈ adjacency (equi-join on the
     * node id) then fused min-distance aggregation. Exposed so PlanSpec
@@ -921,7 +922,7 @@ object SearchOps {
     // subtrees; reverted
     var dist = bfsSeed(e)
     (1 to hops).foreach { _ =>
-      dist = bfsRound(dist, adj).localCheckpoint()
+      dist = Materialize.eager(bfsRound(dist, adj))
     }
     bfsProfile(dist, adj)
   }
@@ -982,7 +983,7 @@ object SearchOps {
     * explicit final budget (test seam for the throw path).
     */
   private[graft] def bfsFull(e: DataFrame, roundBudget: Int = 0): DataFrame = {
-    val adj = undirected(e).localCheckpoint() // referenced every round — materialize once
+    val adj = Materialize.eager(undirected(e)) // referenced every round — materialize once
     var dist = bfsSeed(e)
     // lazy budget extension: only a graph deeper than the base pays the
     // one adjacency count
@@ -1001,7 +1002,7 @@ object SearchOps {
           min(col("d")).as("d"),
           (min(col("d")) <
             coalesce(max(when(col("own"), col("d"))), lit(Int.MaxValue))).as("chg"))
-        .localCheckpoint(eager = false)
+        .transform(Materialize.lazily)
       dist = next.select("id", "d")
       // the round's ONE action (r13, the DedupClusters fusion): the
       // full-scan count materializes the lazy checkpoint AND returns
@@ -1066,8 +1067,8 @@ object SearchOps {
     val rounds = 4
     var edges = coPurchaseEdges(spark, sfDir)
     val perRound = (1 to rounds).map { r =>
-      val (keep, inducedRaw) = kcoreRound(edges, k, _.localCheckpoint())
-      edges = inducedRaw.localCheckpoint()
+      val (keep, inducedRaw) = kcoreRound(edges, k, Materialize.eager(_))
+      edges = Materialize.eager(inducedRaw)
       keep
         .agg(count(lit(1)).as("n_nodes"))
         .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
@@ -1120,7 +1121,7 @@ object SearchOps {
     * |V|-row frame. Fixed rounds ⇒ the oracle unrolls exactly.
     */
   def qGraphLabelProp(spark: SparkSession, sfDir: String): DataFrame = {
-    val adj = undirected(coPurchaseEdges(spark, sfDir)).localCheckpoint()
+    val adj = Materialize.eager(undirected(coPurchaseEdges(spark, sfDir)))
     lpaLabels(adj, rounds = 4).zipWithIndex
       .map { case (labels, r) =>
         labels
@@ -1155,8 +1156,8 @@ object SearchOps {
       .select(col("a").as("id"))
       .distinct()
       .select(col("id"), col("id").as("lab"))
-      .localCheckpoint()
-    (1 to rounds).scanLeft(singletons)((labels, _) => lpaRound(labels, adj).localCheckpoint())
+      .transform(Materialize.eager)
+    (1 to rounds).scanLeft(singletons)((labels, _) => Materialize.eager(lpaRound(labels, adj)))
   }
 
   /** Newman modularity of the 4-round label-propagation partition —
@@ -1177,7 +1178,7 @@ object SearchOps {
     */
   def qGraphModularity(spark: SparkSession, sfDir: String): DataFrame = {
     val e = coPurchaseEdges(spark, sfDir)
-    val adj = undirected(e).localCheckpoint()
+    val adj = Materialize.eager(undirected(e))
     val labels = lpaLabels(adj, rounds = 4).last
     val lu = labels.select(col("id").as("lu_id"), col("lab").as("lu"))
     val lv = labels.select(col("id").as("lv_id"), col("lab").as("lv"))

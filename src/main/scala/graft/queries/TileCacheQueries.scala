@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.sinks.{LocalFsStore, ObjectSink}
+import graft.sinks.{HadoopFsStore, ObjectSink}
 import graft.tile.{Tile, TileConfig}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -246,7 +246,7 @@ object TileCacheQueries {
       "left_anti")
     val (ok, failed, _) = ObjectSink.write(
       todo,
-      new LocalFsStore(bucket.getAbsolutePath),
+      new HadoopFsStore(s"file://${bucket.getAbsolutePath}"),
       "object_key",
       "content",
       "image/jpg")
@@ -286,6 +286,11 @@ object TileCacheQueries {
     * object in the bucket (every byte XOR 0xFF — length preserved, so
     * the (key, length) quick check cannot see it). Returns the corrupted
     * key. Test seam for the digest-mode entry and TileCacheSpec.
+    *
+    * The bucket is written through Hadoop's checksummed local FS, which
+    * keeps a `.<name>.crc` sidecar per file: dot-files are not objects,
+    * and the corrupted object's sidecar is dropped so a later read sees
+    * the changed bytes instead of failing its checksum.
     */
   private[queries] def corruptFirstObject(bucket: java.io.File): String = {
     import scala.jdk.CollectionConverters._
@@ -294,13 +299,14 @@ object TileCacheQueries {
       .walk(prefix)
       .iterator()
       .asScala
-      .filter(p => java.nio.file.Files.isRegularFile(p))
+      .filter(p => java.nio.file.Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
       .map(p => prefix.relativize(p).toString)
       .filterNot(_.startsWith("_meta/"))
       .minBy(identity)
     val f = prefix.resolve(first)
     val bytes = java.nio.file.Files.readAllBytes(f)
     java.nio.file.Files.write(f, bytes.map(b => (b ^ 0xff).toByte))
+    java.nio.file.Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
     first
   }
 
@@ -341,7 +347,7 @@ object TileCacheQueries {
       .select(objectKey, col("content"), format_string("L%02d", col("level")).as("level_label"))
     ObjectSink.write(
       tiles,
-      new LocalFsStore(bucket.getAbsolutePath),
+      new HadoopFsStore(s"file://${bucket.getAbsolutePath}"),
       "object_key",
       "content",
       "image/jpg",

@@ -45,32 +45,18 @@ object ObjectStore {
   val PublicRead = "public-read"
 }
 
-/** Local-filesystem store: key → file under a root dir. Stands in for a
-  * GCS/S3 client in tests; a cloud deployment swaps in a client-backed
-  * implementation with identical semantics. Content-type and ACL — which a
-  * filesystem cannot carry natively — are recorded per object under
-  * `_meta/<key>` ("_"-prefixed so Spark's file listing never mistakes the
-  * sidecars for objects), letting tests assert the full PUT contract.
-  */
-final class LocalFsStore(root: String) extends ObjectStore {
-  override def put(key: String, bytes: Array[Byte], contentType: String, acl: String): Unit = {
-    val f = new java.io.File(root, key)
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, bytes)
-    val m = new java.io.File(new java.io.File(root, "_meta"), key)
-    m.getParentFile.mkdirs()
-    java.nio.file.Files.write(m.toPath, s"content-type=$contentType\nacl=$acl\n".getBytes("UTF-8"))
-  }
-}
-
 /** Hadoop-FileSystem-backed store: the cloud swap-in. The same code path
   * writes `file://` in tests and `gs://` / `s3a://` in a deployment purely
   * by root-URI (plus the usual fs.* credentials config) — demonstrating
   * that nothing in the sink is local-fs-specific. Object bytes go to
-  * `<root>/<key>`; content-type and ACL travel as the same `_meta/<key>`
-  * sidecar convention as [[LocalFsStore]] (connector-level canned ACLs —
+  * `<root>/<key>`; content-type and ACL, which a filesystem cannot carry
+  * natively, are recorded per object under `_meta/<key>` ("_"-prefixed so
+  * Spark's file listing never mistakes the sidecars for objects), letting
+  * tests assert the full PUT contract (connector-level canned ACLs —
   * `fs.gs.bucket.*`, `fs.s3a.acl.default` — are cluster config, applied at
-  * the connector below this API).
+  * the connector below this API). Over `file://` Hadoop's checksummed
+  * local FS also writes a `.<name>.crc` per file; Spark's listing skips
+  * those dot-files too.
   *
   * One `FileSystem` per partition-task (the handle is created lazily on
   * the executor, never serialized from the driver), matching the

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Materialize
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -956,7 +957,7 @@ object Streams {
     *      contiguous slice of each type's timeline (the slicing of
     *      [[graft.operators.PrefixScan]], kept separate because this
     *      fold carries typed (n, Σv, Σv²) state across micro-batches,
-    *      not LONG column sums); one eager localCheckpoint materializes
+    *      not LONG column sums); one eager pin materializes
     *      the sorted slices for both passes;
     *   2. pass A: per (partition, type) state TOTALS — ≤ parts × types
     *      tiny rows to the driver;
@@ -1001,14 +1002,14 @@ object Streams {
         Math.addExact(s.ss, Math.multiplyExact(vfp, vfp)))
     val zero = AnomalyState(0L, 0L, 0L)
     // contiguous (type, time) slices, materialized ONCE for both passes
-    // (localCheckpoint also pins the partition indices the offset map is
+    // (the pin also fixes the partition indices the offset map is
     // keyed by — re-deriving the plan could re-sample range boundaries)
     val sliced = events
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .repartitionByRange(col("event_type"), col("ts"), col("event_id"))
       .sortWithinPartitions("event_type", "ts", "event_id")
       .as[(Long, java.sql.Timestamp, String, Double)]
-      .localCheckpoint()
+      .transform(Materialize.eager)
     // pass A: per-(partition, type) totals — tiny (≤ parts × types)
     val totals: Array[(Int, String, AnomalyState)] = sliced.rdd
       .mapPartitionsWithIndex { (pid, it) =>

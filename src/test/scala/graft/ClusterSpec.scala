@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.DedupClusters
+import org.apache.spark.sql.graftbridge.CheckpointDirs
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -122,26 +123,16 @@ class ClusterSpec extends SparkSuite {
 
   test("reliable checkpointing runs the loop and matches union-find") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-    // without a checkpoint dir the operator must fail up front, not
-    // rounds later inside Spark's RDD machinery
-    assert(spark.sparkContext.getCheckpointDir.isEmpty)
-    intercept[IllegalStateException] {
-      DedupClusters.clusters(edges.toDF("d1", "d2"), "d1", "d2", reliableCheckpoint = true)
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    try {
-      spark.sparkContext.setCheckpointDir(dir)
-      val got = DedupClusters
-        .clusters(edges.toDF("d1", "d2"), "d1", "d2", reliableCheckpoint = true)
+    val got = CheckpointDirs.withCheckpointDir(spark.sparkContext) { dir =>
+      val labels = DedupClusters
+        .clusters(edges.toDF("d1", "d2"), "d1", "d2")
         .collect()
         .map(r => r.getLong(0) -> r.getLong(1))
         .toMap
-      assert(got == unionFind(edges))
-    } finally {
-      // un-setting isn't exposed; leave the dir configured but delete the
-      // files so repeated local runs don't accumulate checkpoint blocks
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      assert(org.apache.commons.io.FileUtils.listFiles(dir, null, true).size > 0, "no checkpoint written")
+      labels
     }
+    assert(got == unionFind(edges))
   }
 
   test("round join plans exchange-free: edge list pre-partitioned on the join key (r12)") {

@@ -27,11 +27,11 @@ object FlakyStore {
   * partition. The call counter is per-task (the closure is deserialized
   * per task), so only the victim partition is affected, and atomic: the
   * sink calls `put` from several threads of one task. Disarmed, it is a
-  * plain LocalFsStore.
+  * plain `file://` HadoopFsStore.
   */
 class PartitionOutageStore(root: String, victim: Int, killAfter: Int)
     extends graft.sinks.ObjectStore {
-  private val inner = new graft.sinks.LocalFsStore(root)
+  private val inner = new graft.sinks.HadoopFsStore(s"file://$root")
   private val calls = new java.util.concurrent.atomic.AtomicInteger
   override def put(key: String, bytes: Array[Byte], contentType: String, acl: String): Unit = {
     if (PartitionOutageStore.armed.get() && org.apache.spark.TaskContext.getPartitionId() == victim) {
@@ -113,7 +113,7 @@ class TileCacheSpec extends SparkSuite {
   }
 
   test("sink per-level progress counts match the manifest (R13)") {
-    import graft.sinks.{LocalFsStore, ObjectSink}
+    import graft.sinks.{HadoopFsStore, ObjectSink}
     import org.apache.spark.sql.functions.format_string
     val root = TileCacheQueries.ensureFixture()
     val bucket = java.nio.file.Files.createTempDirectory("graft_r13_bucket").toFile
@@ -131,7 +131,7 @@ class TileCacheSpec extends SparkSuite {
         .map(l => f"L$l%02d")
     val (ok, failed, perLevel) = ObjectSink.write(
       tiles,
-      new LocalFsStore(bucket.getAbsolutePath),
+      new HadoopFsStore(s"file://${bucket.getAbsolutePath}"),
       "object_key",
       "content",
       "image/jpg",
@@ -211,7 +211,7 @@ class TileCacheSpec extends SparkSuite {
         .walk(bucket.toPath)
         .iterator()
         .asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p))
+        .filter(p => java.nio.file.Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
         .filterNot(_.toString.contains("_meta"))
         .size
     }

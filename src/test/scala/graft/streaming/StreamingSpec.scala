@@ -705,7 +705,7 @@ class StreamingSpec extends SparkSuite {
     val q = graft.streaming.Streams
       .objectSinkStream(
         df,
-        new graft.sinks.LocalFsStore(root.getAbsolutePath),
+        new graft.sinks.HadoopFsStore(s"file://${root.getAbsolutePath}"),
         "object_key",
         "content",
         "image/jpg") { (id, ok, failed) => batches :+= ((id, ok, failed)) }
