@@ -76,15 +76,17 @@ object DedupClusters {
     // expensive, uncached) upstream pairs plan twice; the checkpoint
     // then materializes the symmetric list once for the whole loop.
     // r12: for long-path graphs (the pathDoubling callers), repartition
-    // by the JOIN key `a` before checkpointing — Dataset.checkpoint
-    // preserves outputPartitioning through LogicalRDD and labels come
-    // off their own checkpoint hash-partitioned by id (alias-propagated
-    // through the rename), so EVERY round's edges ⋈ labels join plans
-    // with ZERO exchange on either side: the 2|E| edge list, the loop's
-    // biggest frame, stops re-shuffling once per round (distinct() alone
-    // left it partitioned by (a, b), which satisfies nothing).
-    // ClusterSpec pins the exchange-free round join. Deliberately NOT
-    // applied to the dense small-diameter dedup graphs: their per-round
+    // by the JOIN key `a` before checkpointing. With AQE OFF the pin
+    // keeps that partitioning and labels come off their own pin
+    // hash-partitioned by id (alias-propagated through the rename), so
+    // every round's edges ⋈ labels join plans with ZERO exchange on
+    // either side (ClusterSpec pins this with AQE off). With AQE ON,
+    // Spark's default and graft's session setting, the pin reports
+    // UnknownPartitioning (it reads the AdaptiveSparkPlanExec's, see
+    // [[Materialize]]): the repartition costs one shuffle of the edge
+    // list, and a round join that does not broadcast still shuffles both
+    // sides. Deliberately NOT applied to
+    // the dense small-diameter dedup graphs: their per-round
     // frames are tiny and AQE's coalescing of the per-round exchange
     // beats 32 fixed near-empty tasks (measured: q_dedup_clusters
     // regressed ~25% pre-partitioned while q_graph_cc improved ~7%).

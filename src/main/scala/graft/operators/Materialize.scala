@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The one place graft pins a frame: cuts its lineage and keeps its
   * rows, so every later reader scans the same materialized partitions
@@ -24,15 +25,29 @@ import org.apache.spark.sql.Dataset
   * `spark.cleaner.referenceTracking.cleanCheckpoints` is on; otherwise
   * the dir keeps every pin written and is the deployment's to clear.
   *
-  * Both modes keep the frame's partition count, partition order and
-  * output partitioning, so a pinned range layout or a pre-partitioned
-  * join side plans the same either way.
+  * Both modes keep the frame's partition count and partition order, so
+  * a pinned range layout plans the same either way. The pinned node
+  * reports the output partitioning of the plan that fed the pin. Under
+  * adaptive execution that plan is an `AdaptiveSparkPlanExec`, which
+  * reports `UnknownPartitioning`: a `repartition` before the pin does
+  * not spare a later join its exchange unless AQE is off.
+  *
+  * The seam owns the pinned node's size estimate. Spark copies it from
+  * the source plan, and its size-only join estimate is the product of
+  * the two sides, so a loop that joins its own pinned state (f ⋈ f)
+  * squares the estimate every round: thousands of bits after a dozen
+  * rounds, and seconds of driver time in BigInteger arithmetic per
+  * plan. Both entry points cap it at `spark.sql.defaultSizeInBytes`, the
+  * estimate Spark gives a relation it knows nothing about (2⁶³ − 1 by
+  * default). An estimate below the cap passes through unchanged; every
+  * size threshold Spark plans by (broadcast, runtime filters) sits far
+  * below it, so the cap changes no join choice.
   */
 object Materialize {
 
   /** Pins `ds` now: one job writes it before this returns. */
   def eager[T](ds: Dataset[T]): Dataset[T] =
-    if (reliable(ds)) ds.checkpoint() else ds.localCheckpoint()
+    Bridge.capSizeEstimate(if (reliable(ds)) ds.checkpoint() else ds.localCheckpoint())
 
   /** Marks `ds` for pinning; the caller's next FULL-SCAN action (a
     * count or a broadcast build, not a `take`, which would pin only the
@@ -47,7 +62,7 @@ object Materialize {
     * then the caller's action over the written files), one plan run.
     */
   def lazily[T](ds: Dataset[T]): Dataset[T] =
-    if (reliable(ds)) ds.checkpoint() else ds.localCheckpoint(eager = false)
+    Bridge.capSizeEstimate(if (reliable(ds)) ds.checkpoint() else ds.localCheckpoint(eager = false))
 
   private def reliable(ds: Dataset[_]): Boolean =
     ds.sparkSession.sparkContext.getCheckpointDir.isDefined

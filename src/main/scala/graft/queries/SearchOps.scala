@@ -563,40 +563,11 @@ object SearchOps {
     * component filter), the per-component argmin as a rank-1 window
     * (three sort keys — past the GroupTopK 2-key match, so it stays on
     * WindowExec; rows = surviving cross edges, halving per round), and
-    * contraction on the ≤|components| pick-pair graph via
-    * [[graft.operators.DedupClusters]] with pointer doubling. Forest
-    * and labels are checkpointed per round — lineage stays flat.
+    * contraction on the ≤|components| pick-pair graph (driver union-find,
+    * or distributed pointer doubling past [[boruvka]]'s threshold). The
+    * labels and each round's picks are pinned, and the forest is a union
+    * of pinned picks — lineage stays flat.
     */
-  /** [[Materialize.eager]] + STATS RESET for self-composing loop frames.
-    * A pinned Dataset keeps the source plan's statistics,
-    * and Spark's size-only join estimate is the PRODUCT of the child
-    * sizes — so a pointer-doubling loop (f ⋈ f each step) SQUARES the
-    * sizeInBytes BigInt per iteration: by jump 7 the driver burns tens
-    * of seconds in BigInteger.multiply inside
-    * SizeInBytesOnlyStatsPlanVisitor (jstack-verified; jobs themselves
-    * ran in ms). Round-tripping the checkpointed RDD through
-    * createDataFrame rebuilds a LogicalRDD with DEFAULT stats, resetting
-    * the exponent each jump. DedupClusters' pathDoubling loop squares
-    * its estimate too (the round's `msgs` read 29, 44, 73, … 29,397
-    * bits over rounds 0–11 on a 1,024-node path) but is not flattened:
-    * the reset would drop the hash partitioning its exchange-free round
-    * join depends on; a fix must reset the stats and keep it.
-    */
-  private def ckptFlat(df: DataFrame): DataFrame = {
-    val ck = Materialize.eager(df)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
-  /** [[ckptFlat]] with a LAZY checkpoint mark: the caller's next
-    * full-scan action (a fused convergence count) materializes the
-    * blocks in the same job — same stats-flattening wrapper, one fewer
-    * driver action per probed round (r13 ask #7).
-    */
-  private def ckptFlatLazy(df: DataFrame): DataFrame = {
-    val ck = Materialize.lazily(df)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   def qGraphMst(spark: SparkSession, sfDir: String): DataFrame =
     boruvka(Materialize.eager(coPurchaseEdgesWeighted(spark, sfDir)))
 
@@ -744,9 +715,9 @@ object SearchOps {
           } else {
             // distributed path: break 2-cycles by hooking both ends to
             // the smaller id, then pointer-double ⌈log₂ n⌉ times. Each
-            // jump goes through ckptFlat — see its scaladoc for why a
-            // plain localCheckpoint makes THIS loop quadratic-then-hung
-            // in driver-side BigInteger stats arithmetic.
+            // jump (f ⋈ f) is pinned; the seam caps the pinned node's
+            // size estimate ([[Materialize]]), so the jumps' estimates
+            // stay bounded instead of squaring per jump.
             var g = chosen.select(col("cc").as("x"), col("oc").as("fx"))
             val ff = g.select(col("x").as("x2"), col("fx").as("ffx"))
             g = g
@@ -756,7 +727,7 @@ object SearchOps {
                 when(col("ffx") === col("x"), least(col("x"), col("fx")))
                   .otherwise(col("fx"))
                   .as("fx"))
-              .transform(ckptFlat)
+              .transform(Materialize.eager)
             val jumps = (63 - java.lang.Long.numberOfLeadingZeros(nChosen + 2)).toInt + 1
             var j = 0
             var fixed = false
@@ -771,14 +742,14 @@ object SearchOps {
                 // pseudoforests exit after the first probe instead of
                 // paying all ⌈log₂ n⌉ eager checkpoints; non-probe
                 // jumps stay flag-free (no extra bytes cached)
-                val flat = ckptFlatLazy(nxt.select(
+                val flat = Materialize.lazily(nxt.select(
                   col("x"),
                   col("fx2").as("fx"),
                   (col("fx2") =!= col("fx")).as("chg")))
                 fixed = flat.where(col("chg")).count() == 0L
                 g = flat.select("x", "fx")
               } else {
-                g = ckptFlat(nxt.select(col("x"), col("fx2").as("fx")))
+                g = Materialize.eager(nxt.select(col("x"), col("fx2").as("fx")))
               }
             }
             g

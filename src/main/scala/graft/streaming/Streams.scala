@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * driver oracle-checks. Structured Streaming only — no DStreams.
   */
 object Streams {
+  import StateMath._
   import graft.Tables.dsum
 
   /** 5-minute tumbling windows per event_type. Streaming: append mode
@@ -101,12 +102,6 @@ object Streams {
     val spark = events.sparkSession
     import spark.implicits._
     val gap = 1800000000L // 30 min in micros
-    def micros(t: java.sql.Timestamp): Long = {
-      val i = t.toInstant
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    }
-    def ts(m: Long): java.sql.Timestamp =
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(m / 1000000L, (m % 1000000L) * 1000L))
     def close(uid: Long, s: SessionState): SessionRow =
       SessionRow(
         uid,
@@ -221,24 +216,18 @@ object Streams {
             .as("n_missed"))
         .orderBy("event_type", "gap_start")
     } else {
-      def us(t: java.sql.Timestamp): Long = {
-        val i = t.toInstant
-        i.getEpochSecond * 1000000L + i.getNano / 1000L
-      }
-      def ts(m: Long): java.sql.Timestamp =
-        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(m / 1000000L, (m % 1000000L) * 1000L))
       def fn(
           et: String,
           it: Iterator[(String, java.sql.Timestamp, java.sql.Timestamp)],
           state: GroupState[GapState]): Iterator[GapRow] = {
-        val wins = it.toArray.sortBy(w => us(w._2))
+        val wins = it.toArray.sortBy(w => micros(w._2))
         val out = scala.collection.mutable.ArrayBuffer.empty[GapRow]
         var lastEnd = state.getOption.map(_.lastEndUs).getOrElse(-1L)
         wins.foreach { case (_, wsT, weT) =>
-          val ws = us(wsT)
+          val ws = micros(wsT)
           if (lastEnd >= 0 && ws > lastEnd)
             out += GapRow(et, ts(lastEnd), wsT, (ws - lastEnd) / slotUs)
-          lastEnd = math.max(lastEnd, us(weT))
+          lastEnd = math.max(lastEnd, micros(weT))
         }
         if (lastEnd >= 0) state.update(GapState(lastEnd))
         out.iterator
@@ -595,14 +584,6 @@ object Streams {
   def ewmaStateful(events: DataFrame, streaming: Boolean): Dataset[EwmaRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def round0(x: Double): Long =
-      java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
-    def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    def micros(t: java.sql.Timestamp): Long = {
-      val i = t.toInstant
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    }
     val wts = Seq(8L, 4L, 2L, 1L)
     def fn(
         uid: Long,
@@ -749,31 +730,9 @@ object Streams {
   def attribution(
       clicksSrc: DataFrame,
       purchasesSrc: DataFrame,
-      withWatermark: Boolean): DataFrame = {
-    val clicks0 = clicksSrc
-      .where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-    val purch0 = purchasesSrc
-      .where(col("event_type") === "purchase")
-      .select(
-        col("event_id").as("purchase_id"),
-        col("user_id").as("p_user_id"),
-        col("ts").as("purchase_ts"))
-    val clicks = if (withWatermark) clicks0.withWatermark("click_ts", "30 minutes") else clicks0
-    val purch = if (withWatermark) purch0.withWatermark("purchase_ts", "30 minutes") else purch0
-    clicks
-      .join(
-        purch,
-        col("user_id") === col("p_user_id") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") < col("click_ts") + expr("INTERVAL 30 MINUTES"))
-      .select(
-        col("user_id"),
-        col("click_id"),
-        col("purchase_id"),
-        col("click_ts"),
-        col("purchase_ts"))
-  }
+      withWatermark: Boolean): DataFrame =
+    clickPurchaseJoin(clicksSrc, purchasesSrc, withWatermark, "inner")
+      .select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
 
   /** Left-outer stream-stream interval join — the abandonment twin of
     * [[attribution]]: every click appears exactly once per matching
@@ -790,7 +749,19 @@ object Streams {
   def attributionOuter(
       clicksSrc: DataFrame,
       purchasesSrc: DataFrame,
-      withWatermark: Boolean): DataFrame = {
+      withWatermark: Boolean): DataFrame =
+    clickPurchaseJoin(clicksSrc, purchasesSrc, withWatermark, "left_outer")
+      .select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
+
+  /** Clicks joined to the same user's purchases in the following 30
+    * minutes, both sides watermarked when `withWatermark`: the one join
+    * behind [[attribution]] and [[attributionOuter]].
+    */
+  private def clickPurchaseJoin(
+      clicksSrc: DataFrame,
+      purchasesSrc: DataFrame,
+      withWatermark: Boolean,
+      joinType: String): DataFrame = {
     val clicks0 = clicksSrc
       .where(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
@@ -802,19 +773,12 @@ object Streams {
         col("ts").as("purchase_ts"))
     val clicks = if (withWatermark) clicks0.withWatermark("click_ts", "30 minutes") else clicks0
     val purch = if (withWatermark) purch0.withWatermark("purchase_ts", "30 minutes") else purch0
-    clicks
-      .join(
-        purch,
-        col("user_id") === col("p_user_id") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") < col("click_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-      .select(
-        col("user_id"),
-        col("click_id"),
-        col("click_ts"),
-        col("purchase_id"),
-        col("purchase_ts"))
+    clicks.join(
+      purch,
+      col("user_id") === col("p_user_id") &&
+        col("purchase_ts") >= col("click_ts") &&
+        col("purchase_ts") < col("click_ts") + expr("INTERVAL 30 MINUTES"),
+      joinType)
   }
 
   /** Stateful streaming funnel: per user, emit a row each time the
@@ -839,10 +803,6 @@ object Streams {
   def funnelStateful(events: DataFrame, streaming: Boolean): Dataset[FunnelRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def micros(t: java.sql.Timestamp): Long = {
-      val i = t.toInstant
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    }
     def fn(
         uid: Long,
         it: Iterator[(Long, java.sql.Timestamp, String)],
@@ -900,14 +860,6 @@ object Streams {
   def anomalyStateful(events: DataFrame, streaming: Boolean): Dataset[AnomalyRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def round0(x: Double): Long =
-      java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
-    def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    def micros(t: java.sql.Timestamp): Long = {
-      val i = t.toInstant
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    }
     def fn(
         typ: String,
         it: Iterator[(Long, java.sql.Timestamp, String, Double)],
@@ -917,18 +869,8 @@ object Streams {
       val out = Vector.newBuilder[AnomalyRow]
       evs.foreach { case (eid, _, _, v) =>
         val vfp = round0(v * 1e3)
-        if (s.n >= 30L) {
-          val m = s.s.toDouble / s.n
-          val variance = s.ss.toDouble / s.n - m * m
-          if (variance > 0) {
-            val z = round6((vfp.toDouble - m) / math.sqrt(variance))
-            if (math.abs(z) >= 1.5) out += AnomalyRow(eid, typ, s.n, z)
-          }
-        }
-        s = AnomalyState(
-          s.n + 1L,
-          Math.addExact(s.s, vfp),
-          Math.addExact(s.ss, Math.multiplyExact(vfp, vfp)))
+        anomalyZ(s, vfp).foreach(z => out += AnomalyRow(eid, typ, s.n, z))
+        s = anomalyStep(s, vfp)
       }
       if (streaming) state.update(s) else state.remove()
       out.result().iterator
@@ -991,15 +933,6 @@ object Streams {
       carry: Map[String, AnomalyState] = Map.empty): (Dataset[AnomalyRow], Map[String, AnomalyState]) = {
     val spark = events.sparkSession
     import spark.implicits._
-    def round0(x: Double): Long =
-      java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
-    def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    def step(s: AnomalyState, vfp: Long): AnomalyState =
-      AnomalyState(
-        s.n + 1L,
-        Math.addExact(s.s, vfp),
-        Math.addExact(s.ss, Math.multiplyExact(vfp, vfp)))
     val zero = AnomalyState(0L, 0L, 0L)
     // contiguous (type, time) slices, materialized ONCE for both passes
     // (the pin also fixes the partition indices the offset map is
@@ -1015,7 +948,7 @@ object Streams {
       .mapPartitionsWithIndex { (pid, it) =>
         val acc = scala.collection.mutable.LinkedHashMap.empty[String, AnomalyState]
         it.foreach { case (_, _, typ, v) =>
-          acc.update(typ, step(acc.getOrElse(typ, zero), round0(v * 1e3)))
+          acc.update(typ, anomalyStep(acc.getOrElse(typ, zero), round0(v * 1e3)))
         }
         acc.iterator.map { case (t, s) => (pid, t, s) }
       }
@@ -1048,16 +981,8 @@ object Streams {
             st = bOff.value.getOrElse((pid, typ), zero)
           }
           val vfp = round0(v * 1e3)
-          val out =
-            if (st.n >= 30L) {
-              val m = st.s.toDouble / st.n
-              val variance = st.ss.toDouble / st.n - m * m
-              if (variance > 0) {
-                val z = round6((vfp.toDouble - m) / math.sqrt(variance))
-                if (math.abs(z) >= 1.5) Some(AnomalyRow(eid, typ, st.n, z)) else None
-              } else None
-            } else None
-          st = step(st, vfp)
+          val out = anomalyZ(st, vfp).map(z => AnomalyRow(eid, typ, st.n, z))
+          st = anomalyStep(st, vfp)
           out
         }
       }
@@ -1080,6 +1005,60 @@ object Streams {
   }
 }
 
+/** The state functions' shared arithmetic. It lives outside [[Streams]]
+  * so that their closures reach it as a static module, not by capturing
+  * `Streams`, which is not serializable.
+  */
+private[streaming] object StateMath {
+
+  /** Epoch microseconds of `t`, the event-time unit of every state
+    * function in [[Streams]], and back.
+    */
+  def micros(t: java.sql.Timestamp): Long = {
+    val i = t.toInstant
+    i.getEpochSecond * 1000000L + i.getNano / 1000L
+  }
+
+  def ts(m: Long): java.sql.Timestamp =
+    java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(m / 1000000L, (m % 1000000L) * 1000L))
+
+  /** HALF_UP rounding through `BigDecimal.valueOf`, Spark's own
+    * double-round algorithm: to a whole number (fixed-point quantization)
+    * and to scale 6 (emitted features and scores).
+    */
+  def round0(x: Double): Long =
+    java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
+
+  def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** One value folded into a key's running anomaly state, with checked
+    * adds (see [[Streams.anomalyStateful]]).
+    */
+  def anomalyStep(s: AnomalyState, vfp: Long): AnomalyState =
+    AnomalyState(
+      s.n + 1L,
+      Math.addExact(s.s, vfp),
+      Math.addExact(s.ss, Math.multiplyExact(vfp, vfp)))
+
+  /** The z-score of `vfp` against the prior state `s`, rounded to 1e-6,
+    * when it is a verdict: at least 30 prior values, a positive variance
+    * and |z| ≥ 1.5. [[Streams.anomalyStateful]] and [[Streams.anomalyScan]]
+    * both score through here, so their arithmetic is the same by
+    * construction.
+    */
+  def anomalyZ(s: AnomalyState, vfp: Long): Option[Double] =
+    if (s.n < 30L) None
+    else {
+      val m = s.s.toDouble / s.n
+      val variance = s.ss.toDouble / s.n - m * m
+      if (variance > 0) {
+        val z = round6((vfp.toDouble - m) / math.sqrt(variance))
+        if (math.abs(z) >= 1.5) Some(z) else None
+      } else None
+    }
+}
+
 /** Open-session state carried per user by [[Streams.sessionizeStateful]]. */
 case class SessionState(
     session_id: Long,
@@ -1088,8 +1067,8 @@ case class SessionState(
     n_events: Long,
     sumMicros: Long)
 
-/** Keyed state of [[Streams.ewmaStateful]]: the user's last ≤4 event
-  * values as 1e-6 fixed-point longs, newest first.
+/** Keyed state of [[Streams.gapAlerts]]: the type's last finalized
+  * window end, in epoch microseconds.
   */
 case class GapState(lastEndUs: Long)
 case class GapRow(
@@ -1098,6 +1077,9 @@ case class GapRow(
     gap_end: java.sql.Timestamp,
     n_missed: Long)
 
+/** Keyed state of [[Streams.ewmaStateful]]: the user's last ≤4 event
+  * values as 1e-6 fixed-point longs, newest first.
+  */
 case class EwmaState(ring: List[Long])
 
 /** Per-event output of [[Streams.ewmaStateful]]. */

@@ -25,6 +25,31 @@ object Bridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       plan)
 
+  /** `pinned`, whose plan is the one `LogicalRDD` that `checkpoint` and
+    * `localCheckpoint` return, with that node's size estimate capped at
+    * `spark.sql.defaultSizeInBytes`. The node keeps its output, RDD,
+    * partitioning, ordering, constraints and every other statistic; an
+    * estimate at or below the cap returns `pinned` itself. No job runs.
+    * `LogicalRDD` takes its statistics as a constructor argument and
+    * `Dataset.logicalPlan` is `private[sql]`, hence this hop.
+    */
+  def capSizeEstimate[T](pinned: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
+    val ds = pinned.asInstanceOf[org.apache.spark.sql.classic.Dataset[T]]
+    ds.logicalPlan match {
+      case node: org.apache.spark.sql.execution.LogicalRDD =>
+        val session = ds.sparkSession
+        val cap = BigInt(session.sessionState.conf.defaultSizeInBytes)
+        val stats = node.computeStats()
+        if (stats.sizeInBytes <= cap) pinned
+        else
+          org.apache.spark.sql.classic.Dataset(
+            session,
+            node.copy()(session, Some(stats.copy(sizeInBytes = cap)), Some(node.constraints)))(
+            ds.encoder)
+      case _ => pinned
+    }
+  }
+
   /** Run `f` with `tc` as the calling thread's TaskContext, unset after.
     * `TaskContext.setTaskContext` is `protected[spark]`; a task that hands
     * work to other threads (the object sink's PUT window) needs this hop

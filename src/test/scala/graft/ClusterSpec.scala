@@ -145,6 +145,11 @@ class ClusterSpec extends SparkSuite {
     // alias-propagates), and Dataset.localCheckpoint preserves
     // outputPartitioning through LogicalRDD. If this breaks, every
     // propagation round silently re-shuffles the 2|E| edge list.
+    // AQE is off because the claim holds only there: a pin takes its
+    // partitioning from the plan that fed it, and under AQE that plan is
+    // an AdaptiveSparkPlanExec, which reports UnknownPartitioning; with
+    // AQE on (the shipped session) the pinned edge list and labels lose
+    // their hash partitioning and every round shuffles again.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.functions._
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -170,6 +175,26 @@ class ClusterSpec extends SparkSuite {
       // and the loop still computes the right components (one cycle)
       assert(labels.select(countDistinct(col("label"))).head().getLong(0) == 1L)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("path doubling keeps each round's size estimate bounded") {
+    // each round joins the pinned edge list with the pinned labels; the
+    // seam caps both pins' estimates, so the round's estimate is at most
+    // their product (≤ 126 bits plus the projection's scaling) instead
+    // of squaring round after round
+    val path = (0L until 1023L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val labels = DedupClusters
+      .clusters(
+        path,
+        "d1",
+        "d2",
+        pathDoubling = true,
+        roundProbe = (_, msgs) => bits += msgs.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength)
+      .collect()
+    assert(labels.length == 1024 && labels.forall(_.getLong(1) == 0L))
+    assert(bits.size >= 10, s"fixture too shallow: ${bits.size} rounds")
+    assert(bits.forall(_ <= 130), s"msgs size estimate bit lengths per round: $bits")
   }
 
   test("summarize emits representative, size, and sorted members") {

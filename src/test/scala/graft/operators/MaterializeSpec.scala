@@ -14,10 +14,15 @@ class MaterializeSpec extends SparkSuite {
 
   private val pinCall = """\blocalCheckpoint\b|\.checkpoint\b""".r
 
-  /** Pin calls per source file under src/main, comment lines and
+  /** A pinned frame's rows rebuilt as a new frame: a second pin path
+    * that bypasses the seam's size estimate and drops the partitioning.
+    */
+  private val rddRoundTrip = """createDataFrame\s*\(\s*[\w.]+\.rdd\b""".r
+
+  /** Matches of `re` per source file under src/main, comment lines and
     * trailing `// ...` comments ignored.
     */
-  private def pinCalls(): Map[String, Int] = {
+  private def calls(re: scala.util.matching.Regex): Map[String, Int] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     java.nio.file.Files
       .walk(root)
@@ -31,10 +36,17 @@ class MaterializeSpec extends SparkSuite {
           .map(_.trim)
           .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
           .map(_.replaceAll("""\s//\s.*$""", ""))
-        root.relativize(p).toString -> code.map(pinCall.findAllIn(_).size).sum
+        root.relativize(p).toString -> code.map(re.findAllIn(_).size).sum
       }
       .filter(_._2 > 0)
       .toMap
+  }
+
+  /** The one `LogicalRDD` a pinned frame's plan holds. */
+  private def pinnedNode(pinned: DataFrame): LogicalRDD = {
+    val nodes = pinned.queryExecution.logical.collect { case l: LogicalRDD => l }
+    assert(nodes.size == 1, pinned.queryExecution.logical.treeString)
+    nodes.head
   }
 
   private def partFiles(dir: java.io.File): Int =
@@ -44,18 +56,48 @@ class MaterializeSpec extends SparkSuite {
       .count(_.getName.startsWith("part-"))
 
   test("no code under src/main pins a frame outside the seam") {
-    val calls = pinCalls()
-    assert(calls.get("graft/operators/Materialize.scala").exists(_ >= 2), s"guard found no seam: $calls")
-    assert(calls.keySet == Set("graft/operators/Materialize.scala"), calls)
+    val pins = calls(pinCall)
+    assert(pins.get("graft/operators/Materialize.scala").exists(_ >= 2), s"guard found no seam: $pins")
+    assert(pins.keySet == Set("graft/operators/Materialize.scala"), pins)
+    assert(calls(rddRoundTrip).isEmpty, "a createDataFrame(<frame>.rdd) round trip is a second pin path")
+  }
+
+  test("a loop that joins its own pinned state keeps a bounded size estimate") {
+    // pointer doubling over a 1,024-node path: each step joins the pinned
+    // frame with itself, which squares an inherited estimate per step
+    import org.apache.spark.sql.functions.{col, greatest, lit}
+    def run(): (Seq[Int], Seq[String]) = {
+      var f = Materialize.eager(
+        spark.range(0, 1024, 1, 4).select(col("id").as("x"), greatest(col("id") - 1, lit(0L)).as("fx")))
+      val bits = (1 to 10).map { step =>
+        val h = f.select(col("x").as("x2"), col("fx").as("fx2"))
+        val next = f.join(h, col("fx") === col("x2")).select(col("x"), col("fx2").as("fx"))
+        f =
+          if (step % 2 == 0) Materialize.eager(next)
+          else {
+            // a lazy pin stays lazy: no job runs until the count
+            val lazyPin = Materialize.lazily(next)
+            val local = spark.sparkContext.getCheckpointDir.isEmpty
+            assert(!local || !pinnedNode(lazyPin).rdd.isCheckpointed, s"step $step pinned before its action")
+            assert(lazyPin.count() == 1024L)
+            lazyPin
+          }
+        pinnedNode(f).stats.sizeInBytes.bitLength
+      }
+      (bits, f.collect().map(_.toString).toSeq.sorted)
+    }
+    val (localBits, localRows) = run()
+    val (reliableBits, reliableRows) = CheckpointDirs.withCheckpointDir(spark.sparkContext)(_ => run())
+    Seq(localBits, reliableBits).foreach { bits =>
+      assert(bits.forall(_ <= 63), s"pinned size estimate bit lengths per step: $bits")
+    }
+    assert(localRows.size == 1024 && localRows.forall(_.endsWith(",0]")), localRows.take(3))
+    assert(localRows == reliableRows)
   }
 
   test("a checkpoint dir makes both entry points reliable checkpoints") {
     val df = spark.range(0, 100, 1, 4).toDF("id")
-    def rdd(pinned: DataFrame) = {
-      val rdds = pinned.queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
-      assert(rdds.size == 1, pinned.queryExecution.logical.treeString)
-      rdds.head
-    }
+    def rdd(pinned: DataFrame) = pinnedNode(pinned).rdd
     val prev = spark.sparkContext.getCheckpointDir
     Seq[DataFrame => DataFrame](Materialize.eager(_), Materialize.lazily(_)).foreach { pin =>
       assert(rdd(pin(df)).getCheckpointFile.isEmpty, "no dir: a local checkpoint")
