@@ -59,16 +59,16 @@ object StreamState {
 
   private[graft] def probes: Seq[Probe] = Seq(
     // windowed aggregates — watermark-evicted, window count ~ time range
-    Probe("s_stream_tumbling", "events", "window", "append", s => Streams.tumbling(s.head, withWatermark = true)),
-    Probe("s_stream_sliding", "events", "window", "append", s => Streams.sliding(s.head, withWatermark = true)),
-    Probe("s_stream_m4", "events", "window", "append", s => Streams.m4(s.head, withWatermark = true)),
+    Probe("s_stream_tumbling", "events", "window", "append", s => Streams.tumbling(s.head)),
+    Probe("s_stream_sliding", "events", "window", "append", s => Streams.sliding(s.head)),
+    Probe("s_stream_m4", "events", "window", "append", s => Streams.m4(s.head)),
     // session windows are keyed (session_window, user_id): state is one
     // row per OPEN (user, session), i.e. O(active users) — the first
     // probe run misdeclared this "window" and the ×10 gate correctly
     // FLAGGED it (rows went 95465 → 954650 with users ×10). The probe
     // gating its own author is exactly the point.
-    Probe("s_stream_session", "events", "keys", "append", s => Streams.session(s.head, withWatermark = true)),
-    Probe("s_stream_quantile", "events", "window", "append", s => Streams.quantileSketch(s.head, withWatermark = true)),
+    Probe("s_stream_session", "events", "keys", "append", s => Streams.session(s.head)),
+    Probe("s_stream_quantile", "events", "window", "append", s => Streams.quantileSketch(s.head)),
     // sketch lattices — fixed shape per constant-cardinality group
     Probe("s_stream_hll", "events", "sketch", "complete", s => Streams.hllRegisters(s.head)),
     Probe("s_stream_kmv", "events", "sketch", "complete", s => Streams.kmvState(s.head)),
@@ -76,17 +76,17 @@ object StreamState {
     Probe("s_stream_count_min", "documents", "sketch", "complete", s => Streams.countMinState(s.head)),
     Probe("s_stream_topk", "documents", "sketch", "complete", s => Streams.topkTokens(s.head)),
     // keyed state — O(distinct keys); dup-mode keys grow ×10 by design
-    Probe("s_stream_window_distinct", "events", "keys", "append", s => Streams.windowDistinct(s.head, withWatermark = true)),
-    Probe("s_stream_dedup", "events", "keys", "append", s => Streams.dedupEvents(s.head, withWatermark = true)),
+    Probe("s_stream_window_distinct", "events", "keys", "append", s => Streams.windowDistinct(s.head)),
+    Probe("s_stream_dedup", "events", "keys", "append", s => Streams.dedupEvents(s.head)),
     Probe("s_stream_cdc_latest", "events", "keys", "complete", s => Streams.cdcLatest(s.head)),
-    Probe("s_stream_session_state", "events", "keys", "append", s => Streams.sessionizeStateful(s.head, streaming = true).toDF()),
-    Probe("s_stream_ewma", "events", "keys", "append", s => Streams.ewmaStateful(s.head, streaming = true).toDF()),
-    Probe("s_stream_funnel", "events", "keys", "append", s => Streams.funnelStateful(s.head, streaming = true).toDF()),
-    Probe("s_stream_anomaly", "events", "keys", "append", s => Streams.anomalyStateful(s.head, streaming = true).toDF()),
-    Probe("s_stream_gap_alerts", "events", "keys", "append", s => Streams.gapAlerts(s.head, streaming = true)),
+    Probe("s_stream_session_state", "events", "keys", "append", s => Streams.sessionizeStateful(s.head).toDF()),
+    Probe("s_stream_ewma", "events", "keys", "append", s => Streams.ewmaStateful(s.head).toDF()),
+    Probe("s_stream_funnel", "events", "keys", "append", s => Streams.funnelStateful(s.head).toDF()),
+    Probe("s_stream_anomaly", "events", "keys", "append", s => Streams.anomalyStateful(s.head).toDF()),
+    Probe("s_stream_gap_alerts", "events", "keys", "append", s => Streams.gapAlerts(s.head)),
     // stream-stream joins — state ~ rows inside the watermark horizon
-    Probe("s_stream_join", "events", "horizon", "append", s => Streams.attribution(s(0), s(1), withWatermark = true), sources = 2),
-    Probe("s_stream_join_outer", "events", "horizon", "append", s => Streams.attributionOuter(s(0), s(1), withWatermark = true), sources = 2))
+    Probe("s_stream_join", "events", "horizon", "append", s => Streams.attribution(s(0), s(1)), sources = 2),
+    Probe("s_stream_join_outer", "events", "horizon", "append", s => Streams.attributionOuter(s(0), s(1)), sources = 2))
 
   /** Materialize the feed ONCE per (scale, table) as Spark-written
     * parquet with the ts cast already applied: the file streaming source

@@ -35,25 +35,25 @@ object StreamingQueries {
 
   def tumbling(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .tumbling(Tables.events(spark, sfDir), withWatermark = false)
+      .tumbling(Tables.events(spark, sfDir))
       .orderBy("ws", "event_type")
 
   def sliding(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .sliding(Tables.events(spark, sfDir), withWatermark = false)
+      .sliding(Tables.events(spark, sfDir))
       .orderBy("ws", "event_type")
 
   def m4(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .m4(Tables.events(spark, sfDir), withWatermark = false)
+      .m4(Tables.events(spark, sfDir))
       .orderBy("ws", "event_type")
 
   def gapAlerts(spark: SparkSession, sfDir: String): DataFrame =
-    Streams.gapAlerts(Tables.events(spark, sfDir), streaming = false)
+    Streams.gapAlerts(Tables.events(spark, sfDir))
 
   def session(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .session(Tables.events(spark, sfDir), withWatermark = false)
+      .session(Tables.events(spark, sfDir))
       .orderBy("user_id", "session_start")
 
   /** Batch twin of the streaming dedup (kept to the key projection: which
@@ -62,17 +62,18 @@ object StreamingQueries {
     */
   def dedup(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .dedupEvents(Tables.events(spark, sfDir), withWatermark = false)
+      .dedupEvents(Tables.events(spark, sfDir))
       .select("event_id")
       .orderBy("event_id")
 
-  /** Batch twin of the stream-stream attribution join (same transform,
-    * no watermark): click→purchase pairs per user within 30 minutes.
+  /** Batch twin of the stream-stream attribution join (same transform;
+    * Spark drops its watermarks from a batch plan): click→purchase pairs
+    * per user within 30 minutes.
     */
   def join(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
     Streams
-      .attribution(ev, ev, withWatermark = false)
+      .attribution(ev, ev)
       .orderBy("click_id", "purchase_id")
   }
 
@@ -82,7 +83,7 @@ object StreamingQueries {
   def joinOuter(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
     Streams
-      .attributionOuter(ev, ev, withWatermark = false)
+      .attributionOuter(ev, ev)
       .orderBy("click_id", "purchase_id")
   }
 
@@ -159,14 +160,14 @@ object StreamingQueries {
     */
   def ewma(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .ewmaStateful(Tables.events(spark, sfDir), streaming = false)
+      .ewmaStateful(Tables.events(spark, sfDir))
       .toDF()
       .orderBy("event_id")
 
   /** Batch twin of the windowed exact-uniques metric. */
   def windowDistinct(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .windowDistinct(Tables.events(spark, sfDir), withWatermark = false)
+      .windowDistinct(Tables.events(spark, sfDir))
       .orderBy("ws")
 
   /** Batch twin of the windowed quantile sketch (see
@@ -179,7 +180,7 @@ object StreamingQueries {
     */
   def quantileSketch(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .quantileSketch(Tables.events(spark, sfDir), withWatermark = false)
+      .quantileSketch(Tables.events(spark, sfDir))
       .orderBy("ws")
 
   /** Batch run of the flatMapGroupsWithState sessionizer (custom-state
@@ -187,7 +188,7 @@ object StreamingQueries {
     */
   def sessionStateful(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .sessionizeStateful(Tables.events(spark, sfDir), streaming = false)
+      .sessionizeStateful(Tables.events(spark, sfDir))
       .toDF()
       .orderBy("user_id", "session_id")
 
@@ -199,7 +200,7 @@ object StreamingQueries {
     */
   def funnel(spark: SparkSession, sfDir: String): DataFrame =
     Streams
-      .funnelStateful(Tables.events(spark, sfDir), streaming = false)
+      .funnelStateful(Tables.events(spark, sfDir))
       .toDF()
       .orderBy("user_id", "stage")
 

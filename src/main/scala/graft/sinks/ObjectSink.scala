@@ -109,7 +109,8 @@ object ObjectSink {
   }
 
   /** Writes rows (keyCol STRING, contentCol BINARY) to the store.
-    * Returns (#uploaded, #failed); individual failures are swallowed and
+    * Returns (uploaded, failed, per-label uploaded counts); the map is
+    * empty without `progress`. Individual failures are swallowed and
     * counted, never fail the job (reference per-record policy). Each task
     * logs up to 5 of its failed keys with their last error to stderr.
     *

@@ -9,6 +9,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * DataFrame so the SAME definition serves `readStream` (with watermark →
   * late-data drop + state cleanup) and the batch equivalence queries the
   * driver oracle-checks. Structured Streaming only — no DStreams.
+  *
+  * The mode comes from the input, never from a parameter: watermarks are
+  * unconditional (Spark's analyzer removes them from a batch plan), state
+  * functions always `update` (a batch `flatMapGroupsWithState` discards
+  * the update), and only the operators whose batch and stream forms
+  * differ — [[dedupEvents]], [[windowDistinct]], [[sessionizeStateful]]
+  * and [[gapAlerts]] — read `isStreaming`.
   */
 object Streams {
   import StateMath._
@@ -17,9 +24,9 @@ object Streams {
   /** 5-minute tumbling windows per event_type. Streaming: append mode
     * after watermark expiry; batch: plain groupBy(window(...)).
     */
-  def tumbling(events: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "10 minutes") else events
-    src
+  def tumbling(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_v"))
       .select(
@@ -28,7 +35,6 @@ object Streams {
         col("event_type"),
         col("n"),
         col("sum_v"))
-  }
 
   /** Streaming M4 downsampling (the `q_time_m4` sibling over 5-minute
     * tumbling windows): per (window, type) the FIRST/LAST/MIN/MAX values
@@ -42,9 +48,9 @@ object Streams {
     * viable when one hot window sees millions of events. Streaming:
     * append mode after watermark expiry; batch: plain groupBy.
     */
-  def m4(events: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "10 minutes") else events
-    src
+  def m4(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "10 minutes")
       .where(col("value").isNotNull)
       .withColumn("tk", graft.Tables.tsIdKey(col("ts"), col("event_id")))
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -63,16 +69,14 @@ object Streams {
         col("v_last"),
         col("v_min"),
         col("v_max"))
-  }
 
   /** 10-minute windows sliding by 5 — each event lands in 2 windows. */
-  def sliding(events: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "10 minutes") else events
-    src
+  def sliding(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("window.end").as("we"), col("event_type"), col("n"))
-  }
 
   /** Custom-state sessionization via `flatMapGroupsWithState` — the
     * KeyValueGroupedDataset state API the built-in `session_window` can't
@@ -98,9 +102,11 @@ object Streams {
     * usual Structured Streaming contract (late events are dropped by the
     * watermark before reaching the state function).
     */
-  def sessionizeStateful(events: DataFrame, streaming: Boolean): Dataset[SessionRow] = {
+  def sessionizeStateful(events: DataFrame): Dataset[SessionRow] = {
     val spark = events.sparkSession
     import spark.implicits._
+    // read here, outside the state function, which must not capture `events`
+    val streaming = events.isStreaming
     val gap = 1800000000L // 30 min in micros
     def close(uid: Long, s: SessionState): SessionRow =
       SessionRow(
@@ -145,22 +151,18 @@ object Streams {
               open = Some(SessionState(nextId, m, m, 1L, vq))
           }
         }
-        if (streaming) {
-          open.foreach { s =>
-            state.update(s)
-            state.setTimeoutTimestamp((s.lastMicros + gap) / 1000L) // millis
-          }
-        } else {
-          open.foreach(s => out += close(uid, s))
-          state.remove()
+        if (!streaming) open.foreach(s => out += close(uid, s))
+        else open.foreach { s =>
+          state.update(s)
+          state.setTimeoutTimestamp((s.lastMicros + gap) / 1000L) // millis
         }
         out.iterator
       }
 
-    val src0 = events.select(col("user_id"), col("ts"), col("value"))
-    val src = if (streaming) src0.withWatermark("ts", "30 minutes") else src0
     val timeout = if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    src
+    events
+      .select(col("user_id"), col("ts"), col("value"))
+      .withWatermark("ts", "30 minutes")
       .as[(Long, java.sql.Timestamp, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[SessionState, SessionRow](OutputMode.Append, timeout)(fn)
@@ -191,11 +193,11 @@ object Streams {
     * cardinality, which is inherent to a per-type alert stream (the
     * anomaly-scan note); state is 8 bytes per type.
     */
-  def gapAlerts(events: DataFrame, streaming: Boolean): DataFrame = {
+  def gapAlerts(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val slotUs = 300000000L // 5 min in micros
-    if (!streaming) {
+    if (!events.isStreaming) {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type"))
         .orderBy(col("ws"))
@@ -581,7 +583,7 @@ object Streams {
     * bound disorder across triggers (late events would see a truncated
     * ring, exactly as they would in any online feature store).
     */
-  def ewmaStateful(events: DataFrame, streaming: Boolean): Dataset[EwmaRow] = {
+  def ewmaStateful(events: DataFrame): Dataset[EwmaRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     val wts = Seq(8L, 4L, 2L, 1L)
@@ -598,7 +600,7 @@ object Streams {
         ring = (vfp :: ring).take(4)
         EwmaRow(eid, uid, round6(num.toDouble / den / 1e6))
       }
-      if (streaming) state.update(EwmaState(ring)) else state.remove()
+      state.update(EwmaState(ring))
       out.iterator
     }
     events
@@ -639,8 +641,7 @@ object Streams {
     * dedup keys die when the watermark passes the window end, so state
     * is bounded by uniques-per-horizon, never stream history.
     */
-  def windowDistinct(events: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "10 minutes") else events
+  def windowDistinct(events: DataFrame): DataFrame = {
     // Dedup on a PLAIN 5-minute slot column (≡ the window start), NOT on
     // the window struct, keeping ts as the stream's single event-time
     // column. r16 fix: with the window struct as the dedup key's
@@ -652,11 +653,12 @@ object Streams {
     // ts + delay, the documented within-watermark contract
     // (RestartSpec pins the cross-trigger AND cross-restart dedup).
     val slotUs = 300000000L // 5 min in micros
-    val keyed = src.withColumn(
-      "slot",
-      timestamp_micros(floor(unix_micros(col("ts")) / slotUs) * slotUs))
+    val keyed = events
+      .withWatermark("ts", "10 minutes")
+      .withColumn("slot", timestamp_micros(floor(unix_micros(col("ts")) / slotUs) * slotUs))
+    // Spark rejects dropDuplicatesWithinWatermark on a batch frame
     val dedup =
-      if (withWatermark) keyed.dropDuplicatesWithinWatermark("user_id", "slot")
+      if (events.isStreaming) keyed.dropDuplicatesWithinWatermark("user_id", "slot")
       else keyed.dropDuplicates("user_id", "slot")
     dedup
       .groupBy(window(col("ts"), "5 minutes").as("win"))
@@ -675,10 +677,10 @@ object Streams {
     * is bounded by the value DYNAMIC RANGE (~hundreds of buckets), not
     * by row count, and the watermark evicts closed windows.
     */
-  def quantileSketch(events: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "10 minutes") else events
+  def quantileSketch(events: DataFrame): DataFrame = {
     val qsk = udaf(new graft.functions.LogHistQuantile(Seq(0.5, 0.95, 0.99)))
-    src
+    events
+      .withWatermark("ts", "10 minutes")
       // NULL/NaN values leave both the sketch AND the window's n — the
       // oracle's `WHERE NOT isnan(value)` (NULL-dropping in SQL) does the
       // same, so the two engines' totals cannot diverge on dirty data
@@ -707,10 +709,11 @@ object Streams {
     * key, state evicted once the watermark passes the key's event time
     * — O(keys-per-horizon), which is the correct guarantee for retry
     * storms (an at-least-once source re-sends within the horizon).
-    * Batch runs the plain distinct-by-key.
+    * Batch runs the plain distinct-by-key: Spark rejects
+    * `dropDuplicatesWithinWatermark` on a batch frame.
     */
-  def dedupEvents(events: DataFrame, withWatermark: Boolean): DataFrame =
-    if (withWatermark)
+  def dedupEvents(events: DataFrame): DataFrame =
+    if (events.isStreaming)
       events.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("event_id")
     else events.dropDuplicates("event_id")
 
@@ -727,11 +730,8 @@ object Streams {
     * oracle twin `s_stream_join`); StreamingSpec proves the MemoryStream
     * run emits exactly the batch pairs.
     */
-  def attribution(
-      clicksSrc: DataFrame,
-      purchasesSrc: DataFrame,
-      withWatermark: Boolean): DataFrame =
-    clickPurchaseJoin(clicksSrc, purchasesSrc, withWatermark, "inner")
+  def attribution(clicksSrc: DataFrame, purchasesSrc: DataFrame): DataFrame =
+    clickPurchaseJoin(clicksSrc, purchasesSrc, "inner")
       .select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
 
   /** Left-outer stream-stream interval join — the abandonment twin of
@@ -746,33 +746,29 @@ object Streams {
     * Batch runs the identical transform as a plain left join (the
     * driver's oracle twin `s_stream_join_outer`).
     */
-  def attributionOuter(
-      clicksSrc: DataFrame,
-      purchasesSrc: DataFrame,
-      withWatermark: Boolean): DataFrame =
-    clickPurchaseJoin(clicksSrc, purchasesSrc, withWatermark, "left_outer")
+  def attributionOuter(clicksSrc: DataFrame, purchasesSrc: DataFrame): DataFrame =
+    clickPurchaseJoin(clicksSrc, purchasesSrc, "left_outer")
       .select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
 
   /** Clicks joined to the same user's purchases in the following 30
-    * minutes, both sides watermarked when `withWatermark`: the one join
-    * behind [[attribution]] and [[attributionOuter]].
+    * minutes, both sides watermarked: the one join behind [[attribution]]
+    * and [[attributionOuter]].
     */
   private def clickPurchaseJoin(
       clicksSrc: DataFrame,
       purchasesSrc: DataFrame,
-      withWatermark: Boolean,
       joinType: String): DataFrame = {
-    val clicks0 = clicksSrc
+    val clicks = clicksSrc
       .where(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-    val purch0 = purchasesSrc
+      .withWatermark("click_ts", "30 minutes")
+    val purch = purchasesSrc
       .where(col("event_type") === "purchase")
       .select(
         col("event_id").as("purchase_id"),
         col("user_id").as("p_user_id"),
         col("ts").as("purchase_ts"))
-    val clicks = if (withWatermark) clicks0.withWatermark("click_ts", "30 minutes") else clicks0
-    val purch = if (withWatermark) purch0.withWatermark("purchase_ts", "30 minutes") else purch0
+      .withWatermark("purchase_ts", "30 minutes")
     clicks.join(
       purch,
       col("user_id") === col("p_user_id") &&
@@ -800,7 +796,7 @@ object Streams {
     * cannot retroactively un-advance a funnel an online system already
     * acted on).
     */
-  def funnelStateful(events: DataFrame, streaming: Boolean): Dataset[FunnelRow] = {
+  def funnelStateful(events: DataFrame): Dataset[FunnelRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     def fn(
@@ -820,7 +816,7 @@ object Streams {
           out += FunnelRow(uid, s.stage, eid)
         }
       }
-      if (streaming) state.update(s) else state.remove()
+      state.update(s)
       out.result().iterator
     }
     events
@@ -857,7 +853,7 @@ object Streams {
     * trigger the slice sorts by (ts, event_id); across triggers events
     * must arrive key-ordered (the [[ewmaStateful]] online caveat).
     */
-  def anomalyStateful(events: DataFrame, streaming: Boolean): Dataset[AnomalyRow] = {
+  def anomalyStateful(events: DataFrame): Dataset[AnomalyRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     def fn(
@@ -872,7 +868,7 @@ object Streams {
         anomalyZ(s, vfp).foreach(z => out += AnomalyRow(eid, typ, s.n, z))
         s = anomalyStep(s, vfp)
       }
-      if (streaming) state.update(s) else state.remove()
+      state.update(s)
       out.result().iterator
     }
     events
@@ -992,9 +988,9 @@ object Streams {
   /** Per-user session windows, 30-minute gap. Session end = last event +
     * gap (Spark session_window semantics).
     */
-  def session(events: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "30 minutes") else events
-    src
+  def session(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "30 minutes")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(
@@ -1002,7 +998,6 @@ object Streams {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"))
-  }
 }
 
 /** The state functions' shared arithmetic. It lives outside [[Streams]]

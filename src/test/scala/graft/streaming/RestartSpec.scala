@@ -55,16 +55,15 @@ class RestartSpec extends SparkSuite {
   }
 
   /** Write pre, run to quiescence, stop; write post while DOWN; restart
-    * from the same checkpoint; return (streamed parquet, batch twin) —
-    * both UNFILTERED (see the class doc for why the transform must not
-    * carry comparison filters).
+    * from the same checkpoint; return (streamed parquet, `transform` run
+    * as a batch over every file) — both UNFILTERED (see the class doc for
+    * why the transform must not carry comparison filters).
     */
   private def runRestarted(
       tag: String,
       pre: Seq[Ev],
       post: Seq[Ev],
-      mkStream: DataFrame => DataFrame,
-      mkBatch: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+      transform: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val root = java.nio.file.Files.createTempDirectory(s"graft_restart_$tag")
     val srcDir = root.resolve("src").toString
     val outDir = root.resolve("out").toString
@@ -75,7 +74,7 @@ class RestartSpec extends SparkSuite {
     // parquet FILE sink, not memory: append-mode memory sinks refuse
     // checkpoint recovery, and the file sink's commit log makes the
     // restart exactly-once (a replayed micro-batch deduplicates)
-    def start() = mkStream(spark.readStream.schema(schema).json(srcDir))
+    def start() = transform(spark.readStream.schema(schema).json(srcDir))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -90,7 +89,7 @@ class RestartSpec extends SparkSuite {
     val q2 = start()
     try quiesce(q2)
     finally q2.stop()
-    (spark.read.parquet(outDir), mkBatch(spark.read.schema(schema).json(srcDir)))
+    (spark.read.parquet(outDir), transform(spark.read.schema(schema).json(srcDir)))
   }
 
   private def assertStreamEqBatch(streamed: DataFrame, batch: DataFrame): Unit = {
@@ -119,10 +118,7 @@ class RestartSpec extends SparkSuite {
       (5L, at(13), 3L, "B", 5.0),
       (6L, at(31), 1L, "A", 6.0),
       (91L, at(5000), -999L, "zzz", 0.0))
-    val (streamedRaw, batchRaw) = runRestarted(
-      "tumbling", pre, post,
-      src => Streams.tumbling(src, withWatermark = true),
-      src => Streams.tumbling(src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("tumbling", pre, post, Streams.tumbling)
     val flt = (df: DataFrame) => df.where(col("event_type") =!= "zzz")
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -142,10 +138,7 @@ class RestartSpec extends SparkSuite {
       (5L, at(13), 3L, "B", 5.0),
       (6L, at(31), 1L, "A", 6.0),
       (91L, at(5000), -999L, "zzz", 0.0))
-    val (streamedRaw, batchRaw) = runRestarted(
-      "sliding", pre, post,
-      src => Streams.sliding(src, withWatermark = true),
-      src => Streams.sliding(src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("sliding", pre, post, Streams.sliding)
     val flt = (df: DataFrame) => df.where(col("event_type") =!= "zzz")
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -166,10 +159,7 @@ class RestartSpec extends SparkSuite {
       (5L, at(13), 3L, "B", 9.0),
       (6L, at(31), 1L, "A", 6.5),
       (91L, at(5000), -999L, "zzz", 0.0))
-    val (streamedRaw, batchRaw) = runRestarted(
-      "m4", pre, post,
-      src => Streams.m4(src, withWatermark = true),
-      src => Streams.m4(src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("m4", pre, post, Streams.m4)
     val flt = (df: DataFrame) => df.where(col("event_type") =!= "zzz")
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -202,10 +192,7 @@ class RestartSpec extends SparkSuite {
       (5L, at(13.5), 3L, "A", 5.0),
       (91L, at(5000), -999L, "zzz", 0.0))
     val cutoff = at(4000)
-    val (streamedRaw, batchRaw) = runRestarted(
-      "windist", pre, post,
-      src => Streams.windowDistinct(src, withWatermark = true),
-      src => Streams.windowDistinct(src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("windist", pre, post, Streams.windowDistinct)
     val flt = (df: DataFrame) => df.where(col("ws") < cutoff)
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -226,10 +213,7 @@ class RestartSpec extends SparkSuite {
       (4L, at(13), 4L, "A", 4.0),
       (91L, at(5000), -999L, "zzz", 0.0))
     val cutoff = at(4000)
-    val (streamedRaw, batchRaw) = runRestarted(
-      "quantile", pre, post,
-      src => Streams.quantileSketch(src, withWatermark = true),
-      src => Streams.quantileSketch(src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("quantile", pre, post, Streams.quantileSketch)
     val flt = (df: DataFrame) => df.where(col("ws") < cutoff)
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -252,10 +236,7 @@ class RestartSpec extends SparkSuite {
       (4L, at(13), 3L, "B", 4.0),
       (5L, at(31), 1L, "A", 5.0),
       (91L, at(5000), -999L, "zzz", 0.0))
-    val (streamedRaw, batchRaw) = runRestarted(
-      "gaps", pre, post,
-      src => Streams.gapAlerts(src, streaming = true),
-      src => Streams.gapAlerts(src, streaming = false))
+    val (streamedRaw, batchRaw) = runRestarted("gaps", pre, post, Streams.gapAlerts)
     val flt = (df: DataFrame) => df.where(col("event_type") =!= "zzz")
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -279,10 +260,7 @@ class RestartSpec extends SparkSuite {
       (3L, at(20), 10L, "click", 3.0),
       (4L, at(100), 11L, "click", 4.0),
       (91L, at(5000), -999L, "zzz", 0.0))
-    val (streamedRaw, batchRaw) = runRestarted(
-      "session", pre, post,
-      src => Streams.session(src, withWatermark = true),
-      src => Streams.session(src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("session", pre, post, Streams.session)
     val flt = (df: DataFrame) => df.where(col("user_id") > 0)
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -307,10 +285,7 @@ class RestartSpec extends SparkSuite {
     val post = Seq[Ev](
       (6L, at(20), 2L, "purchase", 6.0),
       (90L, at(5000), -999L, "click", 0.0), (91L, at(5000), -998L, "purchase", 0.0))
-    val (streamedRaw, batchRaw) = runRestarted(
-      "join", pre, post,
-      src => Streams.attribution(src, src, withWatermark = true),
-      src => Streams.attribution(src, src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("join", pre, post, src => Streams.attribution(src, src))
     val flt = (df: DataFrame) => df.where(col("user_id") > 0)
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))
@@ -335,10 +310,7 @@ class RestartSpec extends SparkSuite {
       (7L, at(25), 5L, "purchase", 7.0),
       (8L, at(50), 4L, "click", 8.0), (9L, at(60), 4L, "purchase", 9.0),
       (90L, at(5000), -999L, "click", 0.0), (91L, at(5000), -998L, "purchase", 0.0))
-    val (streamedRaw, batchRaw) = runRestarted(
-      "joinouter", pre, post,
-      src => Streams.attributionOuter(src, src, withWatermark = true),
-      src => Streams.attributionOuter(src, src, withWatermark = false))
+    val (streamedRaw, batchRaw) = runRestarted("joinouter", pre, post, src => Streams.attributionOuter(src, src))
     val flt = (df: DataFrame) => df.where(col("user_id") > 0)
     val streamed = flt(streamedRaw)
     assertStreamEqBatch(streamed, flt(batchRaw))

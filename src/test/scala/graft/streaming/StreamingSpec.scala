@@ -11,20 +11,59 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkSuite {
   import spark.implicits._
 
-  private def eventTuples =
-    Tables
-      .events(spark, sf001)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[(Long, java.sql.Timestamp, Long, String, Double)]
-      .collect()
-      .sortBy(_._2.getTime)
+  private type Ev = (Long, java.sql.Timestamp, Long, String, Double)
+
+  /** The sf0.001 events under the event-tuple columns: the batch input of
+    * the equivalence tests.
+    */
+  private lazy val batchEvents =
+    Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value")
+
+  private def eventTuples = batchEvents.as[Ev].collect().sortBy(_._2.getTime)
+
+  /** A fresh MemoryStream of event tuples, and its frame under the
+    * columns of [[batchEvents]].
+    */
+  private def eventStream() = {
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    (mem, mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"))
+  }
+
+  test("the mode follows the input: every operator runs on a batch frame, and watermarks a stream") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, LogicalPlan}
+    val ops = Seq[(String, DataFrame => DataFrame)](
+      "tumbling" -> Streams.tumbling,
+      "m4" -> Streams.m4,
+      "sliding" -> Streams.sliding,
+      "quantileSketch" -> Streams.quantileSketch,
+      "session" -> Streams.session,
+      "windowDistinct" -> Streams.windowDistinct,
+      "dedupEvents" -> Streams.dedupEvents,
+      "gapAlerts" -> Streams.gapAlerts,
+      "attribution" -> (ev => Streams.attribution(ev, ev)),
+      "attributionOuter" -> (ev => Streams.attributionOuter(ev, ev)),
+      "sessionizeStateful" -> (ev => Streams.sessionizeStateful(ev).toDF()),
+      "ewmaStateful" -> (ev => Streams.ewmaStateful(ev).toDF()),
+      "funnelStateful" -> (ev => Streams.funnelStateful(ev).toDF()),
+      "anomalyStateful" -> (ev => Streams.anomalyStateful(ev).toDF()))
+    // the keyed state folds order events by arrival, not by a watermark
+    val unwatermarked = Set("ewmaStateful", "funnelStateful", "anomalyStateful")
+    def watermarks(p: LogicalPlan) = p.collect { case w: EventTimeWatermark => w }.length
+    val (_, stream) = eventStream()
+    ops.foreach { case (name, op) =>
+      val batch = op(batchEvents)
+      assert(batch.collect().nonEmpty, name)
+      assert(watermarks(batch.queryExecution.optimizedPlan) == 0, s"$name: ${batch.queryExecution.optimizedPlan}")
+      val streamed = op(stream)
+      assert(streamed.isStreaming, name)
+      assert((watermarks(streamed.queryExecution.analyzed) > 0) == !unwatermarked(name), name)
+    }
+  }
 
   test("streaming HLL registers: incremental chunks converge to batch, state bounded") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
       .hllRegisters(df)
       .writeStream
@@ -61,19 +100,14 @@ class StreamingSpec extends SparkSuite {
       // sketch state is bounded at m registers per key, independent of rows
       val types = fin.select("event_type").distinct().count()
       assert(fin.count() <= types * 256)
-      val batch = Streams.hllRegisters(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"))
+      val batch = Streams.hllRegisters(batchEvents)
       assert(fin.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(fin).count() == 0)
     } finally q.stop()
   }
 
   test("streaming reservoir: chunk-fed min-k state equals the batch sample exactly") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
       .reservoirState(df)
       .writeStream
@@ -163,11 +197,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming KMV sketch: chunked, duplicate-heavy feed equals the batch estimate") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
       .kmvState(df)
       .writeStream
@@ -208,11 +238,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stateful streaming EWMA equals the batch lag-window, fed in chunks") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .ewmaStateful(df, streaming = true)
+      .ewmaStateful(df)
       .toDF()
       .writeStream
       .outputMode("append")
@@ -241,11 +269,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stateful streaming funnel equals batch, fed in chunks; stages advance once") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .funnelStateful(df, streaming = true)
+      .funnelStateful(df)
       .toDF()
       .writeStream
       .outputMode("append")
@@ -276,11 +302,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stateful streaming anomaly equals batch running z-score, fed in chunks") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .anomalyStateful(df, streaming = true)
+      .anomalyStateful(df)
       .toDF()
       .writeStream
       .outputMode("append")
@@ -323,7 +347,7 @@ class StreamingSpec extends SparkSuite {
       .map(r => (r.event_id, r.event_type, r.n_prev, r.z))
       .sortBy(_._1)
     val fold = Streams
-      .anomalyStateful(graft.Tables.events(spark, sf001), streaming = false)
+      .anomalyStateful(graft.Tables.events(spark, sf001))
       .collect()
       .map(r => (r.event_id, r.event_type, r.n_prev, r.z))
       .sortBy(_._1)
@@ -408,7 +432,7 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.event_id, r.event_type, r.n_prev, r.z))
         .sortBy(_._1)
       val fold = Streams
-        .anomalyStateful(df, streaming = false)
+        .anomalyStateful(df)
         .collect()
         .map(r => (r.event_id, r.event_type, r.n_prev, r.z))
         .sortBy(_._1)
@@ -493,13 +517,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming gap alerts equal the batch twin, fed in chunks (r12)") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .gapAlerts(df, streaming = true)
+      .gapAlerts(df)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -532,12 +552,7 @@ class StreamingSpec extends SparkSuite {
       val cutoff = new java.sql.Timestamp(maxTs)
       val streamed = spark.table("gaps_stream").where(col("gap_end") <= lit(cutoff))
       val batch = Streams
-        .gapAlerts(
-          Tables
-            .events(spark, sf001)
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .unionByName(sentinels.toDF("event_id", "ts", "user_id", "event_type", "value")),
-          streaming = false)
+        .gapAlerts(batchEvents.unionByName(sentinels.toDF("event_id", "ts", "user_id", "event_type", "value")))
         .where(col("gap_end") <= lit(cutoff))
       assert(streamed.count() > 0, "fixture must contain at least one gap")
       assert(streamed.exceptAll(batch).count() == 0)
@@ -546,13 +561,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming tumbling (complete mode) equals batch") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .tumbling(df, withWatermark = false)
+      .tumbling(df)
       .writeStream
       .outputMode("complete")
       .format("memory")
@@ -562,22 +573,16 @@ class StreamingSpec extends SparkSuite {
       mem.addData(eventTuples.toIndexedSeq)
       q.processAllAvailable()
       val streamed = spark.table("tumbling_complete")
-      val batch = Streams.tumbling(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.tumbling(batchEvents)
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
     } finally q.stop()
   }
 
   test("streaming M4 equals batch, fed in chunks — extrema state merges across triggers (r12)") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .m4(df, withWatermark = false)
+      .m4(df)
       .writeStream
       .outputMode("complete")
       .format("memory")
@@ -594,22 +599,16 @@ class StreamingSpec extends SparkSuite {
       mem.addData(b)
       q.processAllAvailable()
       val streamed = spark.table("m4_complete")
-      val batch = Streams.m4(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.m4(batchEvents)
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
     } finally q.stop()
   }
 
   test("streaming windowed quantile sketch equals batch, fed in chunks (r10)") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .quantileSketch(df, withWatermark = false)
+      .quantileSketch(df)
       .writeStream
       .outputMode("complete")
       .format("memory")
@@ -626,22 +625,16 @@ class StreamingSpec extends SparkSuite {
       mem.addData(b)
       q.processAllAvailable()
       val streamed = spark.table("quantile_complete")
-      val batch = Streams.quantileSketch(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.quantileSketch(batchEvents)
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
     } finally q.stop()
   }
 
   test("streaming tumbling with watermark emits finalized windows (append mode)") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .tumbling(df, withWatermark = true)
+      .tumbling(df)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -656,9 +649,7 @@ class StreamingSpec extends SparkSuite {
       mem.addData((-1L, new java.sql.Timestamp(maxTs + 3600L * 1000), 0L, "sentinel", 0.0))
       q.processAllAvailable()
       val streamed = spark.table("tumbling_append")
-      val batch = Streams.tumbling(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.tumbling(batchEvents)
       // all original windows must have been emitted exactly once
       assert(streamed.where($"event_type" =!= "sentinel").exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
@@ -666,13 +657,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming sliding windows with watermark equal batch sliding windows") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .sliding(df, withWatermark = true)
+      .sliding(df)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -686,9 +673,7 @@ class StreamingSpec extends SparkSuite {
       mem.addData((-1L, new java.sql.Timestamp(maxTs + 3600L * 1000), 0L, "sentinel", 0.0))
       q.processAllAvailable()
       val streamed = spark.table("sliding_append")
-      val batch = Streams.sliding(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.sliding(batchEvents)
       // every batch window (incl. both overlapping windows per event) must
       // have been emitted exactly once after the watermark passed it
       assert(streamed.where($"event_type" =!= "sentinel").exceptAll(batch).count() == 0)
@@ -726,13 +711,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming dedup drops duplicate event_ids across triggers") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .dedupEvents(df, withWatermark = true)
+      .dedupEvents(df)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -754,15 +735,11 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stream-stream attribution join emits exactly the batch pairs") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     // one source branched into two watermarked sides (a supported
     // stream-stream self-join); the range predicate bounds both buffers
     val q = Streams
-      .attribution(df, df, withWatermark = true)
+      .attribution(df, df)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -778,10 +755,7 @@ class StreamingSpec extends SparkSuite {
       mem.addData((-1L, new java.sql.Timestamp(maxTs + 7200L * 1000), 0L, "sentinel", 0.0))
       q.processAllAvailable()
       val streamed = spark.table("attribution_append")
-      val batch = Streams.attribution(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.attribution(batchEvents, batchEvents)
       assert(batch.count() > 0, "fixture must produce at least one attribution pair")
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
@@ -789,13 +763,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("left-outer attribution join emits null rows once the watermark passes") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .attributionOuter(df, df, withWatermark = true)
+      .attributionOuter(df, df)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -818,10 +788,7 @@ class StreamingSpec extends SparkSuite {
         (-2L, new java.sql.Timestamp(maxTs + 7200L * 1000), -998L, "purchase", 0.0))
       q.processAllAvailable()
       val streamed = spark.table("attribution_outer_append")
-      val batch = Streams.attributionOuter(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.attributionOuter(batchEvents, batchEvents)
       assert(
         batch.where(col("purchase_id").isNull).count() > 0,
         "fixture must contain at least one unattributed click")
@@ -925,11 +892,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stream-static enrichment join equals the batch join") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
       .enrich(df, Tables.customer(spark, sf001))
       .writeStream
@@ -941,9 +904,7 @@ class StreamingSpec extends SparkSuite {
       mem.addData(eventTuples.toIndexedSeq)
       q.processAllAvailable()
       val streamed = spark.table("enrich_append")
-      val batch = Streams.enrich(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        Tables.customer(spark, sf001))
+      val batch = Streams.enrich(batchEvents, Tables.customer(spark, sf001))
       assert(batch.count() > 0)
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
@@ -951,13 +912,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("flatMapGroupsWithState streaming sessionize equals batch sessionize") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .sessionizeStateful(df, streaming = true)
+      .sessionizeStateful(df)
       .toDF()
       .writeStream
       .outputMode("append")
@@ -983,13 +940,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming session windows equal batch session windows") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .session(df, withWatermark = true)
+      .session(df)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -1003,9 +956,7 @@ class StreamingSpec extends SparkSuite {
       mem.addData((-1L, new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), 0L, "sentinel", 0.0))
       q.processAllAvailable()
       val streamed = spark.table("session_append").where($"n_events" > 0)
-      val batch = Streams.session(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.session(batchEvents)
       val missing = batch.exceptAll(streamed.select("user_id", "session_start", "session_end", "n_events"))
       assert(missing.count() == 0)
     } finally q.stop()
@@ -1080,7 +1031,7 @@ class StreamingSpec extends SparkSuite {
     // deduplicated) — the operable 100 TB shape
     def startQuery() =
       Streams
-        .sessionizeStateful(spark.readStream.schema(schema).json(srcDir), streaming = true)
+        .sessionizeStateful(spark.readStream.schema(schema).json(srcDir))
         .toDF()
         .writeStream
         .outputMode("append")
@@ -1126,7 +1077,7 @@ class StreamingSpec extends SparkSuite {
     // batch run (real users only: the sentinel user's final session
     // never times out, by design)
     val batchDf = Streams
-      .sessionizeStateful(spark.read.schema(schema).json(srcDir), streaming = false)
+      .sessionizeStateful(spark.read.schema(schema).json(srcDir))
       .toDF()
       .where(col("user_id") > 0)
     assert(
@@ -1163,7 +1114,7 @@ class StreamingSpec extends SparkSuite {
     // (same rationale as the sessionize restart test above)
     def startQuery() =
       Streams
-        .funnelStateful(spark.readStream.schema(schema).json(srcDir), streaming = true)
+        .funnelStateful(spark.readStream.schema(schema).json(srcDir))
         .toDF()
         .writeStream
         .outputMode("append")
@@ -1200,7 +1151,7 @@ class StreamingSpec extends SparkSuite {
       streamed.mkString("; "))
     // cross-check vs the uninterrupted batch run over the union of files
     val batch = Streams
-      .funnelStateful(spark.read.schema(schema).json(srcDir), streaming = false)
+      .funnelStateful(spark.read.schema(schema).json(srcDir))
       .toDF()
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
@@ -1231,7 +1182,7 @@ class StreamingSpec extends SparkSuite {
         .coalesce(1).write.mode("append").json(srcDir)
     def startQuery() =
       Streams
-        .anomalyStateful(spark.readStream.schema(schema).json(srcDir), streaming = true)
+        .anomalyStateful(spark.readStream.schema(schema).json(srcDir))
         .toDF()
         .writeStream
         .outputMode("append")
@@ -1268,7 +1219,7 @@ class StreamingSpec extends SparkSuite {
     assert(kAlerts == Seq(30L), s"k=$kAlerts")
     // cross-check vs the uninterrupted batch run over the union of files
     val batch = Streams
-      .anomalyStateful(spark.read.schema(schema).json(srcDir), streaming = false)
+      .anomalyStateful(spark.read.schema(schema).json(srcDir))
       .toDF()
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -1277,13 +1228,9 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stateful sessionize continues session ids after a timeout-closed session") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .sessionizeStateful(df, streaming = true)
+      .sessionizeStateful(df)
       .toDF()
       .writeStream
       .outputMode("append")
@@ -1316,11 +1263,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming CDC latest-wins converges to the batch table, fed incrementally") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
       .cdcLatest(df)
       .writeStream
@@ -1338,21 +1281,16 @@ class StreamingSpec extends SparkSuite {
       mem.addData(chunk2.map(_._1).toIndexedSeq)
       q.processAllAvailable()
       val streamed = spark.table("cdc_latest_complete")
-      val batch = Streams.cdcLatest(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"))
+      val batch = Streams.cdcLatest(batchEvents)
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
     } finally q.stop()
   }
 
   test("streaming windowed distinct (complete mode) equals batch") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .windowDistinct(df, withWatermark = false)
+      .windowDistinct(df)
       .writeStream
       .outputMode("complete")
       .format("memory")
@@ -1362,22 +1300,16 @@ class StreamingSpec extends SparkSuite {
       mem.addData(eventTuples.toIndexedSeq)
       q.processAllAvailable()
       val streamed = spark.table("window_distinct_complete")
-      val batch = Streams.windowDistinct(
-        Tables.events(spark, sf001).select("event_id", "ts", "user_id", "event_type", "value"),
-        withWatermark = false)
+      val batch = Streams.windowDistinct(batchEvents)
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
     } finally q.stop()
   }
 
   test("windowed distinct chains two stateful ops under a watermark (append mode)") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val df = mem
-      .toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val (mem, df) = eventStream()
     val q = Streams
-      .windowDistinct(df, withWatermark = true)
+      .windowDistinct(df)
       .writeStream
       .outputMode("append")
       .format("memory")

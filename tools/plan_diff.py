@@ -3,10 +3,13 @@
 
 A formatted plan carries ids that change between runs of the same tree:
 expression ids (`#<n>`), exchange ids (`plan_id=<n>`), RDD ids
-(`RDD[<n>]`) and call-site lines (`<File>.scala:<n>`). Entries that run
-Spark jobs while their DataFrame is built draw these ids from JVM-wide
-counters, so two dumps of one unchanged plan differ byte for byte. This
-tool masks the four id forms and prints a unified diff of what is left.
+(`RDD[<n>]`), call-site lines (`<File>.scala:<n>`), and the JVM object
+identities that typed operators and UDAF calls print for their
+functions (`$$Lambda$<n>/0x<addr>@<hash>`, `<Class>@<hash>`). Entries
+that run Spark jobs while their DataFrame is built draw the first three
+from JVM-wide counters, so two dumps of one unchanged plan differ byte
+for byte. This tool masks the six id forms and prints a unified diff of
+what is left.
 
 Usage: plan_diff.py <before.txt> <after.txt>
 Exit 0 = no difference after masking; 1 = differences printed.
@@ -21,6 +24,8 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
+    (re.compile(r"Lambda\$\d+/0x[0-9a-f]+"), "Lambda$N"),
+    (re.compile(r"(?<=[\w$])@[0-9a-f]+\b"), "@H"),
 ]
 
 
