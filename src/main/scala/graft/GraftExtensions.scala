@@ -38,6 +38,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Custom physical operator: bounded-heap per-group top-k (no
     // partition-wide sort; same self-registration fallback).
     ext.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
+    // The tile grid as a plan node, and a join with it on all three keys
+    // as a per-level range filter on the other side (see TileGridJoinRule;
+    // `Tile.tileGrid` registers the strategy for sessions without
+    // extensions, which keep the join).
+    ext.injectPlannerStrategy(_ => graft.plans.TileGridStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.TileGridJoinRule)
     GraftExtensions.sqlFunctions.foreach(ext.injectFunction)
   }
 }

@@ -70,14 +70,9 @@ object TileCacheQueries {
     * manifest, independent of any scanner.
     */
   private[graft] def fixturePresent: Seq[(Int, Int, Int)] =
-    (fixtureCfg.startLevel to fixtureCfg.endLevel).flatMap { level =>
-      val ts = fixtureCfg.webMercatorDelta * math.pow(2.0, 1 - level)
-      val sr = ((fixtureCfg.webMercatorDelta - fixtureCfg.extentMaxY) / ts).toInt - fixtureCfg.padY
-      val er = ((fixtureCfg.webMercatorDelta - fixtureCfg.extentMinY) / ts).toInt + 1 + fixtureCfg.padY
-      val sc = ((fixtureCfg.extentMinX + fixtureCfg.webMercatorDelta) / ts).toInt - fixtureCfg.padX
-      val ec = ((fixtureCfg.extentMaxX + fixtureCfg.webMercatorDelta) / ts).toInt + 1 + fixtureCfg.padX
-      for (r <- sr to er; c <- sc to ec if (r + c + level) % 3 != 0 && r >= 0 && c >= 0)
-        yield (level, r, c)
+    Tile.ranges(fixtureCfg).flatMap { g =>
+      for (r <- g.startRow to g.endRow; c <- g.startCol to g.endCol if (r + c + g.level) % 3 != 0 && r >= 0 && c >= 0)
+        yield (g.level, r, c)
     }
 
   /** Deterministic fixture: the [[fixturePresent]] tiles as
@@ -104,8 +99,11 @@ object TileCacheQueries {
   /** The one tile-cache read shared by every cache query: the `tilecache`
     * connector lists the cache and parses (level, row, col) from the
     * path, and the inner join to the candidate grid IS the existence
-    * filter — padded off-world probes simply don't match. Columns the
-    * caller does not select (`content` above all) are pruned from the
+    * filter — padded off-world probes simply don't match. It is written
+    * as that join but, under `GraftExtensions`, planned as a per-level
+    * range filter pushed into the scan (`graft.plans.TileGridJoinRule`):
+    * no grid is built, and levels outside the grid are never listed. Columns
+    * the caller does not select (`content` above all) are pruned from the
     * scan.
     */
   private def cachedTiles(spark: SparkSession, root: String): DataFrame =
@@ -150,10 +148,13 @@ object TileCacheQueries {
     * from the fixture's deterministic gap rule — so a fixture/listing
     * divergence (missing file, stale dir) breaks the hash match. Same
     * end-to-end round-trip contract as the multimodal probes, applied to
-    * a filesystem.
+    * a filesystem. The grid size per level is [[Tile.ranges]]' cell count,
+    * a local relation of one row per level: the grid itself is never
+    * counted (level 20 of the default extent alone is 5.6 × 10⁹ cells).
     */
   def cacheCoverage(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = Tile.tileGrid(spark, fixtureCfg).groupBy("level").agg(count(lit(1)).as("n_cells"))
+    import spark.implicits._
+    val cells = Tile.ranges(fixtureCfg).filter(_.cells > 0).map(r => (r.level, r.cells)).toDF("level", "n_cells")
     val cached =
       cachedTiles(spark, ensureFixture()).groupBy("level").agg(count(lit(1)).as("n_cached"))
     cells

@@ -31,11 +31,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Two scale properties live in the connector rather than the query:
   *
-  *  - '''Partition pruning''': level predicates (=, <, <=, >, >=, IN) are
-  *    accepted via `SupportsPushDownFilters` and evaluated against the
-  *    `L{dd}` DIRECTORY names when planning input partitions — a deep
-  *    cache has millions of files but ≤ ~20 level dirs, so a level-
-  *    filtered query never lists (let alone reads) the other levels.
+  *  - '''Partition pruning''': level predicates (=, <, <=, >, >=, IN),
+  *    alone or in `And`/`Or` trees with row and col comparisons (the
+  *    per-level range filter a join with `Tile.tileGrid` plans as, see
+  *    `graft.plans.TileGridJoinRule`), are accepted via
+  *    `SupportsPushDownFilters` and evaluated against the `L{dd}`
+  *    DIRECTORY names when planning input partitions — a deep cache has
+  *    millions of files but ≤ ~20 level dirs, so a level-filtered query
+  *    never lists (let alone reads) the other levels.
   *  - '''Column pruning''': via `SupportsPushDownRequiredColumns`; the
   *    reader opens tile files ONLY when `content` is in the required
   *    schema. Manifest queries (keys, counts, lengths) run at directory-
@@ -133,17 +136,27 @@ object TileCacheSource {
     }
 
   /** The level test a filter stands for, or None when it is not a level
-    * predicate. Only filters with a test are pushed, and a level
+    * predicate. A comparison or `In` on level is one; so is an `And`/`Or`
+    * tree of them with comparisons and `In`s on row and col, which pass
+    * every level. Only filters with a test are pushed, and a level
     * directory is listed only when it passes every pushed test.
     */
-  private[tilecache] def levelTest(f: Filter): Option[Int => Boolean] = f match {
-    case EqualTo("level", v: Int) => Some(_ == v)
-    case GreaterThan("level", v: Int) => Some(_ > v)
-    case GreaterThanOrEqual("level", v: Int) => Some(_ >= v)
-    case LessThan("level", v: Int) => Some(_ < v)
-    case LessThanOrEqual("level", v: Int) => Some(_ <= v)
-    case In("level", vs) => Some(level => vs.exists { case v: Int => v == level; case _ => false })
-    case _ => None
+  private[tilecache] def levelTest(f: Filter): Option[Int => Boolean] = {
+    def test(f: Filter): Option[Int => Boolean] = f match {
+      case EqualTo("level", v: Int) => Some(_ == v)
+      case GreaterThan("level", v: Int) => Some(_ > v)
+      case GreaterThanOrEqual("level", v: Int) => Some(_ >= v)
+      case LessThan("level", v: Int) => Some(_ < v)
+      case LessThanOrEqual("level", v: Int) => Some(_ <= v)
+      case In("level", vs) => Some(level => vs.exists { case v: Int => v == level; case _ => false })
+      case EqualTo(_, _: Int) | GreaterThan(_, _: Int) | GreaterThanOrEqual(_, _: Int) | LessThan(_, _: Int) |
+          LessThanOrEqual(_, _: Int) | In(_, _) if Set("row", "col")(f.references.head) =>
+        Some(_ => true)
+      case And(a, b) => for (x <- test(a); y <- test(b)) yield (l: Int) => x(l) && y(l)
+      case Or(a, b) => for (x <- test(a); y <- test(b)) yield (l: Int) => x(l) || y(l)
+      case _ => None
+    }
+    test(f).filter(_ => f.references.contains("level"))
   }
 }
 

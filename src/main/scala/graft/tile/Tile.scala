@@ -1,17 +1,23 @@
 package graft.tile
 
+import graft.plans.{TileGrid, TileGridStrategy}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Web-Mercator tile-cache ETL domain, re-expressed as Spark column algebra.
   *
   * Behavioral spec: `agrc/tile-etl` (`/root/reference/src/Program.cs`).
   * The reference enumerates the tile coordinate space of an Esri exploded
   * cache for a bounding box across zoom levels, filters to tiles that exist
-  * on disk, and uploads each under a slippy-map object key. Here the whole
-  * coordinate space is a distributed DataFrame born from `spark.range` +
-  * `sequence`/`explode` — at deep zoom the grid is billions of cells, so it
-  * must be generated on executors, never in a driver loop.
+  * on disk, and uploads each under a slippy-map object key. Here each
+  * level's coordinate space is one inclusive rectangle of rows × cols,
+  * computed on the driver ([[Tile.ranges]], at most one entry per level),
+  * and the cells themselves are a logical plan node
+  * ([[graft.plans.TileGrid]]) decoded from a global cell index on the
+  * executors — at deep zoom the grid is billions of cells, so it is never
+  * enumerated in a driver loop, and a join against it plans as a per-level
+  * range filter ([[graft.plans.TileGridJoinRule]]).
   *
   * Correctness traps preserved from the reference (SURVEY.md §2.1):
   *   - `Math.Truncate` (toward zero) semantics → `CAST(double AS INT)`,
@@ -38,61 +44,75 @@ final case class TileConfig(
     cacheDir: String = "", // Program.cs:33 equivalent; set per-job
     imageExt: String = "jpg")
 
+/** One level's candidate tiles: rows `startRow..endRow` × cols
+  * `startCol..endCol`, inclusive. An inverted range is empty, as in the
+  * reference's `row <= endRow` loops.
+  */
+final case class LevelRange(level: Int, startRow: Int, endRow: Int, startCol: Int, endCol: Int) {
+  def rows: Long = math.max(0L, endRow.toLong - startRow + 1)
+  def cols: Long = math.max(0L, endCol.toLong - startCol + 1)
+  def cells: Long = Math.multiplyExact(rows, cols)
+}
+
 object Tile {
 
   /** `tileSize = Δ * 2^(1-level)` (Program.cs:74). */
   def tileSize(cfg: TileConfig, level: Column): Column =
     lit(cfg.webMercatorDelta) * pow(lit(2.0), lit(1) - level)
 
-  /** Row range, counted from the north/top edge (Program.cs:76-77). */
+  /** Row range, counted from the north/top edge (Program.cs:76-77): the
+    * Column form of [[ranges]]' row bounds.
+    */
   def startRow(cfg: TileConfig, ts: Column): Column =
     ((lit(cfg.webMercatorDelta) - lit(cfg.extentMaxY)) / ts).cast("int") - lit(cfg.padY)
   def endRow(cfg: TileConfig, ts: Column): Column =
     ((lit(cfg.webMercatorDelta) - lit(cfg.extentMinY)) / ts).cast("int") + lit(1 + cfg.padY)
 
-  /** Column range, from the west/left edge (Program.cs:78-81). */
+  /** Column range, from the west/left edge (Program.cs:78-81): the Column
+    * form of [[ranges]]' col bounds.
+    */
   def startCol(cfg: TileConfig, ts: Column): Column =
     ((lit(cfg.extentMinX) + lit(cfg.webMercatorDelta)) / ts).cast("int") - lit(cfg.padX)
   def endCol(cfg: TileConfig, ts: Column): Column =
     ((lit(cfg.extentMaxX) + lit(cfg.webMercatorDelta)) / ts).cast("int") + lit(1 + cfg.padX)
 
-  /** Per-level tile ranges: one row per level with inclusive bounds. */
-  def levelRanges(spark: SparkSession, cfg: TileConfig): DataFrame = {
-    val levels = spark
-      .range(cfg.startLevel.toLong, cfg.endLevel.toLong + 1L)
-      .select(col("id").cast("int").as("level"))
-    val ts = tileSize(cfg, col("level"))
-    levels.select(
-      col("level"),
-      startRow(cfg, ts).as("start_row"),
-      endRow(cfg, ts).as("end_row"),
-      startCol(cfg, ts).as("start_col"),
-      endCol(cfg, ts).as("end_col"))
-  }
+  /** Per-level inclusive tile ranges, computed on the driver with the same
+    * double arithmetic as the Column forms above: `StrictMath.pow` (Spark's
+    * `pow`), then truncation toward zero (Spark's `CAST(double AS INT)`).
+    * A bound outside `Int` throws an `ArithmeticException` naming its
+    * level, as the ANSI cast does, instead of wrapping into a wrong grid.
+    */
+  def ranges(cfg: TileConfig): IndexedSeq[LevelRange] =
+    (cfg.startLevel to cfg.endLevel).map { level =>
+      val ts = cfg.webMercatorDelta * StrictMath.pow(2.0, (1 - level).toDouble)
+      def trunc(what: String, x: Double): Int =
+        if (Math.floor(x) <= Int.MaxValue && Math.ceil(x) >= Int.MinValue) x.toInt
+        else throw new ArithmeticException(s"tile level $level: $what bound $x is outside the Int range")
+      LevelRange(
+        level,
+        Math.subtractExact(trunc("row", (cfg.webMercatorDelta - cfg.extentMaxY) / ts), cfg.padY),
+        Math.addExact(trunc("row", (cfg.webMercatorDelta - cfg.extentMinY) / ts), 1 + cfg.padY),
+        Math.subtractExact(trunc("col", (cfg.extentMinX + cfg.webMercatorDelta) / ts), cfg.padX),
+        Math.addExact(trunc("col", (cfg.extentMaxX + cfg.webMercatorDelta) / ts), 1 + cfg.padX))
+    }
 
   /** The full (level, row, col) candidate grid — R1-R5 of the reference
-    * (nested loops, Program.cs:71,93-95) as a distributed cross product.
+    * (nested loops, Program.cs:71,93-95) — as one [[TileGrid]] plan node.
     *
-    * Scale: rows explode first (one output row per grid *row*), then a
-    * round-robin repartition spreads the per-row column explosion across
-    * all tasks. The shuffled intermediate is 5 ints per grid row — tiny —
-    * while the final explode (the big fan-out) runs fully parallel. A
-    * driver-side loop or a single-level explode would serialize deep zooms
-    * where one level alone is millions of rows × thousands of cols.
+    * Scale: the node plans as one stage with no exchange. Its exec splits
+    * the global cell index into one equal slice per leaf-node task slot and
+    * decodes each index to (level, row, col) on the executor, so slices
+    * differ by at most one cell at any grid size. A join with it on all
+    * three keys plans as a per-level range filter on the other side
+    * ([[graft.plans.TileGridJoinRule]], injected by [[graft.GraftExtensions]]).
+    * A session built without the extensions gets the node's strategy
+    * registered here, the way `AsOfJoin.asof` registers its strategy, and
+    * plans such a join as a join.
     */
   def tileGrid(spark: SparkSession, cfg: TileConfig): DataFrame = {
-    val rows = levelRanges(spark, cfg)
-      .select(
-        col("level"),
-        explode(sequence(col("start_row"), col("end_row"))).as("row"),
-        col("start_col"),
-        col("end_col"))
-    rows
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-      .select(
-        col("level"),
-        col("row"),
-        explode(sequence(col("start_col"), col("end_col"))).as("col"))
+    if (!spark.sessionState.planner.strategies.contains(TileGridStrategy))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TileGridStrategy
+    Bridge.dataset(spark, TileGrid(cfg))
   }
 
   /** Esri exploded-cache source path (Program.cs:99-100): lowercase

@@ -5,7 +5,7 @@ import graft.sources.tilecache._
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.sources.{EqualTo, Filter, In, LessThanOrEqual}
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, In, LessThanOrEqual, Or}
 
 /** DataSource V2 tile-cache connector: the scan manifest against the
   * fixture's arithmetic present set, row-directory packing into input
@@ -144,5 +144,45 @@ class TileCacheSourceSpec extends SparkSuite {
       .collect()
     assert(rows.length == 1)
     assert(rows(0).getInt(0) == 5 && rows(0).getInt(1) == -2 && rows(0).getInt(2) == -3)
+  }
+
+  test("a grid join lists only the grid's level dirs, by the pushed ranges") {
+    import graft.plans.TileGridJoinRule
+    import graft.tile.{Tile, TileConfig}
+    val ext = graft.ExtSession.spark
+    // levels 3-9 of the default extent (pad 1), each with two row dirs
+    // beyond either end of its range and a col beyond either end per row
+    val cfg = TileConfig(startLevel = 3, endLevel = 9, padX = 1, padY = 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft_tc_ranges").toFile
+    for (g <- Tile.ranges(cfg); r <- g.startRow - 2 to g.endRow + 2; c <- Seq(g.startCol - 1, g.startCol, g.endCol + 1)) {
+      val f = new java.io.File(dir, f"L${g.level}%02d/R$r%08x/C$c%08x.jpg")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, s"${g.level}-$r-$c".getBytes("UTF-8"))
+    }
+    val grid = cfg.copy(startLevel = 5, endLevel = 6)
+    def joined() =
+      ext.read.format("tilecache").load(dir.getAbsolutePath).join(Tile.tileGrid(ext, grid), Seq("level", "row", "col"))
+    val df = joined()
+    val scan = df.queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b.scan }.get
+    val planned = scan.toBatch.planInputPartitions().toSeq
+      .flatMap(_.asInstanceOf[TileCachePartition].rowDirs)
+      .map(d => (d.level, d.row))
+    val want = for (g <- Tile.ranges(grid); r <- g.startRow - 2 to g.endRow + 2) yield (g.level, r)
+    assert(planned.sorted == want.sorted)
+    // a range tree without a level term is not pushed
+    val rowOnly = Or(And(EqualTo("row", 1), EqualTo("col", 2)), EqualTo("row", 3))
+    val sb = new TileCacheScanBuilder(dir.getAbsolutePath)
+    sb.pushFilters(Array(rowOnly))
+    assert(sb.pushedFilters().isEmpty)
+    // and the rows are the join's rows
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("level", "row", "col", "length").collect().map(_.toString).toSeq.sorted
+    val off = {
+      val key = "spark.sql.optimizer.excludedRules"
+      ext.conf.set(key, TileGridJoinRule.ruleName)
+      try rows(joined())
+      finally ext.conf.unset(key)
+    }
+    assert(off.nonEmpty && rows(df) == off)
   }
 }

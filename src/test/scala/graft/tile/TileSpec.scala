@@ -70,4 +70,40 @@ class TileSpec extends SparkSuite {
   test("grid generation is distributed (no single-partition explode)") {
     assert(Tile.tileGrid(spark, cfg).rdd.getNumPartitions > 1)
   }
+
+  /** The Column forms of the range math, evaluated by Spark for levels 0-30. */
+  private def sparkRanges(c: TileConfig): Seq[LevelRange] = {
+    val ts = Tile.tileSize(c, col("level"))
+    spark
+      .range(0, 31)
+      .select(col("id").cast("int").as("level"))
+      .select(col("level"), Tile.startRow(c, ts), Tile.endRow(c, ts), Tile.startCol(c, ts), Tile.endCol(c, ts))
+      .orderBy("level")
+      .collect()
+      .map(r => LevelRange(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
+      .toSeq
+  }
+
+  test("driver-side ranges equal Spark's range math at levels 0-30") {
+    val south = cfg.copy(extentMinY = -6384021, extentMaxY = -3604577, padY = 0)
+    val negativePad = cfg.copy(padX = -3, padY = -2)
+    for (c <- Seq(cfg, south, negativePad))
+      assert(Tile.ranges(c.copy(startLevel = 0, endLevel = 30)) == sparkRanges(c), c)
+    // a negative pad can invert a level's range: it holds no cells, as the
+    // reference's `<=` loops enumerate none
+    val inverted = Tile.ranges(negativePad.copy(startLevel = 5, endLevel = 5)).head
+    assert(inverted.startCol > inverted.endCol && inverted.cells == 0)
+    assert(Tile.tileGrid(spark, negativePad.copy(startLevel = 5, endLevel = 5)).count() == 0)
+  }
+
+  test("a bound outside Int fails naming its level, not as a wrong grid") {
+    val e = intercept[ArithmeticException](Tile.tileGrid(spark, cfg.copy(endLevel = 33)))
+    assert(e.getMessage.contains("level 33"), e.getMessage)
+  }
+
+  test("grid slices differ by at most one cell") {
+    val sizes = Tile.tileGrid(spark, cfg).rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length > 1 && sizes.sum == 37819)
+    assert(sizes.max - sizes.min <= 1, sizes.toSeq)
+  }
 }
