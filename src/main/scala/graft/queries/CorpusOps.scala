@@ -1689,8 +1689,7 @@ object CorpusOps {
       cols: Seq[org.apache.spark.sql.Column]): DataFrame =
     t.select(
         pmod(key, lit(32)).as("bucket"),
-        (conv(substring(md5(concat_ws("|", cols: _*).cast("binary")), 1, 15), 16, 10)
-          .cast("long") % 1000000007L).as("dig"))
+        (Tables.hash60(concat_ws("|", cols: _*)) % 1000000007L).as("dig"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_rows"), sum(col("dig")).as("checksum"))
       .orderBy("bucket")

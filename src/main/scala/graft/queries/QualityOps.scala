@@ -378,8 +378,7 @@ object QualityOps {
       .join(broadcast(boost), "lang")
       .withColumn(
         "u_ppm",
-        conv(substring(md5(col("text").cast("binary")), 1, 15), 16, 10)
-          .cast("long") % 1000000L)
+        Tables.hash60(col("text")) % 1000000L)
       .withColumn(
         "copies",
         expr("boost_ppm div 1000000") +
@@ -445,7 +444,7 @@ object QualityOps {
       .where(col("tok") =!= "")
       .withColumn(
         "bucket",
-        conv(substring(md5(col("tok").cast("binary")), 1, 15), 16, 10).cast("long") % B)
+        Tables.hash60(col("tok")) % B)
     // ONE model pass (r16, guide §2.4): raw counts, target counts and both
     // totals fold out of a single ≤B-row bucket aggregation (c_t as a
     // conditional count ≡ the old left-join + zero-fill; the totals are

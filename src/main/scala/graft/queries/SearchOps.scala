@@ -809,9 +809,7 @@ object SearchOps {
         concat(cur.cast("string"), lit(s":$i")))
         .otherwise(concat(cur.cast("string"), lit(s":$i:"), col("walk").cast("string")))
     def hashPick(cur: Column, i: Int): Column =
-      pmod(
-        conv(substring(md5(salt(cur, i).cast("binary")), 1, 15), 16, 10).cast("long"),
-        col("deg"))
+      pmod(Tables.hash60(salt(cur, i)), col("deg"))
     var walk = adj
       .select(col("a").as("start"))
       .distinct()

@@ -206,17 +206,11 @@ object StreamingQueries {
 
   /** Batch twin of the stateful streaming anomaly detector (see
     * [[graft.streaming.Streams.anomalyStateful]]): the same running
-    * (n, Σv, Σv²) state over the identical (ts, event_id) order, since
-    * r12 computed by [[graft.streaming.Streams.anomalyScan]] — the
-    * two-phase SHARDED prefix scan (range-sliced timeline, per-slice
-    * totals, exclusive offsets, slice replay), so parallelism is the
-    * partition count instead of the event-type cardinality (the
-    * stateful fold collapses to \|types\| tasks — the worst organic
-    * scale-probe ratio through r11). StreamingSpec pins scan ≡ stateful
-    * fold row-for-row; the oracle replays the state as exact-integer
-    * window sums — `ROWS … AND 1 PRECEDING` IS the history-to-date the
-    * online detector holds when each event arrives, and the hash match
-    * proves the offset algebra.
+    * (n, Σv, Σv²) state over the identical (ts, event_id) order, computed
+    * by the prefix scan [[graft.streaming.Streams.anomalyScan]]. The
+    * oracle replays the state as exact-integer window sums — `ROWS … AND
+    * 1 PRECEDING` IS the history-to-date the online detector holds when
+    * each event arrives.
     */
   def anomaly(spark: SparkSession, sfDir: String): DataFrame =
     Streams

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Materialize
+import graft.operators.PrefixScan
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -880,49 +880,18 @@ object Streams {
         GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Sharded anomaly scan (r12 — the implementation of the
-    * [[anomalyStateful]] scaladoc's "(event_type, shard)" scale note):
-    * the SAME per-event running z-score, computed as a two-phase
-    * distributed prefix scan instead of one sequential pass per event
-    * type, so parallelism is the partition count, not the event-type
-    * cardinality (the stateful form collapses to \|types\| tasks — the
-    * consistently worst organic scale-probe ratio).
+  /** The running z-score of [[anomalyStateful]] as an exact prefix scan
+    * ([[graft.operators.PrefixScan]]) over (event_type; ts, event_id), so
+    * parallelism is the partition count, not the event-type cardinality.
+    * Each event's prior state is `carry(type)` plus the scan's exclusive
+    * prefix (rank − 1, Σvfp, Σvfp²), and it is scored by the stateful
+    * fold's own [[StateMath.anomalyZ]]. StreamingSpec pins scan ≡ fold
+    * row for row.
     *
-    * Identical output by construction, not by luck: the running state
-    * (n, Σv, Σv²) is ADDITIVE over (ts, event_id)-contiguous slices, so
-    *   1. range-partition by the full order key (event_type, ts,
-    *      event_id) and sort within partitions — each partition is a
-    *      contiguous slice of each type's timeline (the slicing of
-    *      [[graft.operators.PrefixScan]], kept separate because this
-    *      fold carries typed (n, Σv, Σv²) state across micro-batches,
-    *      not LONG column sums); one eager pin materializes
-    *      the sorted slices for both passes;
-    *   2. pass A: per (partition, type) state TOTALS — ≤ parts × types
-    *      tiny rows to the driver;
-    *   3. exclusive prefix offsets per (partition, type) = the carry
-    *      (prior micro-batches' final state) + totals of earlier
-    *      partitions — exact LONG adds, associative, order-pinned;
-    *   4. pass B: each partition replays its slice from its offset
-    *      state — bit-identical arithmetic to the stateful fold
-    *      (same HALF_UP quantization, same checked Σ adds, same
-    *      IEEE mean/variance/z steps, scale-6 round).
-    * Equality with [[anomalyStateful]] on the fixture and carry
-    * composition across chronological chunks are pinned in
-    * StreamingSpec; the registry entry `s_stream_anomaly` runs this
-    * form (same DuckDB window-replay oracle — the hash match proves the
-    * offset algebra). The streaming deployment shape is foreachBatch:
-    * scan each micro-batch with the previous batch's `carry`, keep the
-    * returned carry (≤ \|types\| × 3 longs) for the next — the same
-    * chronological-arrival contract the stateful form documents.
-    *
-    * Returns the scored rows and the post-scan per-type state (the
-    * carry for the next chunk).
-    *
-    * Decision boundary: the scan is for FEW keys × MANY events (pass A
-    * collects ≤ partitions × types totals to the driver — negligible at
-    * 32 × 5, a hotspot at ~10k partitions × a high-cardinality key).
-    * Once the key column itself provides parallelism (per-user state:
-    * [[ewmaStateful]]), the keyed stateful fold is the right tool.
+    * Deployed through foreachBatch: scan each micro-batch with the
+    * previous batch's `carry` and keep the returned carry (the input
+    * carry plus this batch's per-type totals) for the next, under the
+    * same chronological-arrival contract as the stateful form.
     */
   def anomalyScan(
       events: DataFrame,
@@ -930,59 +899,31 @@ object Streams {
     val spark = events.sparkSession
     import spark.implicits._
     val zero = AnomalyState(0L, 0L, 0L)
-    // contiguous (type, time) slices, materialized ONCE for both passes
-    // (the pin also fixes the partition indices the offset map is
-    // keyed by — re-deriving the plan could re-sample range boundaries)
-    val sliced = events
+    val fp = events
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .repartitionByRange(col("event_type"), col("ts"), col("event_id"))
-      .sortWithinPartitions("event_type", "ts", "event_id")
       .as[(Long, java.sql.Timestamp, String, Double)]
-      .transform(Materialize.eager)
-    // pass A: per-(partition, type) totals — tiny (≤ parts × types)
-    val totals: Array[(Int, String, AnomalyState)] = sliced.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val acc = scala.collection.mutable.LinkedHashMap.empty[String, AnomalyState]
-        it.foreach { case (_, _, typ, v) =>
-          acc.update(typ, anomalyStep(acc.getOrElse(typ, zero), round0(v * 1e3)))
-        }
-        acc.iterator.map { case (t, s) => (pid, t, s) }
+      .map { case (eid, ts, typ, v) =>
+        val vfp = round0(v * 1e3)
+        (eid, ts, typ, vfp, Math.multiplyExact(vfp, vfp))
       }
+      .toDF("event_id", "ts", "event_type", "vfp", "vfp2")
+    val scanned = PrefixScan(fp, Seq("event_type"), Seq(col("ts"), col("event_id")), Seq("vfp", "vfp2"))
+    val totals = scanned
+      .where(col("rank") === 1L)
+      .select("event_type", "n", "total_vfp", "total_vfp2")
+      .as[(String, Long, Long, Long)]
       .collect()
-    // exclusive prefix offsets (carry + earlier partitions), and the
-    // next chunk's carry (carry + ALL partitions) per type
-    def merge(a: AnomalyState, b: AnomalyState): AnomalyState =
-      AnomalyState(a.n + b.n, Math.addExact(a.s, b.s), Math.addExact(a.ss, b.ss))
-    val offsets = scala.collection.mutable.HashMap.empty[(Int, String), AnomalyState]
-    val nextCarry = scala.collection.mutable.HashMap.empty[String, AnomalyState]
-    carry.foreach { case (t, s) => nextCarry.update(t, s) }
-    totals.sortBy(_._1).foreach { case (pid, t, s) =>
-      val before = nextCarry.getOrElse(t, zero)
-      offsets.update((pid, t), before)
-      nextCarry.update(t, merge(before, s))
+    val nextCarry = carry ++ totals.map { case (t, n, s, ss) =>
+      t -> anomalyAdd(carry.getOrElse(t, zero), AnomalyState(n, s, ss))
     }
-    val bOff = spark.sparkContext.broadcast(offsets.toMap)
-    // pass B: replay each slice from its offset state — the exact
-    // stateful-fold arithmetic, per partition instead of per type
-    val scored = sliced
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var first = true // a null first type must still load its offset
-        var curType: String = null
-        var st: AnomalyState = zero
-        it.flatMap { case (eid, _, typ, v) =>
-          if (first || typ != curType) {
-            first = false
-            curType = typ
-            st = bOff.value.getOrElse((pid, typ), zero)
-          }
-          val vfp = round0(v * 1e3)
-          val out = anomalyZ(st, vfp).map(z => AnomalyRow(eid, typ, st.n, z))
-          st = anomalyStep(st, vfp)
-          out
-        }
+    val scored = scanned
+      .select("event_id", "event_type", "vfp", "vfp2", "rank", "cum_vfp", "cum_vfp2")
+      .as[(Long, String, Long, Long, Long, Long, Long)]
+      .flatMap { case (eid, typ, vfp, vfp2, rank, cum, cum2) =>
+        val s = anomalyAdd(carry.getOrElse(typ, zero), AnomalyState(rank - 1L, cum - vfp, cum2 - vfp2))
+        anomalyZ(s, vfp).map(z => AnomalyRow(eid, typ, s.n, z))
       }
-    (scored, nextCarry.toMap)
+    (scored, nextCarry)
   }
 
   /** Per-user session windows, 30-minute gap. Session end = last event +
@@ -1035,6 +976,10 @@ private[streaming] object StateMath {
       s.n + 1L,
       Math.addExact(s.s, vfp),
       Math.addExact(s.ss, Math.multiplyExact(vfp, vfp)))
+
+  /** Two anomaly states of one key summed, with checked adds. */
+  def anomalyAdd(a: AnomalyState, b: AnomalyState): AnomalyState =
+    AnomalyState(Math.addExact(a.n, b.n), Math.addExact(a.s, b.s), Math.addExact(a.ss, b.ss))
 
   /** The z-score of `vfp` against the prior state `s`, rounded to 1e-6,
     * when it is a verdict: at least 30 prior values, a positive variance

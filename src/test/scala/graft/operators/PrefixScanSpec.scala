@@ -1,12 +1,12 @@
 package graft.operators
 
 import graft.SparkSuite
-import graft.queries.{CorpusOps, MiningOps, QualityOps}
+import graft.queries.{CorpusOps, MiningOps, QualityOps, StreamingQueries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** [[PrefixScan]] against the windows it replaces, and its four registry
+/** [[PrefixScan]] against the windows it replaces, and its five registry
   * callers against the configs that could make two reads of one range
   * exchange disagree.
   */
@@ -51,7 +51,7 @@ class PrefixScanSpec extends SparkSuite {
     assert(sorted(global) == sorted(globalWant))
   }
 
-  test("the four callers return the same rows under reuse, AQE, partition and broadcast configs") {
+  test("the five callers return the same rows under reuse, AQE, partition and broadcast configs") {
     val entries: Seq[(String, String, () => DataFrame)] = Seq(
       ("q_orders_pareto", "rangepartitioning(c_mktsegment ASC NULLS FIRST, cents DESC",
         () => MiningOps.qOrdersPareto(spark, sf001)),
@@ -60,7 +60,9 @@ class PrefixScanSpec extends SparkSuite {
       ("q_stats_kruskal", "rangepartitioning(et ASC NULLS FIRST, v ASC",
         () => QualityOps.qStatsKruskal(spark, sf001)),
       ("q_text_ppl_buckets", "rangepartitioning(nll ASC NULLS FIRST, doc_id ASC",
-        () => CorpusOps.qTextPplBuckets(spark, sf001)))
+        () => CorpusOps.qTextPplBuckets(spark, sf001)),
+      ("s_stream_anomaly", "rangepartitioning(event_type ASC NULLS FIRST, ts ASC",
+        () => StreamingQueries.anomaly(spark, sf001)))
     val configs: Seq[Seq[(String, String)]] = Seq(
       Seq("spark.sql.exchange.reuse" -> "false", "spark.sql.adaptive.enabled" -> "false"),
       Seq("spark.sql.shuffle.partitions" -> "1"),

@@ -354,17 +354,26 @@ class StreamingSpec extends SparkSuite {
     assert(scan.nonEmpty && scan.toSeq == fold.toSeq)
   }
 
-  test("anomaly scan's pass B adds no shuffle: one range exchange total, inside the checkpoint (r12)") {
-    // the scan's only exchange is the range partition materialized by the
-    // localCheckpoint; the scoring pass must be a pure per-partition map
-    // over the checkpointed slices (LogicalRDD -> mapPartitions, no
-    // Exchange) — a shuffle here would break the slice-offset alignment
-    // AND the scale claim
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val (scored, _) = Streams.anomalyScan(graft.Tables.events(spark, sf001))
-    val exchanges =
-      scored.queryExecution.executedPlan.collect { case e: ShuffleExchangeLike => e }
-    assert(exchanges.isEmpty, scored.queryExecution.executedPlan.toString)
+  test("anomaly scan's scoring adds no shuffle: every exchange outside the pinned slices feeds the offsets broadcast") {
+    // the range exchange sits inside the pinned slices (an RDD scan) and
+    // the offsets' exchanges inside the broadcast; scoring must be a
+    // per-row map over the slices joined to the broadcast — a shuffle
+    // there would break the scale claim. AQE off: with it on, the plan
+    // is one AdaptiveSparkPlanExec leaf and a collect would find nothing
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    def outsideBroadcast(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: BroadcastExchangeLike => Nil
+      case _ => p +: p.children.flatMap(outsideBroadcast)
+    }
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val plan = Streams.anomalyScan(graft.Tables.events(spark, sf001))._1.queryExecution.executedPlan
+      assert(plan.collect { case b: BroadcastExchangeLike => b }.nonEmpty, plan.toString)
+      assert(!outsideBroadcast(plan).exists(_.isInstanceOf[ShuffleExchangeLike]), plan.toString)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("anomaly scan deployed via foreachBatch: streamed micro-batches equal the whole-corpus scan (r12)") {

@@ -13,6 +13,9 @@ MAIN="$1"; shift
 CP=$(mktemp -d /tmp/graftruncp.XXXXXX)
 trap 'rm -rf "$CP"' EXIT
 cp -r target/scala-2.13/classes/. "$CP"
+# `sbt compile` does not copy resources into the classes dir, and without
+# META-INF/services the `tilecache` data source does not resolve
+cp -r src/main/resources/. "$CP"
 ADDOPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
