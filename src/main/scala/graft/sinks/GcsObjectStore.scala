@@ -1,5 +1,7 @@
 package graft.sinks
 
+import org.apache.http.client.methods.HttpPost
+
 /** GCS-JSON-API-style [[ObjectStore]] over plain HTTP — the wire shape of
   * the reference's compiled product (/root/reference/src/Program.cs:109-118
   * uploads each tile via the JSON API media path with a canned public ACL
@@ -45,7 +47,7 @@ final class GcsObjectStore(endpoint: String, bucket: String, timeoutMs: Int = 30
       case Nil => acl
     }
 
-  private[graft] def urlFor(key: String, acl: String): java.net.URL = {
+  private[graft] def urlFor(key: String, acl: String): java.net.URI = {
     // RFC-3986 percent-encoding for the query VALUE (r15 ADVICE):
     // URLEncoder emits form encoding, where a space becomes '+'; a
     // server parsing the query per RFC 3986 (no form semantics) would
@@ -53,17 +55,14 @@ final class GcsObjectStore(endpoint: String, bucket: String, timeoutMs: Int = 30
     // under BOTH conventions, so the key round-trips either way; a
     // literal '+' in the key is already '%2B' after encode.
     val enc = java.net.URLEncoder.encode(key, "UTF-8").replace("+", "%20")
-    java.net.URI
-      .create(
-        s"${endpoint.stripSuffix("/")}/upload/storage/v1/b/$bucket/o" +
-          s"?uploadType=media&name=$enc&predefinedAcl=${gcsAcl(acl)}")
-      .toURL
+    java.net.URI.create(
+      s"${endpoint.stripSuffix("/")}/upload/storage/v1/b/$bucket/o" +
+        s"?uploadType=media&name=$enc&predefinedAcl=${gcsAcl(acl)}")
   }
 
   override def put(key: String, bytes: Array[Byte], contentType: String, acl: String): Unit =
     HttpSend.send(
-      urlFor(key, acl),
-      "POST",
+      new HttpPost(urlFor(key, acl)),
       Seq("Content-Type" -> contentType),
       bytes,
       timeoutMs,

@@ -907,16 +907,22 @@ object Streams {
         (eid, ts, typ, vfp, Math.multiplyExact(vfp, vfp))
       }
       .toDF("event_id", "ts", "event_type", "vfp", "vfp2")
-    val scanned = PrefixScan(fp, Seq("event_type"), Seq(col("ts"), col("event_id")), Seq("vfp", "vfp2"))
-    val totals = scanned
-      .where(col("rank") === 1L)
-      .select("event_type", "n", "total_vfp", "total_vfp2")
-      .as[(String, Long, Long, Long)]
+    // the carry's per-type totals fold each partition's values with the
+    // stateful fold's own checked step: one job with no shuffle, so the
+    // scan's offsets run once, in the scored rows' action
+    val totals = fp
+      .select("event_type", "vfp")
+      .as[(String, Long)]
+      .mapPartitions { it =>
+        val part = scala.collection.mutable.HashMap.empty[String, AnomalyState]
+        it.foreach { case (t, vfp) => part(t) = anomalyStep(part.getOrElse(t, zero), vfp) }
+        part.iterator
+      }
       .collect()
-    val nextCarry = carry ++ totals.map { case (t, n, s, ss) =>
-      t -> anomalyAdd(carry.getOrElse(t, zero), AnomalyState(n, s, ss))
+    val nextCarry = totals.foldLeft(carry) { case (c, (t, s)) =>
+      c.updated(t, anomalyAdd(c.getOrElse(t, zero), s))
     }
-    val scored = scanned
+    val scored = PrefixScan(fp, Seq("event_type"), Seq(col("ts"), col("event_id")), Seq("vfp", "vfp2"))
       .select("event_id", "event_type", "vfp", "vfp2", "rank", "cum_vfp", "cum_vfp2")
       .as[(Long, String, Long, Long, Long, Long, Long)]
       .flatMap { case (eid, typ, vfp, vfp2, rank, cum, cum2) =>

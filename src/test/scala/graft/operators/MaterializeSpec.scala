@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Registry, SparkSuite}
+import graft.SourceGuard.calls
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.CheckpointDirs
@@ -18,29 +19,6 @@ class MaterializeSpec extends SparkSuite {
     * that bypasses the seam's size estimate and drops the partitioning.
     */
   private val rddRoundTrip = """createDataFrame\s*\(\s*[\w.]+\.rdd\b""".r
-
-  /** Matches of `re` per source file under src/main, comment lines and
-    * trailing `// ...` comments ignored.
-    */
-  private def calls(re: scala.util.matching.Regex): Map[String, Int] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    java.nio.file.Files
-      .walk(root)
-      .iterator()
-      .asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map { p =>
-        val code = java.nio.file.Files
-          .readAllLines(p)
-          .asScala
-          .map(_.trim)
-          .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
-          .map(_.replaceAll("""\s//\s.*$""", ""))
-        root.relativize(p).toString -> code.map(re.findAllIn(_).size).sum
-      }
-      .filter(_._2 > 0)
-      .toMap
-  }
 
   /** The one `LogicalRDD` a pinned frame's plan holds. */
   private def pinnedNode(pinned: DataFrame): LogicalRDD = {

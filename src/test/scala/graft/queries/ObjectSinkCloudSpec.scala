@@ -10,12 +10,14 @@ import org.apache.spark.sql.functions._
   * ACL header, 503 failure injection — so the sink's content-type /
   * ACL / retry surface is exercised against a REAL object-store
   * protocol in a credential-less environment, not only against
-  * filesystem fakes.
+  * filesystem fakes. `latencyMs` delays every answer; `ports` holds the
+  * client port of every request, one per connection the clients opened.
   */
-final class S3Stub {
+final class S3Stub(latencyMs: Long = 0L) {
   final case class Obj(bytes: Array[Byte], contentType: String, acl: String)
   val objects = new java.util.concurrent.ConcurrentHashMap[String, Obj]
   val puts = new java.util.concurrent.atomic.AtomicInteger(0)
+  val ports: java.util.Set[Integer] = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
   /** The next N PUTs answer 503 (throttle simulation). */
   val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -26,11 +28,13 @@ final class S3Stub {
     new com.sun.net.httpserver.HttpHandler {
       override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit =
         try {
+          ports.add(ex.getRemoteAddress.getPort)
           val key = ex.getRequestURI.getPath.stripPrefix("/")
           ex.getRequestMethod match {
             case "PUT" =>
               val body = ex.getRequestBody.readAllBytes()
               puts.incrementAndGet()
+              if (latencyMs > 0L) Thread.sleep(latencyMs)
               if (failNext.getAndUpdate(n => math.max(0, n - 1)) > 0) {
                 ex.sendResponseHeaders(503, -1)
               } else {
@@ -148,6 +152,7 @@ final class GcsStub(bucket: String) {
   * same code path; only the FileSystem implementation under it changes).
   */
 class ObjectSinkCloudSpec extends SparkSuite {
+  import scala.jdk.CollectionConverters._
   import spark.implicits._
 
   private def payloads = Seq(
@@ -240,6 +245,56 @@ class ObjectSinkCloudSpec extends SparkSuite {
       assert(!stub.objects.containsKey("it/5/hash"))
       assert(!stub.objects.containsKey("it/5/query"))
     } finally stub.stop()
+  }
+
+  test("windowed writes reuse pooled connections, across store instances too") {
+    // each task keeps at most Window PUTs in flight, so the pool opens at
+    // most Window × min(tasks, slots) connections; the per-PUT JDK
+    // connections this replaced opened 133 here and 123 more on the second
+    // write. The 5 ms store keeps every window full, and 4 tasks keep the
+    // connections under the JDK server's 200 idle ones, past which it
+    // closes them.
+    val stub = new S3Stub(latencyMs = 5L)
+    try {
+      val tasks = math.min(4, spark.sparkContext.defaultParallelism)
+      val df = spark
+        .range(0, 500, 1, 4)
+        .select(concat(lit("reuse/"), col("id")).as("object_key"), lit("tile".getBytes("UTF-8")).as("content"))
+      val (ok, failed, _) =
+        ObjectSink.write(df, new HttpObjectStore(stub.endpoint), "object_key", "content", "image/jpg")
+      assert(ok == 500 && failed == 0)
+      val first = stub.ports.asScala.toSet
+      assert(first.size <= ObjectSink.Window * tasks, s"${first.size} connections for 500 PUTs")
+      // a new store instance sends through the same per-JVM pool
+      stub.ports.clear()
+      val (ok2, failed2, _) =
+        ObjectSink.write(df, new HttpObjectStore(stub.endpoint), "object_key", "content", "image/jpg")
+      assert(ok2 == 500 && failed2 == 0)
+      val opened = (stub.ports.asScala.toSet -- first).size
+      assert(opened <= 8, s"the second write opened $opened connections")
+    } finally stub.stop()
+  }
+
+  test("the JVM's proxy properties still route the stores' requests") {
+    // the proxy stub stores what it is sent: a proxied request line
+    // carries the absolute URI, whose path is the key
+    val target = new S3Stub
+    val proxy = new S3Stub
+    val props = Seq("http.proxyHost", "http.proxyPort", "http.nonProxyHosts")
+    val saved = props.map(p => p -> Option(System.getProperty(p)))
+    try {
+      System.setProperty("http.proxyHost", "127.0.0.1")
+      System.setProperty("http.proxyPort", java.net.URI.create(proxy.endpoint).getPort.toString)
+      // empty: no bypass; unset, the JDK bypasses loopback hosts
+      System.setProperty("http.nonProxyHosts", "")
+      new HttpObjectStore(target.endpoint).put("via/proxy", "x".getBytes("UTF-8"), "image/jpg", "public-read")
+    } finally {
+      saved.foreach { case (p, v) => v.fold(System.clearProperty(p))(System.setProperty(p, _)) }
+      target.stop()
+      proxy.stop()
+    }
+    assert(proxy.objects.containsKey("via/proxy"), "the PUT did not go through the proxy")
+    assert(target.puts.get == 0)
   }
 
   test("GCS-protocol media upload: byte identity, content-type, predefinedAcl, idempotent re-run") {
